@@ -215,7 +215,7 @@ object Dedup {
     * df-sized posting list on ONE reducer — a window cannot be AQE-
     * skew-split, an equi-join can (SkewSpec proves the splitting fires
     * on exactly this shape). Measured at sf0.1 the join form costs 13%
-    * (0.91 s vs 0.80 s best-of-3, graft.tools.D12Variant) — the price
+    * over the count-window form (0.91 s vs 0.80 s best-of-3) — the price
     * of removing an unbounded single-reducer stall at corpus scale.
     * Nothing here is proportional to df²: grams are counted, never
     * paired.

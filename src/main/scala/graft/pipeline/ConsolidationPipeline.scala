@@ -9,6 +9,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.domain.{InvoiceRecord, RecordAction}
 import graft.operators.{Merge, Reconcile, Validate}
@@ -292,16 +293,14 @@ object ConsolidationPipeline {
 
     // consolidated side: lenient re-parse (J5) — invalid legacy rows keep
     // living in the store but leave the probe set
-    val store = readConsolidated(spark, cfg.consolidatedPath)
+    val store = readStore(spark, cfg.consolidatedPath)
     val existing = Merge.lenientExisting(store)
 
     // both merge sides must share the store's column set; extractor output
     // lacks passthrough fields (fecha_recepcion_digital, …) → null-fill,
     // keeping row_index for first-wins dedup + audit attribution
-    val present = valid.columns.toSet
-    val aligned = valid.select(store.schema.fields.map(f =>
-      if (present.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)).toSeq :+ col("row_index"): _*)
+    val aligned =
+      alignToStore(valid, store.schema.add(valid.schema("row_index")))
 
     val m = cfg.mergeMode match {
       case "upsert" => Merge.fullUpsert(existing, aligned, InvoiceRecord.pk,
@@ -363,7 +362,7 @@ object ConsolidationPipeline {
           partitioned(mResult.write.mode(SaveMode.Overwrite))
             .parquet(cfg.consolidatedPath)
         case _ =>
-          partitioned(alignToStore(spark, inserted, cfg.consolidatedPath)
+          partitioned(alignToStore(inserted, store.schema)
             .write.mode(SaveMode.Append))
             .parquet(cfg.consolidatedPath)
       }
@@ -397,7 +396,11 @@ object ConsolidationPipeline {
   /** Error-detail cap per file (reference dtos.py:74-88 caps at 20). */
   val errorCap = 20
 
-  private def readConsolidated(spark: SparkSession, path: String): DataFrame =
+  /** The consolidated store — batch and streaming paths read it the same
+    * way: the parquet table, or an empty frame of the record schema
+    * before the first write.
+    */
+  private[graft] def readStore(spark: SparkSession, path: String): DataFrame =
     if (Files.exists(Paths.get(path)))
       spark.read.parquet(path)
     else
@@ -405,16 +408,16 @@ object ConsolidationPipeline {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         InvoiceRecord.schema)
 
-  /** Align the inserted slice to the store's column set (missing cols →
-    * null) so unions across runs stay schema-stable.
+  /** Align `df` to the store's column set so unions across runs stay
+    * schema-stable: present columns cast to the store field's type, and
+    * missing ones filled with a null of that type — a string-typed null
+    * column appended into a decimal/timestamp store would make every
+    * later read fail on schema merge.
     */
-  private def alignToStore(spark: SparkSession, inserted: DataFrame,
-      path: String): DataFrame = {
-    val storeSchema =
-      if (Files.exists(Paths.get(path))) spark.read.parquet(path).schema
-      else InvoiceRecord.schema
-    val present = inserted.columns.toSet
-    inserted.select(storeSchema.fields.map(f =>
+  private[graft] def alignToStore(df: DataFrame, store: StructType)
+      : DataFrame = {
+    val present = df.columns.toSet
+    df.select(store.fields.map(f =>
       if (present.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)).toSeq: _*)
   }

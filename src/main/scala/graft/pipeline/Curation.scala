@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.dedup.Dedup
 import graft.text.TextAnalysis
@@ -66,12 +65,13 @@ object Curation {
       .orderBy(col("stage"))
   }
 
-  /** Streaming funnel host: each micro-batch's [[signals]] flow through
+  /** Streaming funnel sink: each micro-batch's [[signals]] flow through
     * the store-backed dedup ([[graft.streaming.StreamingDedup
     * .storeDedupSink]] — first occurrence per content_hash survives and
     * the store IS the state, so restarts replay idempotently), plus a
-    * one-row-per-batch ingest total. `AvailableNow` + checkpoint; call
-    * [[streamedFunnelCounts]] afterwards for the four-stage report.
+    * one-row-per-batch ingest total. Host it with
+    * [[graft.streaming.StreamHost.run]]; call [[streamedFunnelCounts]]
+    * afterwards for the four-stage report.
     *
     * Equivalence note: across batches the FIRST arrival wins, where the
     * batch funnel elects min-id — but a keeper's stage predicates
@@ -79,31 +79,19 @@ object Curation {
     * text ⇒ same n_tok/rep_ppm), so the stage counts agree regardless
     * of which duplicate survived. CurationFunnelStreamSpec pins this.
     */
-  def runFunnelStream(spark: SparkSession, inputGlob: String,
-      schema: org.apache.spark.sql.types.StructType, idCol: String,
-      textCol: String, workDir: String,
-      maxFilesPerTrigger: Int = 1): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(inputGlob)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sig = signals(batch, idCol, textCol)
-        graft.streaming.StreamingDedup.storeDedupSink(
-          s"$workDir/kept", "content_hash", Seq(idCol))(sig, batchId)
-        // ingest total: one tiny row per batch. A crash between this
-        // append and the checkpoint commit replays the batch id — the
-        // reader dedups on batch_id (max of identical counts), so the
-        // counter is idempotent like the store probe.
-        val sp = batch.sparkSession
-        import sp.implicits._
-        Seq((batchId, batch.count())).toDF("batch_id", "n")
-          .coalesce(1).write.mode("append").parquet(s"$workDir/totals")
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .start()
-    q.awaitTermination()
+  def funnelSink(idCol: String, textCol: String, workDir: String)(
+      batch: DataFrame, batchId: Long): Unit = {
+    val sig = signals(batch, idCol, textCol)
+    graft.streaming.StreamingDedup.storeDedupSink(
+      s"$workDir/kept", "content_hash", Seq(idCol))(sig, batchId)
+    // ingest total: one tiny row per batch. A crash between this
+    // append and the checkpoint commit replays the batch id — the
+    // reader dedups on batch_id (max of identical counts), so the
+    // counter is idempotent like the store probe.
+    val sp = batch.sparkSession
+    import sp.implicits._
+    Seq((batchId, batch.count())).toDF("batch_id", "n")
+      .coalesce(1).write.mode("append").parquet(s"$workDir/totals")
   }
 
   /** The streamed funnel's cumulative counts, shaped exactly like the

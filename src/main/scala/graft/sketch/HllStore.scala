@@ -30,6 +30,16 @@ import org.apache.spark.sql.functions._
   * merged grid via the crash-safe aside-swap when the log's read cost
   * exceeds its write convenience.
   *
+  * Streaming: [[append]] is the whole foreachBatch sink of a file-landing
+  * stream into the store ([[graft.streaming.StreamHost.run]]), and it
+  * needs NEITHER the `batch_id` dynamic-overwrite guard nor an
+  * idempotence ledger: a micro-batch redelivered after a restart between
+  * the append and the checkpoint commit changes no estimate — the
+  * algebra IS the guard. HllStoreStreamSpec gates streamed ≡ batch-built
+  * ≡ one-shot and replays the whole stream against the same store to pin
+  * it. Per micro-batch the sink ships ≤ |groups|·256 register cells into
+  * one parquet append, independent of batch row count.
+  *
   * Concurrency: [[append]] is safe against other appends AND against a
   * running [[compact]] — compact snapshots the log's file list up
   * front and, after the swap, RESCUES any part file that landed later

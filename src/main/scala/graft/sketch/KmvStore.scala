@@ -32,6 +32,16 @@ import org.apache.spark.sql.functions._
   * batch; [[compact]] folds it back to one minima set per group via
   * the shared crash-safe aside-swap ([[StoreDirOps]]).
   *
+  * Streaming: like the register store, [[append]] is the whole
+  * foreachBatch sink of a file-landing stream into the store
+  * ([[graft.streaming.StreamHost.run]]) with NO replay guard — the
+  * algebra is the guard, so a micro-batch redelivered after a restart
+  * between the append and the checkpoint commit changes no estimate.
+  * KmvStoreStreamSpec gates streamed ≡ batch-built ≡ one-shot and
+  * replays the whole stream against the same store to pin it. The sink
+  * ships ≤ |groups|·k longs per micro-batch into one parquet append,
+  * independent of batch row count.
+  *
   * Scale posture: writes are one distinct + one bounded window per
   * batch (both shuffles on (group, hash) keys, ≤ k rows per group
   * survive); reads are the same over the log; estimates are the exact

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Watermarked STREAM–STREAM join — the one Structured Streaming
-  * primitive the foreachBatch hosts deliberately avoid, demonstrated
+  * primitive the [[StreamHost]] sinks deliberately avoid, demonstrated
   * on view→click attribution: every click joins every view by the same
   * user within an attribution window (`click_ts ∈ [view_ts, view_ts +
   * W]`). Two live streams, symmetric state, no batch-side store:
@@ -57,19 +57,18 @@ object AttributionStream {
       windowMinutes)
 
   /** Host: run the attribution join over a file-landing event stream
-    * to completion (AvailableNow), pairs appended to
-    * `workDir/pairs`. Returns the terminated query so callers can
+    * ([[StreamHost.files]]) to completion (AvailableNow), pairs appended
+    * to `workDir/pairs` — a file sink, not a foreachBatch sink, so it
+    * keeps its own writer. Returns the terminated query so callers can
     * inspect state-operator metrics (peak state rows = the eviction
     * proof). `watermarkDelay` ≥ the window keeps time-ordered input
     * exact; tighter trades late data for state.
     */
   def runAttributionStream(spark: org.apache.spark.sql.SparkSession,
       inputGlob: String, schema: org.apache.spark.sql.types.StructType,
-      workDir: String, windowMinutes: Int, watermarkDelay: String,
-      maxFilesPerTrigger: Int = 1): StreamingQuery = {
-    val ev = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(inputGlob)
+      workDir: String, windowMinutes: Int, watermarkDelay: String)
+      : StreamingQuery = {
+    val ev = StreamHost.files(spark, inputGlob, schema)
     val views = ev.filter(col("event_type") === "view")
       .withWatermark("ts", watermarkDelay)
     val clicks = ev.filter(col("event_type") === "click")

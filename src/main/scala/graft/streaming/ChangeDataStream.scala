@@ -13,10 +13,10 @@ import org.apache.spark.sql.functions._
   * rebuild) subscribe to the change log instead of re-reading the corpus.
   *
   * Idempotence under micro-batch replay (foreachBatch redelivers a
-  * batchId after a crash): both writes are `batch_id=`-partitioned
-  * DYNAMIC overwrites, so a replayed batch replaces its own partitions
-  * bit-for-bit instead of appending duplicates — the store and the log
-  * are exactly-once per batch id by construction.
+  * batchId after a crash): both writes go through
+  * [[StreamHost.overwriteBatch]], so a replayed batch replaces its own
+  * partitions bit-for-bit instead of appending duplicates — the store
+  * and the log are exactly-once per batch id by construction.
   *
   * Scale: the store is append-only versions (key, fp, batch_id); the
   * read side resolves "current fingerprint" with a max_by hash
@@ -58,13 +58,9 @@ object ChangeDataStream {
           .when(col("cur_fp") === col("fp"), lit("unchanged"))
           .otherwise(lit("changed")).as("change"))
       .localCheckpoint()
-    val dyn = Map("partitionOverwriteMode" -> "dynamic")
-    classified.select(col(keyCol), col("change"), lit(batchId).as("batch_id"))
-      .write.options(dyn).mode("overwrite").partitionBy("batch_id")
-      .parquet(changeLogPath)
-    classified.filter(col("change") =!= "unchanged")
-      .select(col(keyCol), col("fp"), lit(batchId).as("batch_id"))
-      .write.options(dyn).mode("overwrite").partitionBy("batch_id")
-      .parquet(storePath)
+    StreamHost.overwriteBatch(classified.select(col(keyCol), col("change")),
+      batchId, changeLogPath)
+    StreamHost.overwriteBatch(classified.filter(col("change") =!= "unchanged")
+      .select(col(keyCol), col("fp")), batchId, storePath)
   }
 }

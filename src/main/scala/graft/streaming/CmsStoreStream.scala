@@ -1,20 +1,19 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.DataFrame
 
 import graft.sketch.CmsStore
 
-/** Streaming host for the accreted [[graft.sketch.CmsStore]] (a18) —
-  * the [[HllStoreStream]]/[[KmvStoreStream]] pattern on the SUM
-  * algebra, which is where the taxonomy forks: cell-wise sum is not
-  * idempotent, so this host cannot lean on the merge alone the way
-  * the register and minima hosts do. It leans on the store's batch
-  * tag instead: each micro-batch appends its grid under
-  * `b<batchId>`, and because a redelivered micro-batch (restart
-  * between append and checkpoint commit — Spark replays the SAME
-  * epoch id from the SAME offsets) re-writes bit-identical tagged
-  * rows, the read-side distinct absorbs it. Exactly-once estimates
+/** Streaming sink for the accreted [[graft.sketch.CmsStore]] (a18) —
+  * the [[graft.sketch.HllStore]]/[[graft.sketch.KmvStore]] streaming
+  * pattern on the SUM algebra, which is where the taxonomy forks:
+  * cell-wise sum is not idempotent, so this sink cannot lean on the
+  * merge alone the way the register and minima stores do. It leans on
+  * the store's batch tag instead: each micro-batch appends its grid
+  * under `b<batchId>`, and because a redelivered micro-batch (restart
+  * between append and checkpoint commit — Spark replays the SAME epoch
+  * id from the SAME offsets) re-writes bit-identical tagged rows, the
+  * read-side distinct absorbs it. Exactly-once estimates
   * over an at-least-once sink, with the ledger living in the rows.
   *
   * The guard is scoped to redelivery under the store's OWN
@@ -31,28 +30,10 @@ import graft.sketch.CmsStore
 object CmsStoreStream {
 
   /** The foreachBatch sink: grid this batch with the store's own
-    * stored parameters and append it under the epoch's tag.
+    * stored parameters and append it under the epoch's tag. The store
+    * must EXIST (created by [[CmsStore.write]] — the bootstrap fixes
+    * the parameters).
     */
   def sink(storePath: String)(batch: DataFrame, batchId: Long): Unit =
     CmsStore.append(batch, s"b$batchId", storePath)
-
-  /** Host: fold a file-landing stream into an EXISTING store (created
-    * by [[CmsStore.write]] — the bootstrap fixes the parameters) to
-    * completion (AvailableNow).
-    */
-  def run(spark: SparkSession, inputGlob: String,
-      schema: org.apache.spark.sql.types.StructType, ckptDir: String,
-      storePath: String, maxFilesPerTrigger: Int = 1): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(inputGlob)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(storePath)(batch, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckptDir)
-      .start()
-    q.awaitTermination()
-  }
 }

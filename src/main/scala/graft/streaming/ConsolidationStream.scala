@@ -2,13 +2,13 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.domain.InvoiceRecord
 import graft.operators.{Merge, Reconcile, Validate}
+import graft.pipeline.ConsolidationPipeline
 
 /** Structured-Streaming host for the consolidation pipeline — the
   * incremental-micro-batch shape the reference's architecture implies
@@ -17,9 +17,9 @@ import graft.operators.{Merge, Reconcile, Validate}
   *
   * The stream consumes CANONICAL staged files (header-discovery formats go
   * through the batch path first); each micro-batch replays the batch
-  * pipeline inside `foreachBatch`: validate split (P6) → insert-only merge
-  * (J1) against the store → reconcile (A2) → append inserted slice +
-  * error-channel audit. `Trigger.AvailableNow` + checkpointing give
+  * pipeline as the [[StreamHost]] sink: validate split (P6) → insert-only
+  * merge (J1) against the store → reconcile (A2) → append inserted slice
+  * + error-channel audit. `Trigger.AvailableNow` + checkpointing give
   * file-level exactly-once across restarts — the streaming form of J4 —
   * with no tracker probe needed.
   */
@@ -41,69 +41,49 @@ object ConsolidationStream {
     * Returns the number of micro-batches executed.
     */
   def runAvailableNow(spark: SparkSession, cfg: Config): Long = {
-    var batches = 0L
     val reader = spark.readStream
       .schema(stagedSchema)
       .option("header", "true")
-    val source = cfg.archiveDir match {
-      case Some(arch) => reader
+    val source = cfg.archiveDir.fold(reader)(arch => reader
         .option("cleanSource", "archive")
-        .option("sourceArchiveDir", arch)
-        .csv(cfg.landingDir)
-      case None => reader.csv(cfg.landingDir)
-    }
-    val withLineage = source
+        .option("sourceArchiveDir", arch))
+      .csv(cfg.landingDir)
       .withColumn("source_file", input_file_name())
       .withColumn("processed_at", current_timestamp())
       .withColumn("status", lit("new"))
-
-    val query = withLineage.writeStream
-      .queryName("consolidation")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        batches += 1
-        processBatch(batch.sparkSession, cfg, batch, batchId)
-      }
-      .start()
-    query.awaitTermination()
-    batches
+    StreamHost.runNamed("consolidation", source, cfg.checkpointDir)(
+      validated(cfg) { (valid, _) =>
+        // the per-micro-batch pipeline — identical semantics to the batch
+        // path: insert-only merge (J1) against the store → reconcile (A2)
+        // → append the inserted slice aligned to the store's columns
+        val v = valid.localCheckpoint()
+        val store = ConsolidationPipeline.readStore(v.sparkSession,
+          cfg.consolidatedPath)
+        val m = Merge.insertOnly(Merge.lenientExisting(store), v,
+          InvoiceRecord.pk)
+        Reconcile.check(v, m.result, InvoiceRecord.pk, "total_amount")
+        ConsolidationPipeline.alignToStore(m.inserted, store.schema)
+          .write.mode(SaveMode.Append).parquet(cfg.consolidatedPath)
+      })
   }
 
-  /** The per-micro-batch pipeline — identical semantics to the batch path. */
-  private[streaming] def processBatch(spark: SparkSession, cfg: Config,
-      batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return
-    // ordinal for first-wins dedup/audit (not allowed on the stream itself)
-    val pinned = batch.withColumn("row_index", monotonically_increasing_id())
-      .localCheckpoint()
-    val split = Validate.split(pinned)
-    val valid = split.valid.localCheckpoint()
-
-    val store = readStore(spark, cfg.consolidatedPath)
-    val existing = Merge.lenientExisting(store)
-    val m = Merge.insertOnly(existing, valid, InvoiceRecord.pk)
-
-    Reconcile.check(valid, m.result, InvoiceRecord.pk, "total_amount")
-
-    val present = m.inserted.columns.toSet
-    // missing columns fill with a null of the STORE field's own type —
-    // a string-typed null column appended into a decimal/timestamp store
-    // would make every later read fail on schema merge
-    m.inserted.select(store.schema.fields.map(f =>
-        if (present.contains(f.name)) col(f.name)
-        else lit(null).cast(f.dataType).as(f.name)).toSeq: _*)
-      .write.mode(SaveMode.Append).parquet(cfg.consolidatedPath)
-
-    // error channel → audit dir, tagged with the batch id
-    split.errors.withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Append).parquet(cfg.errorDir)
-  }
-
-  private def readStore(spark: SparkSession, path: String): DataFrame =
-    if (Files.exists(Paths.get(path))) spark.read.parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], InvoiceRecord.schema)
+  /** The shape both hosts share around their store write: pin the
+    * micro-batch with a first-wins ordinal (not allowed on the stream
+    * itself), split it (P6), hand the valid side to `write`, then append
+    * the error channel to the audit dir tagged with the batch id. Errors
+    * are DATA on both hosts: silently dropping the invalid rows would make
+    * streamed and batch runs unreconcilable and lose the audit trail.
+    */
+  private def validated(cfg: Config)(write: (DataFrame, Long) => Unit)(
+      batch: DataFrame, batchId: Long): Unit =
+    if (!batch.isEmpty) {
+      val pinned = batch.withColumn("row_index", monotonically_increasing_id())
+        .localCheckpoint()
+      val split = Validate.split(pinned)
+      write(split.valid, batchId)
+      split.errors.withColumn("batch_id", lit(batchId))
+        .write.mode(SaveMode.Append).parquet(cfg.errorDir)
+    }
 
   /** SCD2 streaming host: each micro-batch applies the history-preserving
     * upsert ([[Merge.scd2Upsert]], `batchTs = batchId`) to the store —
@@ -117,39 +97,19 @@ object ConsolidationStream {
     */
   def runScd2AvailableNow(spark: SparkSession, cfg: Config,
       changeFields: Seq[String]): Long = {
-    var batches = 0L
     val source = spark.readStream
       .schema(stagedSchema)
       .option("header", "true")
       .csv(cfg.landingDir)
-    val query = source.writeStream
-      .queryName("scd2-consolidation")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          batches += 1
-          val s = batch.sparkSession
-          val pinned = batch
-            .withColumn("row_index", monotonically_increasing_id())
-            .localCheckpoint()
-          val split = Validate.split(pinned)
-          val valid = split.valid
-          val store = readScd2Store(s, cfg.consolidatedPath, valid.schema)
-          val m = Merge.scd2Upsert(store, valid, InvoiceRecord.pk,
-            changeFields, batchTs = batchId + 1)
-          val out = m.result.localCheckpoint() // store is overwritten next
-          out.write.mode(SaveMode.Overwrite).parquet(cfg.consolidatedPath)
-          // errors are DATA here too (same contract as processBatch):
-          // silently dropping the invalid rows would make SCD2 and batch
-          // runs unreconcilable and lose the audit trail
-          split.errors.withColumn("batch_id", lit(batchId))
-            .write.mode(SaveMode.Append).parquet(cfg.errorDir)
-        }
-      }
-      .start()
-    query.awaitTermination()
-    batches
+    StreamHost.runNamed("scd2-consolidation", source, cfg.checkpointDir)(
+      validated(cfg) { (valid, batchId) =>
+        val store = readScd2Store(valid.sparkSession, cfg.consolidatedPath,
+          valid.schema)
+        val m = Merge.scd2Upsert(store, valid, InvoiceRecord.pk,
+          changeFields, batchTs = batchId + 1)
+        val out = m.result.localCheckpoint() // store is overwritten next
+        out.write.mode(SaveMode.Overwrite).parquet(cfg.consolidatedPath)
+      })
   }
 
   private def readScd2Store(spark: SparkSession, path: String,

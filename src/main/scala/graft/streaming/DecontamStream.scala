@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.similarity.Similarity
 
@@ -25,9 +24,8 @@ import graft.similarity.Similarity
   * s21 scan over everything ingested (DecontamStreamSpec pins
   * streamed ≡ batch across split choices).
   *
-  * Replay idempotence: `batch_id=`-partitioned dynamic overwrites (the
-  * [[ChangeDataStream]] stance) — a redelivered batch replaces its own
-  * partition and nothing else.
+  * Replay idempotence: [[StreamHost.overwriteBatch]] — a redelivered
+  * batch replaces its own partition and nothing else.
   */
 object DecontamStream {
 
@@ -36,17 +34,9 @@ object DecontamStream {
     */
   def decontamSink(storePath: String, evalSide: DataFrame, idCol: String,
       vecCol: String, thresholdPpm: Long)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val pairs = Similarity.exactNearPairsAsym(evalSide, batch, idCol,
-        vecCol, thresholdPpm)
-      .withColumn("batch_id", lit(batchId))
-    // per-write option, NOT a session conf: `pairs` inherits the
-    // (outer) session of the broadcast eval side, so a conf set on the
-    // micro-batch clone would never reach this write — the overwrite
-    // would silently turn STATIC and each batch would wipe the ledger.
-    pairs.write.option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").partitionBy("batch_id").parquet(storePath)
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    StreamHost.overwriteBatch(Similarity.exactNearPairsAsym(evalSide, batch,
+      idCol, vecCol, thresholdPpm), batchId, storePath)
 
   /** All confirmed pairs accreted so far (deduplicated — a corpus row
     * redelivered in two distinct batches confirms twice).
@@ -63,25 +53,4 @@ object DecontamStream {
   def contaminatedIds(spark: SparkSession, storePath: String): DataFrame =
     contaminationLedger(spark, storePath)
       .select(col("corpus_id")).distinct()
-
-  /** Host: scan a file-landing stream against the eval set to
-    * completion (AvailableNow).
-    */
-  def runDecontamStream(spark: SparkSession, inputGlob: String,
-      schema: org.apache.spark.sql.types.StructType, workDir: String,
-      evalSide: DataFrame, idCol: String, vecCol: String,
-      thresholdPpm: Long, maxFilesPerTrigger: Int = 1): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(inputGlob)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        decontamSink(s"$workDir/ledger", evalSide, idCol, vecCol,
-          thresholdPpm)(batch, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .start()
-    q.awaitTermination()
-  }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.sketch.Drift
 
@@ -22,22 +21,16 @@ import graft.sketch.Drift
   * at any moment without rescanning history — the store is
   * |groups|·|bins| rows per batch, never corpus-sized.
   *
-  * Replay idempotence: `batch_id=`-partitioned dynamic overwrites (the
-  * [[ChangeDataStream]] stance), so a redelivered batch replaces its
-  * own partition instead of double-counting.
+  * Replay idempotence: [[StreamHost.overwriteBatch]], so a redelivered
+  * batch replaces its own partition instead of double-counting.
   */
 object DriftStream {
 
   /** The foreachBatch sink: this batch's (g, b, c) grid. */
   def driftSink(storePath: String, groupCol: String, valueCol: String)(
       batch: DataFrame, batchId: Long): Unit = {
-    val out = Drift.binCounts(batch, groupCol, col(valueCol))
-      .withColumn("batch_id", lit(batchId))
-    // per-write option, not a session-conf toggle: a concurrent overwrite
-    // on the same session must not silently turn dynamic (the
-    // ChangeDataStream form)
-    out.write.option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").partitionBy("batch_id").parquet(storePath)
+    StreamHost.overwriteBatch(
+      Drift.binCounts(batch, groupCol, col(valueCol)), batchId, storePath)
   }
 
   /** Current per-group PSI vs rest from the partial store: one grouped
@@ -48,25 +41,5 @@ object DriftStream {
     val merged = spark.read.parquet(storePath)
       .groupBy(col("g"), col("b")).agg(sum(col("c")).as("c"))
     Drift.psiFromCounts(merged).withColumnRenamed("g", groupCol)
-  }
-
-  /** Host: fold a file-landing stream into the grid store to
-    * completion (AvailableNow).
-    */
-  def runDriftStream(spark: SparkSession, inputGlob: String,
-      schema: org.apache.spark.sql.types.StructType, workDir: String,
-      groupCol: String, valueCol: String,
-      maxFilesPerTrigger: Int = 1): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(inputGlob)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        driftSink(s"$workDir/partials", groupCol, valueCol)(batch, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .start()
-    q.awaitTermination()
   }
 }

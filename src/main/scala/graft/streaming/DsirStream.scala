@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.sampling.Dsir
 
@@ -24,8 +23,7 @@ import graft.sampling.Dsir
   * without refitting over history — the store is 2·`buckets` longs of
   * state per batch, never corpus-sized.
   *
-  * Replay idempotence: `batch_id=`-partitioned dynamic overwrites (the
-  * [[ChangeDataStream]] stance).
+  * Replay idempotence: [[StreamHost.overwriteBatch]].
   */
 object DsirStream {
 
@@ -41,13 +39,7 @@ object DsirStream {
     val grid = pb.groupBy(col("b"))
       .agg(sum(col("c")).as("cr"),
         sum(when(col("__tgt"), col("c")).otherwise(lit(0L))).as("ct"))
-      .withColumn("batch_id", lit(batchId))
-    // per-write option, not a session-conf toggle: a concurrent overwrite
-    // on the same session must not silently turn dynamic (the
-    // ChangeDataStream form)
-    grid.write.option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").partitionBy("batch_id")
-      .parquet(storePath)
+    StreamHost.overwriteBatch(grid, batchId, storePath)
   }
 
   /** Current per-bucket surprisals from the partial store: one grouped
@@ -74,26 +66,5 @@ object DsirStream {
       buckets)
     Dsir.scoreAgainst(docs.select(col(idCol)), pb,
       currentSurprisals(spark, storePath), idCol)
-  }
-
-  /** Host: fold a file-landing stream into the distribution store to
-    * completion (AvailableNow).
-    */
-  def runDsirStream(spark: SparkSession, inputGlob: String,
-      schema: org.apache.spark.sql.types.StructType, workDir: String,
-      idCol: String, textCol: String, targetExpr: String, buckets: Int,
-      maxFilesPerTrigger: Int = 1): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(inputGlob)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dsirSink(s"$workDir/partials", idCol, textCol, targetExpr,
-          buckets)(batch, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .start()
-    q.awaitTermination()
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming conversion funnel — the continuous counterpart of the e6
   * batch funnel (view → click strictly after the first view → purchase
@@ -18,10 +17,10 @@ import org.apache.spark.sql.streaming.Trigger
   * the full e6 algebra over (state ∪ batch): three key-equi join + agg
   * stages, AQE-splittable, nothing driver-side.
   *
-  * Replay idempotence: writes are `batch_id=`-partitioned DYNAMIC
-  * overwrites (the [[ChangeDataStream]] stance) — a crash between the
-  * append and the checkpoint commit replays the batch id, which then
-  * replaces its own partition bit-for-bit instead of double-appending.
+  * Replay idempotence: writes go through [[StreamHost.overwriteBatch]]
+  * — a crash between the append and the checkpoint commit replays the
+  * batch id, which then replaces its own partition bit-for-bit instead
+  * of double-appending.
   *
   * Correctness contract (documented, spec'd, ENFORCED): micro-batches
   * must be TIME-ORDERED log segments — no event in batch N+1 is earlier
@@ -62,13 +61,8 @@ object FunnelStream {
             s"$bmin earlier than a prior batch's max ts ${prior.getLong(0)}" +
             " — the source is not delivering time-ordered log segments")
     }
-    val row = spark.range(1).select(lit(bmin).as("min_ts"),
-      lit(bmax).as("max_ts"), lit(batchId).as("batch_id"))
-    // per-write option, not a session-conf toggle: a concurrent overwrite
-    // on the same session must not silently turn dynamic (the
-    // ChangeDataStream form)
-    row.write.option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").partitionBy("batch_id").parquet(wmPath)
+    StreamHost.overwriteBatch(spark.range(1).select(lit(bmin).as("min_ts"),
+      lit(bmax).as("max_ts")), batchId, wmPath)
   }
 
   /** Current per-user funnel state from the version store: min per
@@ -132,33 +126,7 @@ object FunnelStream {
     val out = s2.join(bp, Seq("user_id"), "left")
       .select(col("user_id"), col("tv"), col("tc"),
         least(col("tp"), col("btp")).as("tp"))
-      .withColumn("batch_id", lit(batchId))
-
-    // per-write option, not a session-conf toggle: a concurrent overwrite
-    // on the same session must not silently turn dynamic (the
-    // ChangeDataStream form)
-    out.write.option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").partitionBy("batch_id").parquet(storePath)
-  }
-
-  /** Host: run the funnel over a file-landing event stream to
-    * completion (AvailableNow). `schema` is the landing files' schema;
-    * events must carry `user_id`, `ts`, `event_type`.
-    */
-  def runFunnelStream(spark: SparkSession, inputGlob: String,
-      schema: org.apache.spark.sql.types.StructType, workDir: String,
-      maxFilesPerTrigger: Int = 1): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(inputGlob)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        funnelSink(s"$workDir/state")(batch, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .start()
-    q.awaitTermination()
+    StreamHost.overwriteBatch(out, batchId, storePath)
   }
 
   /** The streamed funnel's stage counts, shaped exactly like the batch

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.sketch.Sketch
 
@@ -23,9 +22,8 @@ import graft.sketch.Sketch
   * decrement ever fires and streamed ≡ batch exactly —
   * HeavyHitterStreamSpec pins that across batch splits.
   *
-  * Replay idempotence: `batch_id=` dynamic-overwrite (the
-  * [[ChangeDataStream]] stance) — a redelivered batch replaces its own
-  * partial bit-for-bit.
+  * Replay idempotence: [[StreamHost.overwriteBatch]] — a redelivered
+  * batch replaces its own partial bit-for-bit.
   */
 object HeavyHitterStream {
 
@@ -33,14 +31,8 @@ object HeavyHitterStream {
   def mgSink(storePath: String, valueCol: String, k: Int = 64)(
       batch: DataFrame, batchId: Long): Unit = {
     val mg = udaf(Sketch.MisraGriesAggregator(k))
-    val out = batch.agg(mg(col(valueCol)).as("mg"))
-      .select(explode(col("mg")).as(Seq("token", "cnt")))
-      .withColumn("batch_id", lit(batchId))
-    // per-write option, not a session-conf toggle: a concurrent overwrite
-    // on the same session must not silently turn dynamic (the
-    // ChangeDataStream form)
-    out.write.option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").partitionBy("batch_id").parquet(storePath)
+    StreamHost.overwriteBatch(batch.agg(mg(col(valueCol)).as("mg"))
+      .select(explode(col("mg")).as(Seq("token", "cnt"))), batchId, storePath)
   }
 
   /** Current hitters from the partial store: one grouped sum (the
@@ -53,23 +45,4 @@ object HeavyHitterStream {
       .groupBy(col("token")).agg(sum(col("cnt")).as("cnt"))
       .filter(col("cnt") >= minCount)
       .orderBy(col("cnt").desc, col("token"))
-
-  /** Host: fold a file-landing stream into the partial store to
-    * completion (AvailableNow).
-    */
-  def runHeavyHitterStream(spark: SparkSession, inputGlob: String,
-      schema: org.apache.spark.sql.types.StructType, workDir: String,
-      valueCol: String, k: Int = 64, maxFilesPerTrigger: Int = 1): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(inputGlob)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mgSink(s"$workDir/partials", valueCol, k)(batch, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .start()
-    q.awaitTermination()
-  }
 }

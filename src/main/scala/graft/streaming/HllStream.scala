@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.sketch.Sketch
 
@@ -29,13 +28,9 @@ object HllStream {
   /** The foreachBatch sink: this batch's register frame. */
   def hllSink(storePath: String, groupCol: String, valueCol: String)(
       batch: DataFrame, batchId: Long): Unit = {
-    val out = Sketch.hllRegistersByGroup(batch, Seq(groupCol), valueCol)
-      .withColumn("batch_id", lit(batchId))
-    // per-write option, not a session-conf toggle: a concurrent overwrite
-    // on the same session must not silently turn dynamic (the
-    // ChangeDataStream form)
-    out.write.option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").partitionBy("batch_id").parquet(storePath)
+    StreamHost.overwriteBatch(
+      Sketch.hllRegistersByGroup(batch, Seq(groupCol), valueCol), batchId,
+      storePath)
   }
 
   /** Current per-group distinct estimates from the partial store: one
@@ -46,25 +41,5 @@ object HllStream {
     val merged = spark.read.parquet(storePath)
       .groupBy(col(groupCol), col("bucket")).agg(max(col("r")).as("r"))
     Sketch.hllEstimateFromRegisters(merged, Seq(groupCol))
-  }
-
-  /** Host: fold a file-landing stream into the register store to
-    * completion (AvailableNow).
-    */
-  def runHllStream(spark: SparkSession, inputGlob: String,
-      schema: org.apache.spark.sql.types.StructType, workDir: String,
-      groupCol: String, valueCol: String,
-      maxFilesPerTrigger: Int = 1): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(inputGlob)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        hllSink(s"$workDir/partials", groupCol, valueCol)(batch, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .start()
-    q.awaitTermination()
   }
 }

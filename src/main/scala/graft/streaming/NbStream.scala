@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.text.NbLang
 
@@ -25,9 +24,8 @@ import graft.text.NbLang
   * without refitting over history. Priors ride in the same store as
   * `bucket = -1` rows, so one parquet path carries the whole model.
   *
-  * Replay idempotence: `batch_id=`-partitioned dynamic overwrites (the
-  * [[ChangeDataStream]] stance) — a redelivered batch replaces its own
-  * partition instead of double-counting.
+  * Replay idempotence: [[StreamHost.overwriteBatch]] — a redelivered
+  * batch replaces its own partition instead of double-counting.
   */
 object NbStream {
 
@@ -40,14 +38,7 @@ object NbStream {
     val priors = batch.groupBy(col(labelCol).as("label"))
       .agg(count(lit(1)).as("c"))
       .select(col("label"), lit(-1L).as("bucket"), col("c"))
-    val grid = counts.unionByName(priors)
-      .withColumn("batch_id", lit(batchId))
-    // per-write option, not a session-conf toggle: a concurrent overwrite
-    // on the same session must not silently turn dynamic (the
-    // ChangeDataStream form)
-    grid.write.option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").partitionBy("batch_id")
-      .parquet(storePath)
+    StreamHost.overwriteBatch(counts.unionByName(priors), batchId, storePath)
   }
 
   /** Current model from the partial store: one grouped sum merges the
@@ -74,26 +65,5 @@ object NbStream {
       nBuckets: Int): DataFrame = {
     val (counts, labels) = currentModel(spark, storePath)
     NbLang.predict(docs, idCol, textCol, counts, labels, nBuckets)
-  }
-
-  /** Host: fold a labeled file-landing stream into the model store to
-    * completion (AvailableNow).
-    */
-  def runNbStream(spark: SparkSession, inputGlob: String,
-      schema: org.apache.spark.sql.types.StructType, workDir: String,
-      labelCol: String, textCol: String, nBuckets: Int,
-      maxFilesPerTrigger: Int = 1): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(inputGlob)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        nbSink(s"$workDir/partials", labelCol, textCol, nBuckets)(
-          batch, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .start()
-    q.awaitTermination()
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.sketch.ApproxQuantiles
 
@@ -23,21 +22,16 @@ import graft.sketch.ApproxQuantiles
   * bounded memory, within the t18 bin-relative error (≤ 3.1% at
   * subBits=4).
   *
-  * Replay idempotence: `batch_id=`-partitioned dynamic overwrites (the
-  * [[ChangeDataStream]] stance).
+  * Replay idempotence: [[StreamHost.overwriteBatch]].
   */
 object QuantileStream {
 
   /** The foreachBatch sink: this batch's (group, bin, count) grid. */
   def quantileSink(storePath: String, groupCol: String, valueCol: String,
       subBits: Int = 4)(batch: DataFrame, batchId: Long): Unit = {
-    val out = ApproxQuantiles.histogram(batch, groupCol, valueCol, subBits)
-      .withColumn("batch_id", lit(batchId))
-    // per-write option, not a session-conf toggle: a concurrent overwrite
-    // on the same session must not silently turn dynamic (the
-    // ChangeDataStream form)
-    out.write.option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").partitionBy("batch_id").parquet(storePath)
+    StreamHost.overwriteBatch(
+      ApproxQuantiles.histogram(batch, groupCol, valueCol, subBits), batchId,
+      storePath)
   }
 
   /** Current per-group quantiles from the partial store: one grouped
@@ -51,25 +45,5 @@ object QuantileStream {
       .groupBy(col("g"), col("id")).agg(sum(col("c")).as("c"))
     ApproxQuantiles.quantilesFromHistogram(merged, qs, subBits)
       .withColumnRenamed("g", groupCol)
-  }
-
-  /** Host: fold a file-landing stream into the grid store to
-    * completion (AvailableNow).
-    */
-  def runQuantileStream(spark: SparkSession, inputGlob: String,
-      schema: org.apache.spark.sql.types.StructType, workDir: String,
-      groupCol: String, valueCol: String,
-      maxFilesPerTrigger: Int = 1): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(inputGlob)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        quantileSink(s"$workDir/partials", groupCol, valueCol)(batch, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .start()
-    q.awaitTermination()
   }
 }

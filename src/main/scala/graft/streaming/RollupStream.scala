@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.pipeline.IncrementalRollup
 
@@ -17,9 +16,9 @@ import graft.pipeline.IncrementalRollup
   * where the batch boundaries fall — RollupStreamSpec pins streamed ≡
   * batch across splits.
   *
-  * Replay idempotence: partials land as `batch_id=`-partitioned DYNAMIC
-  * overwrites (the [[ChangeDataStream]] stance) — a redelivered batch
-  * id replaces its own partition bit-for-bit.
+  * Replay idempotence: partials land through
+  * [[StreamHost.overwriteBatch]] — a redelivered batch id replaces its
+  * own partition bit-for-bit.
   *
   * Scale: per-batch work is O(Δ) with one group-bounded aggregate; the
   * store grows one bounded row-set per group per batch and compacts by
@@ -30,13 +29,8 @@ object RollupStream {
   /** The foreachBatch sink: this batch's signed per-group deltas. */
   def rollupSink(storePath: String, groupCol: String, valueCol: String)(
       batch: DataFrame, batchId: Long): Unit = {
-    val out = IncrementalRollup.delta(batch, groupCol, valueCol)
-      .withColumn("batch_id", lit(batchId))
-    // per-write option, not a session-conf toggle: a concurrent overwrite
-    // on the same session must not silently turn dynamic (the
-    // ChangeDataStream form)
-    out.write.option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").partitionBy("batch_id").parquet(storePath)
+    StreamHost.overwriteBatch(
+      IncrementalRollup.delta(batch, groupCol, valueCol), batchId, storePath)
   }
 
   /** Resolve the current rollup from the partial store: one grouped
@@ -49,25 +43,4 @@ object RollupStream {
       .groupBy(col("g").as(groupCol))
       .agg(sum(col("d_cnt")).as("cnt"), sum(col("d_sum")).as("sum"))
       .filter(col("cnt") > 0)
-
-  /** Host: fold a file-landing CDC feed into the rollup store to
-    * completion (AvailableNow). Feed rows carry op/group/value and
-    * old_group/old_value (the Debezium before/after convention).
-    */
-  def runRollupStream(spark: SparkSession, inputGlob: String,
-      schema: org.apache.spark.sql.types.StructType, workDir: String,
-      groupCol: String, valueCol: String,
-      maxFilesPerTrigger: Int = 1): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(inputGlob)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        rollupSink(s"$workDir/partials", groupCol, valueCol)(batch, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .start()
-    q.awaitTermination()
-  }
 }

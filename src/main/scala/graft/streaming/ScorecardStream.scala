@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.text.TextAnalysis
 
@@ -27,8 +26,7 @@ import graft.text.TextAnalysis
   *     and above k it degrades to the calibrated KMV estimate instead
   *     of unbounded state.
   *
-  * Replay idempotence: `batch_id=`-partitioned dynamic overwrites (the
-  * [[ChangeDataStream]] / [[FunnelStream]] stance).
+  * Replay idempotence: [[StreamHost.overwriteBatch]].
   */
 object ScorecardStream {
 
@@ -40,7 +38,7 @@ object ScorecardStream {
     * — not collect_set+slice, whose pre-slice state is O(distinct hashes
     * per source per batch).
     */
-  def partials(batch: DataFrame, batchId: Long): DataFrame = {
+  def partials(batch: DataFrame): DataFrame = {
     val kmvAgg = udaf(graft.sketch.Sketch.KmvAggregator(K))
     batch
       .select(col("source"), col("lang"),
@@ -54,19 +52,12 @@ object ScorecardStream {
         sum(col("pii")).as("pii_hits"),
         array_distinct(collect_list(col("lang"))).as("langs"),
         kmvAgg(col("h")).as("kmv"))
-      .withColumn("batch_id", lit(batchId))
   }
 
   /** The foreachBatch sink: append this batch's partials. */
   def scorecardSink(storePath: String)(batch: DataFrame,
-      batchId: Long): Unit = {
-    val out = partials(batch, batchId)
-    // per-write option, not a session-conf toggle: a concurrent overwrite
-    // on the same session must not silently turn dynamic (the
-    // ChangeDataStream form)
-    out.write.option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").partitionBy("batch_id").parquet(storePath)
-  }
+      batchId: Long): Unit =
+    StreamHost.overwriteBatch(partials(batch), batchId, storePath)
 
   /** Resolve the current scorecard from the partial store: one grouped
     * merge. The KMV columns merge by flatten → distinct → k minima
@@ -97,24 +88,5 @@ object ScorecardStream {
       .withColumn("dup_ppm",
         expr("(n_docs - distinct_contents) * 1000000L div n_docs"))
       .withColumn("qual_mean_milli", expr("sum_quality * 1000L div n_docs"))
-  }
-
-  /** Host: run the scorecard over a file-landing document stream to
-    * completion (AvailableNow).
-    */
-  def runScorecardStream(spark: SparkSession, inputGlob: String,
-      schema: org.apache.spark.sql.types.StructType, workDir: String,
-      maxFilesPerTrigger: Int = 1): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(inputGlob)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scorecardSink(s"$workDir/partials")(batch, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .start()
-    q.awaitTermination()
   }
 }

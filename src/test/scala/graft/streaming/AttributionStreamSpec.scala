@@ -33,7 +33,7 @@ class AttributionStreamSpec extends SparkSpec {
       val want = batchPairs
       assert(want.nonEmpty, "the corpus must produce attribution pairs")
       // three time-ordered landing files (the multi-batch axis);
-      // maxFilesPerTrigger=1 → three micro-batches, watermark advances
+      // one file per micro-batch → three batches, watermark advances
       // between them and cross-batch pairs must still emit
       val sorted = events.orderBy("ts").localCheckpoint()
       val n = sorted.count()

@@ -3,7 +3,6 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 
@@ -29,19 +28,9 @@ class ChangeDataStreamSpec extends SparkSpec {
       .coalesce(1).write.parquet(s"$base/landing/b2")
 
     val schema = spark.read.parquet(s"$base/landing/b1").schema
-    def run(): Unit = {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$base/landing/*")
-        .writeStream
-        .foreachBatch(ChangeDataStream.cdcSink(
-          store, log, "doc_id", md5(col("text").cast("binary"))) _)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$base/ckpt")
-        .start()
-      q.awaitTermination()
-    }
-    run()
+    StreamHost.run(StreamHost.files(spark, s"$base/landing/*", schema),
+      s"$base/ckpt")(ChangeDataStream.cdcSink(
+      store, log, "doc_id", md5(col("text").cast("binary"))))
 
     val logDf = spark.read.parquet(log)
     def classes(b: Long): Map[String, Set[Long]] =

@@ -55,21 +55,21 @@ class CmsStoreStreamSpec extends SparkSpec {
       toTokens(docs.filter(col("doc_id") % 3 === 2)).coalesce(1)
         .write.parquet(s"$base/landing/p2")
       val schema = toTokens(docs).schema
-      CmsStoreStream.run(spark, s"$base/landing/*", schema,
-        s"$base/ckpt", streamed)
+      def run(ckpt: String): Long = StreamHost.run(
+        StreamHost.files(spark, s"$base/landing/*", schema), ckpt)(
+        CmsStoreStream.sink(streamed))
+      run(s"$base/ckpt")
       assert(gridSet(streamed) == want,
         "streamed accretion must equal the one-shot grid cell for cell")
       // restart under the SAME checkpoint: no new files, no new epochs
-      CmsStoreStream.run(spark, s"$base/landing/*", schema,
-        s"$base/ckpt", streamed)
+      run(s"$base/ckpt")
       assert(gridSet(streamed) == want)
       // the at-least-once catastrophe: the WHOLE stream re-delivers
       // under a FRESH checkpoint — epoch ids restart at 0 and the file
       // source re-chunks the same files in the same order, so every
       // re-delivered batch re-writes its original tag and the store's
       // distinct absorbs it (the sum algebra's guard is the tag)
-      CmsStoreStream.run(spark, s"$base/landing/*", schema,
-        s"$base/ckpt2", streamed)
+      run(s"$base/ckpt2")
       assert(gridSet(streamed) == want,
         "a deterministically re-chunked full replay must not move any cell")
     } finally deleteRecursively(base)

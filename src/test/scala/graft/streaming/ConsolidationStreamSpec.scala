@@ -39,12 +39,15 @@ class ConsolidationStreamSpec extends SparkSpec {
       ("F1", "R1", "Carrier A", "2026-01-15", "100", "0", "100"),
       ("F2", "R2", "Carrier B", "2026-01-16", "200", "0", "200")))
 
-    ConsolidationStream.runAvailableNow(spark, c)
+    // the pass count is the host contract a caller (the benchmark's
+    // stream pass) checks: a pass over a new file runs ≥ 1 micro-batch
+    assert(ConsolidationStream.runAvailableNow(spark, c) == 1L)
     val store1 = spark.read.parquet(c.consolidatedPath)
     assert(store1.count() == 2)
 
-    // restart with NO new files → checkpoint skips everything, no dupes
-    ConsolidationStream.runAvailableNow(spark, c)
+    // restart with NO new files → checkpoint skips everything, no dupes,
+    // and no micro-batch runs at all
+    assert(ConsolidationStream.runAvailableNow(spark, c) == 0L)
     assert(spark.read.parquet(c.consolidatedPath).count() == 2)
 
     // new file: one overlapping PK (kept old), one new, one invalid row
@@ -52,7 +55,7 @@ class ConsolidationStreamSpec extends SparkSpec {
       ("F1", "R1", "CHANGED", "2026-01-15", "100", "0", "100"),
       ("F3", "R3", "Carrier C", "2026-01-17", "300", "0", "300"),
       ("", "RX", "Carrier X", "2026-01-18", "1", "0", "1")))
-    ConsolidationStream.runAvailableNow(spark, c)
+    assert(ConsolidationStream.runAvailableNow(spark, c) == 1L)
 
     val store2 = spark.read.parquet(c.consolidatedPath)
     assert(store2.count() == 3)
@@ -70,7 +73,8 @@ class ConsolidationStreamSpec extends SparkSpec {
     writeStaged(c.landingDir, "b1.csv", Seq(
       ("F1", "R1", "Carrier A", "2026-01-15", "100", "0", "100"),
       ("F2", "R2", "Carrier B", "2026-01-16", "200", "0", "200")))
-    ConsolidationStream.runScd2AvailableNow(spark, c, Seq("carrier_name"))
+    assert(ConsolidationStream
+      .runScd2AvailableNow(spark, c, Seq("carrier_name")) == 1L)
 
     val s1 = spark.read.parquet(c.consolidatedPath)
     assert(s1.count() == 2 && s1.filter(col("valid_to").isNotNull).isEmpty)
@@ -80,7 +84,8 @@ class ConsolidationStreamSpec extends SparkSpec {
       ("F1", "R1", "Carrier A2", "2026-01-15", "100", "0", "100"),
       ("F2", "R2", "Carrier B", "2026-01-16", "200", "0", "200"),
       ("F3", "R3", "Carrier C", "2026-01-17", "300", "0", "300")))
-    ConsolidationStream.runScd2AvailableNow(spark, c, Seq("carrier_name"))
+    assert(ConsolidationStream
+      .runScd2AvailableNow(spark, c, Seq("carrier_name")) == 1L)
 
     val s2 = spark.read.parquet(c.consolidatedPath)
     assert(s2.count() == 4, "F1 v1+v2, F2, F3")
@@ -94,7 +99,8 @@ class ConsolidationStreamSpec extends SparkSpec {
       "unchanged redelivery must not version")
 
     // restart with no new files: checkpoint skips, store byte-stable
-    ConsolidationStream.runScd2AvailableNow(spark, c, Seq("carrier_name"))
+    assert(ConsolidationStream
+      .runScd2AvailableNow(spark, c, Seq("carrier_name")) == 0L)
     assert(spark.read.parquet(c.consolidatedPath).count() == 4)
   }
 }

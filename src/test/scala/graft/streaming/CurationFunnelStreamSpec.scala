@@ -23,21 +23,24 @@ class CurationFunnelStreamSpec extends SparkSpec {
       // a LATER batch under fresh ids — same text, so same content_hash
       // and same signals; the streamed first-wins keeper then differs
       // from the batch min-id keeper, and the stage counts must still
-      // agree (the equivalence Curation.runFunnelStream documents)
+      // agree (the equivalence Curation.funnelSink documents)
       val dup = docs.filter(col("doc_id") % 5 === 0)
         .withColumn("doc_id", col("doc_id") + 1000000L)
       val corpus = docs.unionByName(dup)
       corpus.write.parquet(s"$base/table/documents.parquet")
 
-      // three landing slices → ≥3 micro-batches at maxFilesPerTrigger=1
+      // three landing slices → ≥3 micro-batches, one file per batch
       docs.filter(col("doc_id") < 300).coalesce(1)
         .write.parquet(s"$base/landing/p1")
       docs.filter(col("doc_id") >= 300).coalesce(1)
         .write.parquet(s"$base/landing/p2")
       dup.coalesce(1).write.parquet(s"$base/landing/p3")
 
-      Curation.runFunnelStream(spark, s"$base/landing/*", docs.schema,
-        "doc_id", "text", s"$base/work")
+      def run(): Long = StreamHost.run(
+        StreamHost.files(spark, s"$base/landing/*", docs.schema),
+        s"$base/work/ckpt")(
+        Curation.funnelSink("doc_id", "text", s"$base/work"))
+      run()
 
       val streamed = Curation.streamedFunnelCounts(spark, s"$base/work")
         .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
@@ -54,8 +57,7 @@ class CurationFunnelStreamSpec extends SparkSpec {
 
       // restart idempotence: re-running the finished stream (same
       // checkpoint) must not change a single count
-      Curation.runFunnelStream(spark, s"$base/landing/*", docs.schema,
-        "doc_id", "text", s"$base/work")
+      run()
       val again = Curation.streamedFunnelCounts(spark, s"$base/work")
         .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
       assert(again == streamed, "restart must be a no-op")

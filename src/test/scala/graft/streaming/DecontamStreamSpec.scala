@@ -62,9 +62,9 @@ class DecontamStreamSpec extends SparkSpec {
       Thread.sleep(5)
       emb.filter(col("vec_id") % 2 === 1).coalesce(1)
         .write.parquet(s"$base/landing/p1")
-      DecontamStream.runDecontamStream(spark, s"$base/landing/*",
-        emb.schema, s"$base/work", evalSide, "vec_id", "embedding",
-        threshold)
+      StreamHost.run(StreamHost.files(spark, s"$base/landing/*", emb.schema),
+        s"$base/work/ckpt")(DecontamStream.decontamSink(s"$base/work/ledger",
+        evalSide, "vec_id", "embedding", threshold))
       val streamed = DecontamStream.contaminationLedger(spark,
           s"$base/work/ledger")
         .orderBy("eval_id", "corpus_id")

@@ -51,8 +51,9 @@ class DriftStreamSpec extends SparkSpec {
       Thread.sleep(5)
       docs.filter(col("doc_id") % 2 === 1).coalesce(1)
         .write.parquet(s"$base/landing/p1")
-      DriftStream.runDriftStream(spark, s"$base/landing/*",
-        docs.schema, s"$base/work", "source", "n_chars")
+      StreamHost.run(StreamHost.files(spark, s"$base/landing/*", docs.schema),
+        s"$base/work/ckpt")(
+        DriftStream.driftSink(s"$base/work/partials", "source", "n_chars"))
       val streamed = DriftStream
         .currentPsi(spark, s"$base/work/partials", "source")
         .orderBy("source").collect().map(_.toSeq).toSeq

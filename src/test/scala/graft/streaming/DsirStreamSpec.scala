@@ -60,8 +60,9 @@ class DsirStreamSpec extends SparkSpec {
       Thread.sleep(5)
       docs.filter(col("doc_id") % 2 === 1).coalesce(1)
         .write.parquet(s"$base/landing/p1")
-      DsirStream.runDsirStream(spark, s"$base/landing/*", docs.schema,
-        s"$base/work", "doc_id", "text", "lang = 'en'", buckets)
+      StreamHost.run(StreamHost.files(spark, s"$base/landing/*", docs.schema),
+        s"$base/work/ckpt")(DsirStream.dsirSink(s"$base/work/partials",
+        "doc_id", "text", "lang = 'en'", buckets))
       val streamed = DsirStream.scoreAgainstStore(spark,
           s"$base/work/partials", docs, "doc_id", "text", buckets)
         .orderBy("doc_id").collect().map(_.toSeq).toSeq

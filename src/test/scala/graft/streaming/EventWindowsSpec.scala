@@ -19,10 +19,7 @@ class EventWindowsSpec extends SparkSpec {
     val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     events.write.parquet(s"$base/landing/part1")
 
-    val streamed = spark.readStream
-      .schema(events.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/landing/*")
+    val streamed = StreamHost.files(spark, s"$base/landing/*", events.schema)
     val q = EventWindows.windowedCounts(streamed)
       .writeStream
       .format("memory")
@@ -239,10 +236,8 @@ class EventWindowsSpec extends SparkSpec {
     clicks.write.parquet(s"$base/clicks/p1")
     purchases.write.parquet(s"$base/purch/p1")
 
-    def cStream = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/clicks/*")
-    def pStream = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/purch/*")
+    def cStream = StreamHost.files(spark, s"$base/clicks/*", events.schema)
+    def pStream = StreamHost.files(spark, s"$base/purch/*", events.schema)
 
     val q = EventWindows.attributionJoin(cStream, pStream)
       .writeStream.format("memory").queryName("attrib")

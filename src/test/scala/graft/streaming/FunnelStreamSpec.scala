@@ -34,7 +34,7 @@ class FunnelStreamSpec extends SparkSpec {
     val ev = corpus
     // contiguous time slices → the time-ordered log-segment contract the
     // sink documents; slice files land sequentially so mtime order (the
-    // file-source processing order at maxFilesPerTrigger=1) follows time
+    // order of StreamHost.files, one file per batch) follows time
     val ms = unix_millis(col("ts").cast("timestamp"))
     val bounds = ev.agg(min(ms).as("lo"), max(ms).as("hi")).collect().head
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
@@ -44,8 +44,8 @@ class FunnelStreamSpec extends SparkSpec {
         .coalesce(1).write.parquet(s"$base/landing/p$i")
       Thread.sleep(5) // distinct mtimes → deterministic pickup order
     }
-    FunnelStream.runFunnelStream(spark, s"$base/landing/*",
-      ev.schema, s"$base/work")
+    StreamHost.run(StreamHost.files(spark, s"$base/landing/*", ev.schema),
+      s"$base/work/ckpt")(FunnelStream.funnelSink(s"$base/work/state"))
     FunnelStream.streamedFunnelCounts(spark, s"$base/work")
       .collect().map(r => r.getInt(0) -> r.getLong(2)).toSeq
   }

@@ -57,8 +57,10 @@ class HeavyHitterStreamSpec extends SparkSpec {
       Thread.sleep(5)
       events.filter(col("event_id") % 2 === 1).coalesce(1)
         .write.parquet(s"$base/landing/p1")
-      HeavyHitterStream.runHeavyHitterStream(spark, s"$base/landing/*",
-        events.schema, s"$base/work", "event_type")
+      StreamHost.run(
+        StreamHost.files(spark, s"$base/landing/*", events.schema),
+        s"$base/work/ckpt")(
+        HeavyHitterStream.mgSink(s"$base/work/partials", "event_type"))
       val streamed = HeavyHitterStream
         .currentHitters(spark, s"$base/work/partials")
         .collect().map(_.toSeq).toSeq

@@ -41,14 +41,16 @@ class HllStoreStreamSpec extends SparkSpec {
       Thread.sleep(5)
       docs.filter(col("doc_id") % 3 === 2).coalesce(1)
         .write.parquet(s"$base/landing/p2")
-      HllStoreStream.run(spark, s"$base/landing/*", docs.schema,
-        s"$base/ckpt", streamed)
+      // HllStore.append is the whole sink: no batch id, no guard
+      def run(ckpt: String): Long = StreamHost.run(
+        StreamHost.files(spark, s"$base/landing/*", docs.schema), ckpt)(
+        (batch, _) => HllStore.append(batch, streamed))
+      run(s"$base/ckpt")
       assert(estMap(streamed) == want,
         "streamed accretion must equal the one-shot store")
       // an at-least-once catastrophe: the WHOLE stream re-delivers
       // under a fresh checkpoint — idempotent algebra absorbs it
-      HllStoreStream.run(spark, s"$base/landing/*", docs.schema,
-        s"$base/ckpt2", streamed)
+      run(s"$base/ckpt2")
       assert(estMap(streamed) == want,
         "a full stream replay must not move any estimate")
     } finally deleteRecursively(base)

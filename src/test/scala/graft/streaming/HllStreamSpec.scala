@@ -55,8 +55,14 @@ class HllStreamSpec extends SparkSpec {
       Thread.sleep(5)
       docs.filter(col("doc_id") % 2 === 1).coalesce(1)
         .write.parquet(s"$base/landing/p1")
-      HllStream.runHllStream(spark, s"$base/landing/*",
-        docs.schema, s"$base/work", "lang", "text")
+      val batches = StreamHost.run(
+        StreamHost.files(spark, s"$base/landing/*", docs.schema),
+        s"$base/work/ckpt")(
+        HllStream.hllSink(s"$base/work/partials", "lang", "text"))
+      // the shared file source reads ONE file per micro-batch — the
+      // batch boundaries the funnel, attribution and curation specs
+      // split on
+      assert(batches == 2, s"2 landed files ran as $batches micro-batches")
       val streamed = HllStream
         .currentEstimates(spark, s"$base/work/partials", "lang")
         .orderBy("lang").collect().map(_.toSeq).toSeq

@@ -41,8 +41,11 @@ class KmvStoreStreamSpec extends SparkSpec {
       Thread.sleep(5)
       docs.filter(col("doc_id") % 3 === 2).coalesce(1)
         .write.parquet(s"$base/landing/p2")
-      KmvStoreStream.run(spark, s"$base/landing/*", docs.schema,
-        s"$base/ckpt", streamed)
+      // KmvStore.append is the whole sink: no batch id, no guard
+      def run(ckpt: String): Long = StreamHost.run(
+        StreamHost.files(spark, s"$base/landing/*", docs.schema), ckpt)(
+        (batch, _) => KmvStore.append(batch, streamed))
+      run(s"$base/ckpt")
       assert(estMap(streamed) == want,
         "streamed accretion must equal the one-shot store")
       assert(KmvStore.minima(spark, streamed).collect().toSet
@@ -50,8 +53,7 @@ class KmvStoreStreamSpec extends SparkSpec {
         "the merged minima SET itself must match the one-shot store")
       // an at-least-once catastrophe: the WHOLE stream re-delivers
       // under a fresh checkpoint — idempotent algebra absorbs it
-      KmvStoreStream.run(spark, s"$base/landing/*", docs.schema,
-        s"$base/ckpt2", streamed)
+      run(s"$base/ckpt2")
       assert(estMap(streamed) == want,
         "a full stream replay must not move any estimate")
     } finally deleteRecursively(base)

@@ -3,7 +3,6 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.dedup.LshIndex
@@ -33,20 +32,13 @@ class LshIngestStreamSpec extends SparkSpec {
     docs.filter(col("doc_id") >= 350)
       .write.parquet(s"$base/landing/b2")
 
-    val q = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/landing/*")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val b = batch.localCheckpoint() // probe and append share one read
-        LshIndex.probeLshIndex(b.sparkSession, b, "doc_id", "text", index)
-          .write.mode("append").parquet(hitsDir)
-        LshIndex.appendToLshIndex(b, "doc_id", "text", index)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$base/ckpt")
-      .start()
-    q.awaitTermination()
+    StreamHost.run(StreamHost.files(spark, s"$base/landing/*", docs.schema),
+        s"$base/ckpt") { (batch, _) =>
+      val b = batch.localCheckpoint() // probe and append share one read
+      LshIndex.probeLshIndex(b.sparkSession, b, "doc_id", "text", index)
+        .write.mode("append").parquet(hitsDir)
+      LshIndex.appendToLshIndex(b, "doc_id", "text", index)
+    }
 
     // accreted index ≡ one-shot rebuild, under the same probe set
     val rebuilt = s"$base/rebuilt"

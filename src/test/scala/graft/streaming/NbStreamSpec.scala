@@ -59,8 +59,9 @@ class NbStreamSpec extends SparkSpec {
       Thread.sleep(5)
       docs.filter(col("doc_id") % 2 === 1).coalesce(1)
         .write.parquet(s"$base/landing/p1")
-      NbStream.runNbStream(spark, s"$base/landing/*", docs.schema,
-        s"$base/work", "lang", "text", buckets)
+      StreamHost.run(StreamHost.files(spark, s"$base/landing/*", docs.schema),
+        s"$base/work/ckpt")(
+        NbStream.nbSink(s"$base/work/partials", "lang", "text", buckets))
       val streamed = NbStream.classifyAgainstStore(spark,
           s"$base/work/partials", docs, "doc_id", "text", buckets)
         .orderBy("doc_id").collect().map(_.toSeq).toSeq

@@ -54,8 +54,9 @@ class QuantileStreamSpec extends SparkSpec {
       Thread.sleep(5)
       docs.filter(col("doc_id") % 2 === 1).coalesce(1)
         .write.parquet(s"$base/landing/p1")
-      QuantileStream.runQuantileStream(spark, s"$base/landing/*",
-        docs.schema, s"$base/work", "lang", "n_chars")
+      StreamHost.run(StreamHost.files(spark, s"$base/landing/*", docs.schema),
+        s"$base/work/ckpt")(
+        QuantileStream.quantileSink(s"$base/work/partials", "lang", "n_chars"))
       val streamed = QuantileStream
         .currentQuantiles(spark, s"$base/work/partials", "lang")
         .orderBy("lang", "qi").collect().map(_.toSeq).toSeq

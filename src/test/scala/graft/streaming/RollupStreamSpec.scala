@@ -61,8 +61,9 @@ class RollupStreamSpec extends SparkSpec {
       feed.limit(4).coalesce(1).write.parquet(s"$base/landing/p0")
       Thread.sleep(5)
       feed.except(feed.limit(4)).coalesce(1).write.parquet(s"$base/landing/p1")
-      RollupStream.runRollupStream(spark, s"$base/landing/*",
-        feed.schema, s"$base/work", "grp", "v")
+      StreamHost.run(StreamHost.files(spark, s"$base/landing/*", feed.schema),
+        s"$base/work/ckpt")(
+        RollupStream.rollupSink(s"$base/work/partials", "grp", "v"))
       assert(RollupStream.currentRollup(spark, s"$base/work/partials", "grp")
         .orderBy("grp").collect().map(_.toSeq).toSeq == expected)
     } finally deleteRecursively(base)

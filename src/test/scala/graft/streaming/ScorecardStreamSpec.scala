@@ -26,8 +26,9 @@ class ScorecardStreamSpec extends SparkSpec {
           .write.parquet(s"$base/landing/p$i")
         Thread.sleep(5)
       }
-      ScorecardStream.runScorecardStream(spark, s"$base/landing/*",
-        docs.schema, s"$base/work")
+      StreamHost.run(StreamHost.files(spark, s"$base/landing/*", docs.schema),
+        s"$base/work/ckpt")(
+        ScorecardStream.scorecardSink(s"$base/work/partials"))
 
       def snap = ScorecardStream
         .currentScorecard(spark, s"$base/work/partials")

@@ -28,10 +28,7 @@ class StreamingDedupSpec extends SparkSpec {
     docs.filter(col("doc_id") < 400).write.parquet(s"$base/landing/part1")
     docs.filter(col("doc_id") >= 380).write.parquet(s"$base/landing/part2")
 
-    val streamed = spark.readStream
-      .schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/landing/*")
+    val streamed = StreamHost.files(spark, s"$base/landing/*", docs.schema)
     val q = StreamingDedup.exactDedupStream(streamed, "text", "ingested_at")
       .writeStream
       .format("memory")
@@ -65,19 +62,10 @@ class StreamingDedupSpec extends SparkSpec {
 
     // pass 1: first 300 docs land (one file)
     docs.filter(col("doc_id") < 300).write.parquet(s"$base/landing/p1")
-    def runOnce(): Unit = {
-      val q = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$base/landing/*")
-        .writeStream
-        .foreachBatch(StreamingDedup.storeDedupSink(
-          store, "content_hash", Seq("doc_id"),
-          compactEveryBatches = 2) _)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$base/ckpt")
-        .start()
-      q.awaitTermination()
-    }
+    def runOnce(): Long = StreamHost.run(
+      StreamHost.files(spark, s"$base/landing/*", docs.schema),
+      s"$base/ckpt")(StreamingDedup.storeDedupSink(
+      store, "content_hash", Seq("doc_id"), compactEveryBatches = 2))
     runOnce()
     val afterP1 = spark.read.parquet(store).count()
 

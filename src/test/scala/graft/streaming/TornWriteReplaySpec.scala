@@ -7,14 +7,15 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** The crash WINDOW (not just clean redelivery) for every partial-store
-  * streaming host: the sink's dynamic `batch_id=` overwrite can be
-  * interrupted mid-write, leaving a torn partition — some of the
-  * batch's files on disk, some lost. foreachBatch then redelivers the
-  * batch. The contract under test: one replayed sink call REPLACES the
-  * torn partition wholesale and the resolved state equals a never-
-  * crashed run — for each of the four hosts that claim it (quantiles,
-  * HLL, heavy hitters, rollup). The funnel's own crash window (a _wm
-  * sidecar) has its own spec in FunnelStreamSpec.
+  * streaming sink: the sink's dynamic `batch_id=` overwrite
+  * ([[StreamHost.overwriteBatch]]) can be interrupted mid-write, leaving
+  * a torn partition — some of the batch's files on disk, some lost.
+  * foreachBatch then redelivers the batch. The contract under test: one
+  * replayed sink call REPLACES the torn partition wholesale and the
+  * resolved state equals a never-crashed run — for each of the nine
+  * sinks that claim it (quantiles, HLL, heavy hitters, drift, DSIR,
+  * rollup, Naive Bayes, decontamination, scorecard). The funnel's own
+  * crash window (a _wm sidecar) has its own spec in FunnelStreamSpec.
   */
 class TornWriteReplaySpec extends SparkSpec {
   import spark.implicits._
@@ -135,6 +136,45 @@ class TornWriteReplaySpec extends SparkSpec {
       p => RollupStream.currentRollup(spark, p, "grp")
         .orderBy("grp").collect().map(_.toString).toSeq,
       batches,
+      tornMustChangeResolution = true)
+  }
+
+  test("Naive Bayes model store: torn batch partition + replay ≡ clean run") {
+    val d = docs.select(col("doc_id"), col("lang"), col("text"))
+    scenario(
+      p => NbStream.nbSink(p, "lang", "text", 1024),
+      p => {
+        val (counts, labels) = NbStream.currentModel(spark, p)
+        (counts.orderBy("label", "bucket").collect() ++
+          labels.orderBy("label").collect()).map(_.toString).toSeq
+      },
+      Seq(0, 1, 2).map(i => d.filter(col("doc_id") % 3 === i)),
+      tornMustChangeResolution = true)
+  }
+
+  test("decontamination ledger: torn batch partition + replay ≡ clean run") {
+    // the sf0.001 embeddings table sits next to the documents table
+    val emb = spark.read.parquet(docs.inputFiles.head
+        .replace("documents.parquet", "embeddings.parquet"))
+      .select(col("vec_id"), col("embedding"))
+    val evalSide = emb.filter(col("vec_id") % 17 === 0)
+    scenario(
+      p => DecontamStream.decontamSink(p, evalSide, "vec_id", "embedding",
+        400000L),
+      p => DecontamStream.contaminationLedger(spark, p)
+        .orderBy("eval_id", "corpus_id").collect().map(_.toString).toSeq,
+      Seq(0, 1, 2).map(i => emb.filter(col("vec_id") % 3 === i)),
+      tornMustChangeResolution = true)
+  }
+
+  test("scorecard store: torn batch partition + replay ≡ clean run") {
+    val d = docs.select(col("doc_id"), col("source"), col("lang"),
+      col("text"))
+    scenario(
+      p => ScorecardStream.scorecardSink(p),
+      p => ScorecardStream.currentScorecard(spark, p)
+        .orderBy("source").collect().map(_.toString).toSeq,
+      Seq(0, 1, 2).map(i => d.filter(col("doc_id") % 3 === i)),
       tornMustChangeResolution = true)
   }
 

@@ -3,7 +3,6 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.similarity.VecIndex
@@ -42,21 +41,14 @@ class VecIngestStreamSpec extends SparkSpec {
     emb.filter(col("vec_id") >= 350)
       .write.parquet(s"$base/landing/b2")
 
-    val q = spark.readStream.schema(emb.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/landing/*")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val b = batch.localCheckpoint() // probe and append share one read
-        VecIndex.probeVecIndex(b.sparkSession, b, "vec_id", "embedding",
-            index, 900000L)
-          .write.mode("append").parquet(hitsDir)
-        VecIndex.appendToVecIndex(b, "vec_id", "embedding", index)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$base/ckpt")
-      .start()
-    q.awaitTermination()
+    StreamHost.run(StreamHost.files(spark, s"$base/landing/*", emb.schema),
+        s"$base/ckpt") { (batch, _) =>
+      val b = batch.localCheckpoint() // probe and append share one read
+      VecIndex.probeVecIndex(b.sparkSession, b, "vec_id", "embedding",
+          index, 900000L)
+        .write.mode("append").parquet(hitsDir)
+      VecIndex.appendToVecIndex(b, "vec_id", "embedding", index)
+    }
 
     // accreted store ≡ one-shot rebuild, under the same probe set
     val rebuilt = s"$base/rebuilt"
