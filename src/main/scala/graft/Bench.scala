@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — driver runs this per round at sf0.1 and compares
   * against BASELINE.md. Materializes each query with the noop sink so the
   * full physical plan (all output columns, not just a count) executes.
@@ -9,28 +7,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // r16: the AQE coalesce floor is back at Spark's default (1m). The
-    // r15 256k floor was a byte-blind global proxy for "keep CPU-dense
-    // small shuffles wide"; it taxed every cheap small shuffle with
-    // extra tasks (t53's NB chain regressed 1.2 → 1.6-5.4 s, ~60 micro
-    // queries paid 10-30%). The CPU-dense exchanges are now pinned at
-    // the OPERATOR level instead (explicit-width repartitions keyed on
-    // the operator's own join/group keys — see Dedup shingle/simhash
-    // feeders, Similarity.bandedCandidatesRaw, VecIndex probe confirm),
-    // which AQE never coalesces, so the floor no longer needs to lie
-    // about the rest of the engine. Env knob kept for A/B.
-    val minCoalesce = sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_COALESCE", "1m")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        minCoalesce)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus, 32)
     spark.sparkContext.setLogLevel("WARN")
 
     // Every exception the timing loop swallows is RECORDED, not discarded:
@@ -53,19 +31,12 @@ object Bench {
       try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable => logErr("warmup", name, e) }
     }
-    // The shared invoice views persist() LAZILY, so the sf0.001 warm-up
-    // does not build the MEASURED scale's cache — its first-touch cost
-    // used to land on whichever j-family query ran first, showing as a
-    // spurious ~2× on that one query (the r9 artifact spread). Build it
-    // here, outside the measurement.
-    try queries.InvoiceView.warmShared(spark, sfDir)
-    catch { case scala.util.control.NonFatal(_) => () }
-
     // best-of-three per query: a single pass is exposed to host-load noise
     // (observed 0.4s queries billed 20s on a loaded machine; round 4's
     // driver run showed 1s queries billed 7s under sustained interference
     // that best-of-two didn't absorb — a third sample costs ~40% more
-    // wall but pins the floor)
+    // wall but pins the floor). The min also drops the first-touch build
+    // of a shared session view, which lands in sample 1 only (BASELINE.md).
     def timeOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()

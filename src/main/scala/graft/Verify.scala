@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,17 +9,8 @@ object Verify {
     // over a fixed dataset — there is no reason to run it narrower than
     // the machine (the old default of 4 made sf1 replays ~8× slower)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // old-generator events.parquet stores ts as TIMESTAMP(NANOS); Spark
-      // has no nanos type, so surface it as long (nanos since epoch).
-      // Harmless on current micros data — Tables.load normalizes both.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      Runtime.getRuntime.availableProcessors.toString).toInt
+    val spark = GraftSession.local(cpus, cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // optional subset for local iteration (comma-separated names); the

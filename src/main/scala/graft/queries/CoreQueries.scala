@@ -553,13 +553,10 @@ object CoreQueries {
   /** Insert-only merge shared by j1_insert_only_merge / j1_inserted_slice
     * / a2_reconcile — same materialized-view idiom as [[fullUpsertShared]].
     */
-  private val insertOnlyCache =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
   private def insertOnlyShared(s: SparkSession, dir: String): Merge.Result = {
     val m = Merge.insertOnly(existingInv(s, dir), incomingInv(s, dir),
       InvoiceRecord.pk)
-    insertOnlyCache.getOrElseUpdate(org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir,
-      { m.result.persist(); m.inserted.persist(); () })
+    SessionViews(s, dir, "insert")(Seq(m.result.persist(), m.inserted.persist()))
     m
   }
 
@@ -568,14 +565,11 @@ object CoreQueries {
     * substitution as [[uniqShared]]) materializes the merge once for all
     * three driver-invoked queries — the materialized-view idiom.
     */
-  private val upsertShared =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
   private def fullUpsertShared(s: SparkSession, dir: String): Merge.Result = {
     val m = Merge.fullUpsert(existingInv(s, dir), incomingUpsert(s, dir),
       InvoiceRecord.pk,
       Seq("carrier_name", "invoice_date", "net_amount", "tax_amount", "total_amount"))
-    upsertShared.getOrElseUpdate(org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir,
-      { m.result.persist(); () })
+    SessionViews(s, dir, "upsert")(Seq(m.result.persist()))
     m
   }
 
@@ -2351,21 +2345,18 @@ object CoreQueries {
     * Memoized so bench iterations re-READ, not re-build (the s6
     * pattern).
     */
-  private val zstoreMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def zorderStoreDir(s: SparkSession, dir: String): String =
-    zstoreMemo.getOrElseUpdate(
-      org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir, {
-        val path = TempStores.dir("graft-zstore") + "/store"
-        t(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-            col("l_quantity"))
-          .repartition(8).write.parquet(path)
-        graft.pipeline.StoreMaintenance.compactZOrdered(
-          s, path, "l_partkey", "l_suppkey",
-          bits = 6, targetBytes = 256 * 1024)
-        path
-      })
+    SessionViews(s, dir, "zstore") {
+      val path = TempStores.dir("graft-zstore") + "/store"
+      t(s, dir, "lineitem")
+        .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
+          col("l_quantity"))
+        .repartition(8).write.parquet(path)
+      graft.pipeline.StoreMaintenance.compactZOrdered(
+        s, path, "l_partkey", "l_suppkey",
+        bits = 6, targetBytes = 256 * 1024)
+      path
+    }
 
   /** K6 — the z-ordered store READ path (the s6/s7 pattern applied to
     * k5's layout lever): a 2-D range query answered FROM the compacted
@@ -2469,26 +2460,23 @@ object CoreQueries {
     * carry a JVM-unique suffix so two dirs in one session never collide
     * in the catalog.
     */
-  private val bstoreMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
   private val bstoreSeq = new java.util.concurrent.atomic.AtomicInteger(0)
   private[graft] def bucketedTables(s: SparkSession, dir: String): (String, String) =
-    bstoreMemo.getOrElseUpdate(
-      org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir, {
-        val id = bstoreSeq.incrementAndGet()
-        val base = TempStores.dir("graft-bstore")
-        val oT = s"graft_k7_orders_$id"
-        val lT = s"graft_k7_lineitem_$id"
-        t(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_orderpriority"))
-          .write.bucketBy(16, "o_orderkey").sortBy("o_orderkey")
-          .option("path", s"$base/orders").saveAsTable(oT)
-        t(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_quantity"))
-          .write.bucketBy(16, "l_orderkey").sortBy("l_orderkey")
-          .option("path", s"$base/lineitem").saveAsTable(lT)
-        (oT, lT)
-      })
+    SessionViews(s, dir, "bstore") {
+      val id = bstoreSeq.incrementAndGet()
+      val base = TempStores.dir("graft-bstore")
+      val oT = s"graft_k7_orders_$id"
+      val lT = s"graft_k7_lineitem_$id"
+      t(s, dir, "orders")
+        .select(col("o_orderkey"), col("o_orderpriority"))
+        .write.bucketBy(16, "o_orderkey").sortBy("o_orderkey")
+        .option("path", s"$base/orders").saveAsTable(oT)
+      t(s, dir, "lineitem")
+        .select(col("l_orderkey"), col("l_quantity"))
+        .write.bucketBy(16, "l_orderkey").sortBy("l_orderkey")
+        .option("path", s"$base/lineitem").saveAsTable(lT)
+      (oT, lT)
+    }
 
   /** K7 — bucketed co-located join (the k6 read-path stance applied to
     * Spark's bucketing lever): a fact-fact join answered FROM the
@@ -2727,18 +2715,15 @@ object CoreQueries {
       |ORDER BY user_id, session_start
       |""".stripMargin))
 
-  private val dstoreMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def dayPartitionedEvents(s: SparkSession, dir: String): String =
-    dstoreMemo.getOrElseUpdate(
-      org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir, {
-        val path = TempStores.dir("graft-daystore") + "/events"
-        t(s, dir, "events")
-          .withColumn("event_date",
-            expr("to_date(timestamp_micros(ts div 1000))"))
-          .write.partitionBy("event_date").parquet(path)
-        path
-      })
+    SessionViews(s, dir, "dstore") {
+      val path = TempStores.dir("graft-daystore") + "/events"
+      t(s, dir, "events")
+        .withColumn("event_date",
+          expr("to_date(timestamp_micros(ts div 1000))"))
+        .write.partitionBy("event_date").parquet(path)
+      path
+    }
 
   /** E8 — date-partitioned event store read path (the k6/k7 stance on
     * the TIME axis): a day-range aggregation answered FROM the

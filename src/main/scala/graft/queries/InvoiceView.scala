@@ -113,28 +113,11 @@ object InvoiceView {
     * ~tens of MB at sf0.1 — at cluster scale this is a `persist` of a
     * dimension-sized view, the standard Spark idiom for cross-query reuse.
     */
-  private val shared = scala.collection.concurrent.TrieMap.empty[String, Unit]
   def ensureShared(s: org.apache.spark.sql.SparkSession, sfDir: String): Unit =
-    shared.getOrElseUpdate(org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + sfDir, {
+    SessionViews(s, sfDir, "invoice") {
       val li = Tables.load(s, sfDir, "lineitem")
-      uniq(li).persist()
-      canonical(li).persist()
-      ()
-    })
-
-  /** Force-materialize the shared views for `sfDir` NOW. `persist()` is
-    * lazy, so without this the build cost lands on whichever query first
-    * touches the cache at that scale — in a benchmark that bills a
-    * random j-family query ~2× its steady-state time (the r7/r9 bench
-    * artifact spread). Benchmarks call this before the timed loop.
-    */
-  def warmShared(s: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
-    ensureShared(s, sfDir)
-    val li = Tables.load(s, sfDir, "lineitem")
-    uniq(li).count()
-    canonical(li).count()
-    ()
-  }
+      Seq(uniq(li).persist(), canonical(li).persist())
+    }
 
   /** Canonicalized invoice rows: cleaning + money/date parsing applied.
     * Output types are the canonical wire types (SURVEY §1.2).

@@ -36,35 +36,6 @@ object PipelineQueries {
     t(s, dir, n).repartition(width, keys.map(col): _*)
   }
 
-  /** Bounded session memo for shared checkpointed frames: at most `cap`
-    * entries, oldest evicted first. Without the bound a long-lived
-    * session benching many (session, scale-dir) pairs pins every
-    * superseded frame's checkpoint blocks in executor storage for the
-    * session's lifetime. Eviction unpersists any cached copies; the
-    * lazily-localCheckpointed RDD blocks themselves are released by the
-    * ContextCleaner once the evicted frame is unreferenced.
-    */
-  private final class BoundedMemo(cap: Int) {
-    private val m = new java.util.LinkedHashMap[String, DataFrame]()
-    def getOrElseUpdate(key: String, build: => DataFrame): DataFrame =
-      synchronized {
-        val hit = m.get(key)
-        if (hit != null) hit
-        else {
-          val v = build // lazy plans only — building never runs a job
-          if (m.size >= cap) {
-            val it = m.entrySet().iterator()
-            val oldest = it.next()
-            it.remove()
-            try oldest.getValue.unpersist()
-            catch { case scala.util.control.NonFatal(_) => () }
-          }
-          m.put(key, v)
-          v
-        }
-      }
-  }
-
   // DuckDB building blocks mirroring TextAnalysis/Dedup ------------------
 
   /** tokens: whitespace split of trimmed text, empties removed. */
@@ -620,28 +591,25 @@ object PipelineQueries {
     * O(paired docs) rows — index-sized, not corpus-sized.
     */
   /** Blocked 3-gram Jaccard pairs of the documents table, memoized per
-    * (session, table) — the [[sigMemo]] materialized-view idiom (r16):
+    * (session, table) — the [[minhashSigs]] materialized-view idiom (r16):
     * d2 reports this frame, [[dupMembers]]'s closure consumes it, and
     * d20 weights medoids with it, so the shingle self-join (the pair
     * family's one corpus-scale computation) runs once per session, not
     * three times. Lazy checkpoint: building a query never runs a job;
     * the frame is O(near-dup pairs) — index-sized.
     */
-  private val jaccMemo = new BoundedMemo(4)
   private def jaccardPairsShared(s: SparkSession, dir: String): DataFrame =
-    jaccMemo.getOrElseUpdate(
-      org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir, {
-        Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text", 3,
-            Seq("lang", "source"))
-          .localCheckpoint(eager = false)
-      })
+    SessionViews(s, dir, "jacc") {
+      Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text", 3,
+          Seq("lang", "source"))
+        .localCheckpoint(eager = false)
+    }
 
-  private val ccMemo = new BoundedMemo(4)
   private def dupMembers(s: SparkSession, dir: String): DataFrame =
-    ccMemo.getOrElseUpdate(org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir, {
+    SessionViews(s, dir, "cc") {
       val pairs = jaccardPairsShared(s, dir).select(col("id1"), col("id2"))
       graft.dedup.DupClusters.connectedComponents(pairs, "id1", "id2")
-    })
+    }
 
   val d7DupClusters = QueryDef("d7_dup_clusters",
     (s, dir) => dupMembers(s, dir)
@@ -750,29 +718,25 @@ object PipelineQueries {
     * shared like [[dupMembers]]' pair graph. Lazy checkpoint: building
     * a query must never run a Spark job.
     */
-  private val sigMemo = new BoundedMemo(4)
   private def minhashSigs(s: SparkSession, dir: String): DataFrame =
-    sigMemo.getOrElseUpdate(
-      org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir, {
-        Dedup.minhashSignatures(
-            t(s, dir, "documents"), "doc_id", "text", 3, 16)
-          .localCheckpoint(eager = false)
-      })
+    SessionViews(s, dir, "sig") {
+      Dedup.minhashSignatures(
+          t(s, dir, "documents"), "doc_id", "text", 3, 16)
+        .localCheckpoint(eager = false)
+    }
 
   /** LSH(4×4) candidate pairs over [[minhashSigs]], memoized per
     * (session, table) — r16: SIX queries (d3, d10, d15, d16, d17, d19)
     * re-ran the identical banding self-join + distinct from the shared
     * signatures; the candidate frame is O(colliding pairs), far smaller
     * than the signature frame, so one lazy-checkpointed materialization
-    * serves them all (the [[sigMemo]] idiom one level up).
+    * serves them all (the [[minhashSigs]] idiom one level up).
     */
-  private val lshCandMemo = new BoundedMemo(4)
   private def lshCandsShared(s: SparkSession, dir: String): DataFrame =
-    lshCandMemo.getOrElseUpdate(
-      org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir, {
-        Dedup.lshCandidatePairs(minhashSigs(s, dir), "doc_id", "sig", 4, 4)
-          .localCheckpoint(eager = false)
-      })
+    SessionViews(s, dir, "lshCand") {
+      Dedup.lshCandidatePairs(minhashSigs(s, dir), "doc_id", "sig", 4, 4)
+        .localCheckpoint(eager = false)
+    }
 
   val d3MinhashLsh = QueryDef("d3_minhash_lsh",
     (s, dir) => lshCandsShared(s, dir).orderBy(col("id1"), col("id2")),
@@ -1324,17 +1288,15 @@ object PipelineQueries {
   /** Trained centroids memoized per (session, dir): training runs
     * `iterations + 1` small jobs (the smallest-id init collect plus one
     * assign+mean pass per round), so it happens once per session, not
-    * once per query build. The memo holds k × dims longs — no
-    * checkpoint blocks to pin, a plain map is enough.
+    * once per query build. The entry holds k × dims longs — no
+    * checkpoint blocks to pin.
     */
-  private val centMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Int, Seq[Long])]]
   private def trainedCents(s: SparkSession, dir: String): Seq[(Int, Seq[Long])] =
-    centMemo.getOrElseUpdate(
-      org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir,
+    SessionViews(s, dir, "cent") {
       Similarity.trainIvfCentroids(t(s, dir, "embeddings"), "vec_id",
         "embedding",
-        Similarity.scaledCentroids(Tables.rowCount(s, dir, "embeddings"))))
+        Similarity.scaledCentroids(Tables.rowCount(s, dir, "embeddings")))
+    }
 
   /** Oracle for the trained-IVF path: replays
     * [[Similarity.trainIvfCentroids]] exactly — deterministic
@@ -1429,16 +1391,13 @@ object PipelineQueries {
     * [[ivfIndexDir]] but with the k-means centroids — the layout the
     * FULL production path serves from.
     */
-  private val trainedIdxMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def trainedIndexDir(s: SparkSession, dir: String): String =
-    trainedIdxMemo.getOrElseUpdate(
-      org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir, {
-        val path = TempStores.dir("graft-ivf-trained") + "/index"
-        Similarity.writeIvfIndex(t(s, dir, "embeddings"), "vec_id",
-          "embedding", path, trainedCents(s, dir))
-        path
-      })
+    SessionViews(s, dir, "trainedIdx") {
+      val path = TempStores.dir("graft-ivf-trained") + "/index"
+      Similarity.writeIvfIndex(t(s, dir, "embeddings"), "vec_id",
+        "embedding", path, trainedCents(s, dir))
+      path
+    }
 
   /** S7 — the COMPLETE production serving path in one gate row:
     * k-means-trained centroids ([[Similarity.trainIvfCentroids]]),
@@ -1468,18 +1427,15 @@ object PipelineQueries {
     * durable layout a 100 TB deployment would keep for years. Memoized
     * so bench iterations re-SERVE, not re-build.
     */
-  private val idxMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def ivfIndexDir(s: SparkSession, dir: String): String =
-    idxMemo.getOrElseUpdate(
-      org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir, {
-        val path = TempStores.dir("graft-ivf-index") + "/index"
-        Similarity.writeIvfIndex(t(s, dir, "embeddings"), "vec_id",
-          "embedding", path,
-          Similarity.ivfCentroids(Similarity.scaledCentroids(
-            Tables.rowCount(s, dir, "embeddings")), 64))
-        path
-      })
+    SessionViews(s, dir, "idx") {
+      val path = TempStores.dir("graft-ivf-index") + "/index"
+      Similarity.writeIvfIndex(t(s, dir, "embeddings"), "vec_id",
+        "embedding", path,
+        Similarity.ivfCentroids(Similarity.scaledCentroids(
+          Tables.rowCount(s, dir, "embeddings")), 64))
+      path
+    }
 
   /** S6 — IVF ANN served FROM THE PERSISTED INDEX: centroids reloaded
     * from the sidecar, corpus read from the `centroid_id=` partition
@@ -2011,17 +1967,14 @@ object PipelineQueries {
     * Memoized per (session, dir) so bench iterations probe, not rebuild
     * (the s6/k6/k7 pattern).
     */
-  private val lshStoreMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def lshStoreDir(s: SparkSession, dir: String): String =
-    lshStoreMemo.getOrElseUpdate(
-      org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir, {
-        val path = TempStores.dir("graft-lshstore") + "/index"
-        graft.dedup.LshIndex.writeLshIndex(
-          t(s, dir, "documents").filter(col("doc_id") % 3 =!= 0),
-          "doc_id", "text", path)
-        path
-      })
+    SessionViews(s, dir, "lshStore") {
+      val path = TempStores.dir("graft-lshstore") + "/index"
+      graft.dedup.LshIndex.writeLshIndex(
+        t(s, dir, "documents").filter(col("doc_id") % 3 =!= 0),
+        "doc_id", "text", path)
+      path
+    }
 
   /** D14 — LSH index SERVING path (the s6/s7 stance applied to dedup):
     * near-dup candidates of an incoming batch answered FROM the
@@ -2081,21 +2034,18 @@ object PipelineQueries {
     * so the gated store is the probe-then-append loop's final state,
     * not a one-shot build.
     */
-  private val lshAccretedMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def lshAccretedDir(s: SparkSession, dir: String): String =
-    lshAccretedMemo.getOrElseUpdate(
-      org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir, {
-        val path = TempStores.dir("graft-lshaccr") + "/index"
-        val corpus = t(s, dir, "documents").filter(col("doc_id") % 3 =!= 0)
-        graft.dedup.LshIndex.writeLshIndex(
-          corpus.filter(col("doc_id") % 5 < 2), "doc_id", "text", path)
-        graft.dedup.LshIndex.appendToLshIndex(
-          corpus.filter(col("doc_id") % 5 === 2), "doc_id", "text", path)
-        graft.dedup.LshIndex.appendToLshIndex(
-          corpus.filter(col("doc_id") % 5 > 2), "doc_id", "text", path)
-        path
-      })
+    SessionViews(s, dir, "lshAccreted") {
+      val path = TempStores.dir("graft-lshaccr") + "/index"
+      val corpus = t(s, dir, "documents").filter(col("doc_id") % 3 =!= 0)
+      graft.dedup.LshIndex.writeLshIndex(
+        corpus.filter(col("doc_id") % 5 < 2), "doc_id", "text", path)
+      graft.dedup.LshIndex.appendToLshIndex(
+        corpus.filter(col("doc_id") % 5 === 2), "doc_id", "text", path)
+      graft.dedup.LshIndex.appendToLshIndex(
+        corpus.filter(col("doc_id") % 5 > 2), "doc_id", "text", path)
+      path
+    }
 
   /** D21 — incremental-ingest LSH index state under the oracle: the
     * index is built the way the streaming probe-then-append loop builds
@@ -2251,18 +2201,15 @@ object PipelineQueries {
     * serializes one reducer in the layout job; the t19-shape oracle below
     * deliberately replays the STRAIGHTFORWARD single-window arithmetic.
     */
-  private val shardStoreMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def shardStoreDir(s: SparkSession, dir: String): String =
-    shardStoreMemo.getOrElseUpdate(
-      org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir, {
-        val path = TempStores.dir("graft-shardstore") + "/shards"
-        graft.pipeline.ShardPacking.writeShards(
-          t(s, dir, "documents"), "lang", "doc_id",
-          TextAnalysis.tokenCount(col("text")).cast("long"), budget = 512L,
-          path = path, buckets = 8)
-        path
-      })
+    SessionViews(s, dir, "shardStore") {
+      val path = TempStores.dir("graft-shardstore") + "/shards"
+      graft.pipeline.ShardPacking.writeShards(
+        t(s, dir, "documents"), "lang", "doc_id",
+        TextAnalysis.tokenCount(col("text")).cast("long"), budget = 512L,
+        path = path, buckets = 8)
+      path
+    }
 
   /** T21 — the shard store READ path: the per-shard manifest recomputed
     * FROM the materialized layout (directory-partition columns and all)
@@ -5259,24 +5206,21 @@ object PipelineQueries {
     * — the incremental ingest path, not a one-shot build — so the gate
     * probes the store a long-lived pipeline would actually have.
     */
-  private val vecStoreMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def vecStoreDir(s: SparkSession, dir: String): String =
-    vecStoreMemo.getOrElseUpdate(
-      org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir, {
-        val path = TempStores.dir("graft-vecstore") + "/vidx"
-        val emb = t(s, dir, "embeddings")
-        VecIndex.writeVecIndex(emb.filter(col("vec_id") % 3 === 0),
-          "vec_id", "embedding", path, bands = 8,
-          bitsPerBand =
-            Similarity.scaledBits(Tables.rowCount(s, dir, "embeddings")),
-          nBuckets = 64)
-        VecIndex.appendToVecIndex(emb.filter(col("vec_id") % 3 === 1),
-          "vec_id", "embedding", path)
-        VecIndex.appendToVecIndex(emb.filter(col("vec_id") % 3 === 2),
-          "vec_id", "embedding", path)
-        path
-      })
+    SessionViews(s, dir, "vecstore") {
+      val path = TempStores.dir("graft-vecstore") + "/vidx"
+      val emb = t(s, dir, "embeddings")
+      VecIndex.writeVecIndex(emb.filter(col("vec_id") % 3 === 0),
+        "vec_id", "embedding", path, bands = 8,
+        bitsPerBand =
+          Similarity.scaledBits(Tables.rowCount(s, dir, "embeddings")),
+        nBuckets = 64)
+      VecIndex.appendToVecIndex(emb.filter(col("vec_id") % 3 === 1),
+        "vec_id", "embedding", path)
+      VecIndex.appendToVecIndex(emb.filter(col("vec_id") % 3 === 2),
+        "vec_id", "embedding", path)
+      path
+    }
 
   /** The int8-codec twin of [[vecStoreDir]]: identical accretion
     * protocol (bootstrap third + two appends through the stored meta),
@@ -5289,22 +5233,20 @@ object PipelineQueries {
     * the milli store.
     */
   private def vecStore8Dir(s: SparkSession, dir: String): String =
-    vecStoreMemo.getOrElseUpdate(
-      org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir
-        + "|int8", {
-        val path = TempStores.dir("graft-vecstore8") + "/vidx"
-        val emb = t(s, dir, "embeddings")
-        VecIndex.writeVecIndex(emb.filter(col("vec_id") % 3 === 0),
-          "vec_id", "embedding", path, bands = 8,
-          bitsPerBand =
-            Similarity.scaledBits(Tables.rowCount(s, dir, "embeddings")),
-          nBuckets = 64, codec = "int8")
-        VecIndex.appendToVecIndex(emb.filter(col("vec_id") % 3 === 1),
-          "vec_id", "embedding", path)
-        VecIndex.appendToVecIndex(emb.filter(col("vec_id") % 3 === 2),
-          "vec_id", "embedding", path)
-        path
-      })
+    SessionViews(s, dir, "vecstore8") {
+      val path = TempStores.dir("graft-vecstore8") + "/vidx"
+      val emb = t(s, dir, "embeddings")
+      VecIndex.writeVecIndex(emb.filter(col("vec_id") % 3 === 0),
+        "vec_id", "embedding", path, bands = 8,
+        bitsPerBand =
+          Similarity.scaledBits(Tables.rowCount(s, dir, "embeddings")),
+        nBuckets = 64, codec = "int8")
+      VecIndex.appendToVecIndex(emb.filter(col("vec_id") % 3 === 1),
+        "vec_id", "embedding", path)
+      VecIndex.appendToVecIndex(emb.filter(col("vec_id") % 3 === 2),
+        "vec_id", "embedding", path)
+      path
+    }
 
   /** The int8 code space as a CTE over [[qSql]]'s milli-unit `qv` —
     * the same expression [[graft.similarity.Similarity.int8FromMilli]]
@@ -5721,16 +5663,13 @@ object PipelineQueries {
     * sf): the sidecar write is the one-off index build the serving
     * path amortizes.
     */
-  private val pqStoreMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def pqStoreDir(s: SparkSession, dir: String): String =
-    pqStoreMemo.getOrElseUpdate(
-      org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir, {
-        val path = vecStoreDir(s, dir)
-        VecIndex.writePqSidecar(s, path, m = 16, kCodes = 256,
-          iterations = 2, trainMod = 5L)
-        path
-      })
+    SessionViews(s, dir, "pq") {
+      val path = vecStoreDir(s, dir)
+      VecIndex.writePqSidecar(s, path, m = 16, kCodes = 256,
+        iterations = 2, trainMod = 5L)
+      path
+    }
 
   /** S30 — the PQ serving tier END-TO-END through the persisted store
     * ([[VecIndex.annProbeVecIndex]]): s29 measured the m=16,k=256
@@ -6800,24 +6739,21 @@ object PipelineQueries {
     * therefore proves accretion ≡ one-shot AND replay-idempotence in
     * one oracle row.
     */
-  private val hllStoreMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def hllStoreDir(s: SparkSession, dir: String): String =
-    hllStoreMemo.getOrElseUpdate(
-      org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir, {
-        val path = TempStores.dir("graft-hllstore") + "/hidx"
-        val docs = t(s, dir, "documents")
-        graft.sketch.HllStore.write(docs.filter(col("doc_id") % 3 === 0),
-          Seq("source"), "text", path)
-        graft.sketch.HllStore.append(docs.filter(col("doc_id") % 3 === 1),
-          path)
-        graft.sketch.HllStore.append(docs.filter(col("doc_id") % 3 === 2),
-          path)
-        // the replayed batch: at-least-once ingest, must change nothing
-        graft.sketch.HllStore.append(docs.filter(col("doc_id") % 3 === 1),
-          path)
-        path
-      })
+    SessionViews(s, dir, "hll") {
+      val path = TempStores.dir("graft-hllstore") + "/hidx"
+      val docs = t(s, dir, "documents")
+      graft.sketch.HllStore.write(docs.filter(col("doc_id") % 3 === 0),
+        Seq("source"), "text", path)
+      graft.sketch.HllStore.append(docs.filter(col("doc_id") % 3 === 1),
+        path)
+      graft.sketch.HllStore.append(docs.filter(col("doc_id") % 3 === 2),
+        path)
+      // the replayed batch: at-least-once ingest, must change nothing
+      graft.sketch.HllStore.append(docs.filter(col("doc_id") % 3 === 1),
+        path)
+      path
+    }
 
   /** A16 — accreted HLL register store ([[graft.sketch.HllStore]]): the
     * a15 profiler's registers PERSISTED per source so incremental
@@ -6866,34 +6802,31 @@ object PipelineQueries {
     * time — the at-least-once replay the distinct-union algebra must
     * absorb for free.
     */
-  private val kmvStoreMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private val kmvProfileCols = Seq("l_orderkey", "l_partkey",
     "l_suppkey", "l_linenumber", "l_quantity", "l_extendedprice",
     "l_discount", "l_tax")
   private def kmvStoreDir(s: SparkSession, dir: String): String =
-    kmvStoreMemo.getOrElseUpdate(
-      org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir, {
-        val path = TempStores.dir("graft-kmvstore") + "/kidx"
-        val li = t(s, dir, "lineitem")
-        // cast-to-string BEFORE the stack: hash40's own cast of the
-        // raw column hashes the identical rendering, so the store's
-        // minima are bit-equal to a12's per-column k-minima
-        def unpivot(df: org.apache.spark.sql.DataFrame) =
-          df.select(expr("stack(" + kmvProfileCols.size + ", " +
-            kmvProfileCols.map(c => s"'$c', cast($c as string)")
-              .mkString(", ") + ") as (column_name, val)"))
-        graft.sketch.KmvStore.write(unpivot(li.filter(col("l_orderkey") % 3 === 0)),
-          Seq("column_name"), "val", 256, path)
-        graft.sketch.KmvStore.append(unpivot(li.filter(col("l_orderkey") % 3 === 1)),
-          path)
-        graft.sketch.KmvStore.append(unpivot(li.filter(col("l_orderkey") % 3 === 2)),
-          path)
-        // the replayed batch: at-least-once ingest, must change nothing
-        graft.sketch.KmvStore.append(unpivot(li.filter(col("l_orderkey") % 3 === 1)),
-          path)
-        path
-      })
+    SessionViews(s, dir, "kmv") {
+      val path = TempStores.dir("graft-kmvstore") + "/kidx"
+      val li = t(s, dir, "lineitem")
+      // cast-to-string BEFORE the stack: hash40's own cast of the
+      // raw column hashes the identical rendering, so the store's
+      // minima are bit-equal to a12's per-column k-minima
+      def unpivot(df: org.apache.spark.sql.DataFrame) =
+        df.select(expr("stack(" + kmvProfileCols.size + ", " +
+          kmvProfileCols.map(c => s"'$c', cast($c as string)")
+            .mkString(", ") + ") as (column_name, val)"))
+      graft.sketch.KmvStore.write(unpivot(li.filter(col("l_orderkey") % 3 === 0)),
+        Seq("column_name"), "val", 256, path)
+      graft.sketch.KmvStore.append(unpivot(li.filter(col("l_orderkey") % 3 === 1)),
+        path)
+      graft.sketch.KmvStore.append(unpivot(li.filter(col("l_orderkey") % 3 === 2)),
+        path)
+      // the replayed batch: at-least-once ingest, must change nothing
+      graft.sketch.KmvStore.append(unpivot(li.filter(col("l_orderkey") % 3 === 1)),
+        path)
+      path
+    }
 
   /** A17 — accreted KMV minima store ([[graft.sketch.KmvStore]]): the
     * a12 sketch profiler's k-minima PERSISTED per column so
@@ -6936,27 +6869,24 @@ object PipelineQueries {
     * replay of the FOLDED batch b1 — the at-least-once case a sum
     * store must drop via the tag, since re-summing would double-count.
     */
-  private val cmsStoreMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def cmsStoreDir(s: SparkSession, dir: String): String =
-    cmsStoreMemo.getOrElseUpdate(
-      org.apache.spark.sql.GraftSqlBridge.sessionKey(s) + "|" + dir, {
-        val path = TempStores.dir("graft-cmsstore") + "/cidx"
-        def toks(m: Long) = t(s, dir, "documents")
-          .filter(col("doc_id") % 3 === m)
-          .select(col("source"),
-            explode(TextAnalysis.tokens(col("text"))).as("token"))
-        graft.sketch.CmsStore.write(toks(0), Seq("source"), "token",
-          4, 512, "b0", path)
-        graft.sketch.CmsStore.append(toks(1), "b1", path)
-        // fold b0+b1: the folded grid's tag (F:b0,b1) IS the ledger
-        graft.sketch.CmsStore.compact(s, path)
-        graft.sketch.CmsStore.append(toks(2), "b2", path)
-        // the replayed FOLDED batch: must be dropped by the tag —
-        // sum-merge would double-count it, unlike a16/a17's algebras
-        graft.sketch.CmsStore.append(toks(1), "b1", path)
-        path
-      })
+    SessionViews(s, dir, "cms") {
+      val path = TempStores.dir("graft-cmsstore") + "/cidx"
+      def toks(m: Long) = t(s, dir, "documents")
+        .filter(col("doc_id") % 3 === m)
+        .select(col("source"),
+          explode(TextAnalysis.tokens(col("text"))).as("token"))
+      graft.sketch.CmsStore.write(toks(0), Seq("source"), "token",
+        4, 512, "b0", path)
+      graft.sketch.CmsStore.append(toks(1), "b1", path)
+      // fold b0+b1: the folded grid's tag (F:b0,b1) IS the ledger
+      graft.sketch.CmsStore.compact(s, path)
+      graft.sketch.CmsStore.append(toks(2), "b2", path)
+      // the replayed FOLDED batch: must be dropped by the tag —
+      // sum-merge would double-count it, unlike a16/a17's algebras
+      graft.sketch.CmsStore.append(toks(1), "b1", path)
+      path
+    }
 
   /** A18 — accreted CMS frequency store ([[graft.sketch.CmsStore]]):
     * the t14 Count-Min grid PERSISTED per source so incremental

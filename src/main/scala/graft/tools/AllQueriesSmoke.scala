@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Executes every SparkEntry query at the given sf dir (default the
   * bench scale) and FAILS LOUDLY on any exception — Bench's timing loop
@@ -10,15 +10,7 @@ import org.apache.spark.sql.SparkSession
 object AllQueriesSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      // NTZ ts -> epoch normalization (Tables.load) casts through the
-      // session time zone; an unpinned JVM-default TZ would silently
-      // shift every event-time bucket on non-UTC machines
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(8, 8)
     spark.sparkContext.setLogLevel("ERROR")
     var failed = 0
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.queries.Tables
 import graft.similarity.Similarity
 
@@ -19,11 +19,7 @@ object GraphRecallProbe {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val bandsList =
       if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(8, 12, 16)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(32, 32)
     spark.sparkContext.setLogLevel("WARN")
     val emb = Tables.load(spark, sfDir, "embeddings")
     val bits = Similarity.scaledBits(Tables.rowCount(spark, sfDir, "embeddings"))

@@ -2,8 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.pipeline.ConsolidationPipeline
 import graft.streaming.ConsolidationStream
 
@@ -12,11 +11,7 @@ import graft.streaming.ConsolidationStream
   */
 object PipelineSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(4, 4)
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = Files.createTempDirectory("graft-smoke")

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.queries.Tables
 import graft.similarity.Similarity
 
@@ -29,11 +28,7 @@ object PqLadderProbe {
         val Array(m, k, tm) = s.split(":"); (m.toInt, k.toInt, tm.toLong)
       }
       else Seq((8, 16, 1L), (8, 256, 5L), (16, 256, 5L), (16, 16, 1L))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(32, 32)
     spark.sparkContext.setLogLevel("WARN")
     val emb = Tables.load(spark, sfDir, "embeddings")
     points.foreach { case (m, kCodes, trainMod) =>

@@ -1,9 +1,10 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable.ArrayBuffer
+
+import graft.GraftSession
 
 /** Dev utility: per-stage profile of ONE named query — wall clock,
   * task count, max/total task time, input + shuffle bytes. Pinpoints
@@ -19,16 +20,7 @@ object StageProfile {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_COALESCE", "1m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(32, 32)
     spark.sparkContext.setLogLevel("WARN")
 
     val rows = ArrayBuffer.empty[StageRow]

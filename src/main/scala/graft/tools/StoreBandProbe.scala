@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.queries.Tables
 import graft.similarity.{Similarity, VecIndex}
 
@@ -26,11 +26,7 @@ object StoreBandProbe {
     val bandCounts =
       if (args.length > 1) args.drop(1).toSeq.map(_.toInt)
       else Seq(8, 16, 24)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(32, 32)
     spark.sparkContext.setLogLevel("WARN")
     val emb = Tables.load(spark, sfDir, "embeddings")
     val bits = Similarity.scaledBits(emb.count())

@@ -1,0 +1,45 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Keeps the session-state policies in one place each: the session key
+  * is built only by the session-view registry, no query file grows its
+  * own concurrent map (the immutable-path row-count cache aside), and
+  * only [[GraftSession]] builds a SparkSession.
+  */
+class SourceGuardSpec extends AnyFunSuite {
+
+  private val root = Paths.get("src/main/scala")
+
+  /** (file, line number) of every line under `dir` containing `needle`. */
+  private def hits(dir: Path, needle: String): Seq[(String, Int)] = {
+    val files = Files.walk(dir).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains(needle)
+    } yield (root.relativize(f).toString, i + 1)
+  }
+
+  test("only SessionViews builds a session key") {
+    val found = hits(root.resolve("graft"), "GraftSqlBridge.sessionKey(")
+    assert(found.map(_._1).distinct == Seq("graft/queries/SessionViews.scala"), found)
+  }
+
+  test("the only TrieMap in graft/queries is Tables.rowCounts") {
+    val found = hits(root.resolve("graft/queries"), "TrieMap")
+    assert(found.size == 1 && found.head._1 == "graft/queries/QueryDef.scala", found)
+    val line = Files.readAllLines(root.resolve(found.head._1)).get(found.head._2 - 1)
+    assert(line.contains("rowCounts"), line)
+  }
+
+  test("only GraftSession calls SparkSession.builder()") {
+    val found = hits(root, "SparkSession.builder()")
+    assert(found.map(_._1) == Seq("graft/GraftSession.scala"), found)
+  }
+}
