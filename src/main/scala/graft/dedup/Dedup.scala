@@ -647,15 +647,6 @@ object Dedup {
 
   // ---------------------------------------------------------- n-gram jaccard
 
-  /** Exact n-gram Jaccard similarity in parts-per-million (integer — engine
-    * exact): `10^6 * |A ∩ B| / |A ∪ B|` over distinct word n-grams.
-    */
-  def jaccardPpm(shingles1: Column, shingles2: Column): Column = {
-    val inter = size(array_intersect(shingles1, shingles2))
-    val union = size(array_union(shingles1, shingles2))
-    when(union > 0, floor(inter.cast("long") * 1000000L / union)).otherwise(0L)
-  }
-
   /** Document-frequency cap on an exploded posting table: drop every
     * posting whose term appears in more than `maxDf` documents (within
     * its key group). The inverted-index self-join is linear in

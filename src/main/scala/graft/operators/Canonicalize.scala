@@ -68,11 +68,4 @@ object Canonicalize {
       .filter(col("__first_stop").isNull || ordinal < col("__first_stop"))
       .drop("__first_stop")
   }
-
-  /** P7 — processing-metadata projection: lineage file name + processing
-    * timestamp (transformers.py:38-39).
-    */
-  def withMetadata(df: DataFrame): DataFrame =
-    df.withColumn("source_file", input_file_name())
-      .withColumn("processed_at", current_timestamp())
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.domain.{InvoiceRecord, RecordAction}
 import graft.operators.{Merge, Reconcile, Validate}
-import graft.sources.{OfficialFormatExtract, StagedWorkbook}
+import graft.sources.{OfficialFormatExtract, SchemaValidationException, StagedWorkbook, XlsxIngress}
 
 /** The end-to-end consolidation "query" (reference: smartbots-etl/src/
   * application/use_cases/consolidate_invoices.py:45-233) over a local
@@ -65,10 +65,6 @@ object ConsolidationPipeline {
     extends RuntimeException(
       s"Fallo al escribir el consolidado procesando '$fileName'; " +
         "respaldo pre-ejecución restaurado", cause)
-
-  final case class SchemaValidationException(missing: Seq[String], extra: Seq[String])
-    extends RuntimeException(
-      s"Columnas faltantes: ${missing.mkString(", ")}; extra: ${extra.mkString(", ")}")
 
   /** One run. Returns the report; writes audit + consolidated as side
     * effects. Missing consolidated store → ERROR (mirrors the reference's
@@ -247,37 +243,16 @@ object ConsolidationPipeline {
       fStart: Timestamp, path: Path): Report.FileOutcome = {
 
     // S3: stage by format — real Excel bytes via the dependency-free
-    // XLSX reader, staged CSV workbooks via the CSV reader
+    // XLSX reader, staged CSV workbooks via the CSV reader; extract() owns
+    // the format decision and the schema pre-flight (S3-S5)
     val sheet =
-      if (path.toString.endsWith(".xlsx"))
-        graft.sources.XlsxIngress.stage(spark, path.toString)
+      if (path.toString.endsWith(".xlsx")) XlsxIngress.stage(spark, path.toString)
       else StagedWorkbook.fromCsv(spark, path.toString)
-    val fc = StagedWorkbook.fixedCells(sheet)
-    val headerRow =
-      if (StagedWorkbook.isMixedFormat(fc))
-        StagedWorkbook.discoverHeaderRow(sheet, "Órdenes de Embarque",
-          OfficialFormatExtract.MixedKnownHeaders)
-      else
-        StagedWorkbook.discoverHeaderRow(sheet, "N° Factura",
-          OfficialFormatExtract.SimpleColumns.toSet)
-    val detail = StagedWorkbook.table(sheet, headerRow)
-
-    // schema pre-flight (S3/SchemaValidationError)
-    val required =
-      if (StagedWorkbook.isMixedFormat(fc)) Seq("Órdenes de Embarque")
-      else Seq("N° Factura", "N° Referencia", "Transportista", "Monto Total")
-    val (ok, missing, extra) =
-      StagedWorkbook.validateSchema(detail.columns.toSeq, required)
-    if (!ok) throw SchemaValidationException(missing, extra)
-
-    val extracted =
-      (if (StagedWorkbook.isMixedFormat(fc))
-        OfficialFormatExtract.mixedFormat(detail, fc, cfg.dateFormat)
-      else OfficialFormatExtract.simpleTabular(detail, cfg.dateFormat))
-        .withColumn("source_file", lit(fileName))
-        .withColumn("processed_at", current_timestamp())
-        .withColumn("status", lit("new"))
-        .localCheckpoint() // small per-file batch; avoids re-extraction per action
+    val extracted = OfficialFormatExtract.extract(sheet, cfg.dateFormat)
+      .withColumn("source_file", lit(fileName))
+      .withColumn("processed_at", current_timestamp())
+      .withColumn("status", lit("new"))
+      .localCheckpoint() // small per-file batch; avoids re-extraction per action
 
     val split = Validate.split(extracted)
     val valid = split.valid.localCheckpoint()

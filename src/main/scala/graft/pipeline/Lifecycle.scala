@@ -18,18 +18,6 @@ final class Lifecycle(baseDir: String, now: () => LocalDateTime = () => LocalDat
   val backupRoot: Path = Paths.get(baseDir, "Respaldo")
   private var backupDir: Option[Path] = None
 
-  /** S12 — clean (or create) a scratch dir before each run
-    * (consolidate_invoices.py:162-180).
-    */
-  def cleanDownloads(dir: String): Unit = {
-    val p = Paths.get(dir)
-    if (Files.exists(p))
-      scala.util.Using.resource(Files.list(p))(
-        _.iterator().asScala.filter(Files.isRegularFile(_))
-          .foreach(Files.delete))
-    else Files.createDirectories(p)
-  }
-
   /** S10 — timestamped backup folder `Respaldo/yyyy-MM-dd/HH.mm.ss/` for
     * this run (file_lifecycle_manager.py:49-72).
     */

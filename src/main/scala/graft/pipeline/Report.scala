@@ -26,7 +26,6 @@ object Report {
     def unchanged: Long = files.map(_.unchanged).sum
     def errors: Long = files.map(_.rowsError).sum
     def amountVariance: BigDecimal = (sourceTotal - outputTotal).abs
-    def hasErrors: Boolean = failedFiles > 0 || status == "ERROR"
   }
 
   /** A5 — status roll-up (consolidate_invoices.py:92-100,140-145). */

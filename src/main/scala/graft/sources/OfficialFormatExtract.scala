@@ -22,7 +22,11 @@ import graft.operators.Canonicalize
   *
   * Output schema (both paths): row_index, invoice_number, reference_number,
   * carrier_name, ship_name, dispatch_guides, invoice_date, description,
-  * net_amount, tax_amount, total_amount, currency, aprobado_por.
+  * net_amount, tax_amount, total_amount, currency, aprobado_por. Both paths
+  * return one partition per file: the staged sheet is a local relation
+  * that Spark would otherwise split across every core, and each extra
+  * partition adds a task to every downstream per-file job (validate,
+  * merge, audit).
   */
 object OfficialFormatExtract {
 
@@ -71,6 +75,7 @@ object OfficialFormatExtract {
       total.as("total_amount"),
       lit("CLP").as("currency"),
       lit(fc.responsable.map(stripAprobado).orNull).as("aprobado_por"))
+      .coalesce(1)
   }
 
   private def stripAprobado(s: String): String =
@@ -82,15 +87,17 @@ object OfficialFormatExtract {
 
   /** Simple-tabular extraction: direct mapping with the P5 take-while at
     * the first empty `N° Factura` (row order by `row_index`; the whole file
-    * is one take-while partition). NaN/blank money → 0 for net/tax
+    * is one take-while partition, so its first stop row is a driver read
+    * of the staged table). NaN/blank money → 0 for net/tax
     * (transformers.py:16-18), total parsed strictly.
     */
   def simpleTabular(detail: DataFrame,
       dateFormat: String = "dd-MM-yyyy"): DataFrame = {
-    val stopped = Canonicalize.takeWhile(detail,
-      cOpt(detail, "N° Factura").isNull ||
-        trim(cOpt(detail, "N° Factura")) === "",
-      col("row_index"), Seq(lit(1)))
+    val firstStop = detail
+      .filter(cOpt(detail, "N° Factura").isNull ||
+        trim(cOpt(detail, "N° Factura")) === "")
+      .select("row_index").collect().map(_.getInt(0)).minOption
+    val stopped = firstStop.fold(detail)(s => detail.filter(col("row_index") < s))
     val nonEmpty = Canonicalize.dropFullyEmpty(stopped,
       detail.columns.filterNot(_ == "row_index").toSeq)
     nonEmpty.select(
@@ -110,21 +117,37 @@ object OfficialFormatExtract {
       upper(coalesce(nullif(clean_string(cOpt(nonEmpty, "Moneda")), lit("")),
         lit("CLP"))).as("currency"),
       lit(null).cast("string").as("aprobado_por"))
+      .coalesce(1)
   }
 
   /** Full per-file extraction: fixed cells → format detect → header
-    * discovery → the matching path. Mirrors `extract()` :91-125.
+    * discovery → schema pre-flight → the matching path. Mirrors
+    * `extract()` :91-125. Throws [[SchemaValidationException]] when the
+    * detail table lacks a column its format requires.
     */
   def extract(sheet: DataFrame, dateFormat: String = "dd-MM-yyyy"): DataFrame = {
     val fc = StagedWorkbook.fixedCells(sheet)
-    if (StagedWorkbook.isMixedFormat(fc)) {
-      val headerRow = StagedWorkbook.discoverHeaderRow(
+    val mixed = StagedWorkbook.isMixedFormat(fc)
+    val headerRow =
+      if (mixed) StagedWorkbook.discoverHeaderRow(
         sheet, "Órdenes de Embarque", MixedKnownHeaders)
-      mixedFormat(StagedWorkbook.table(sheet, headerRow), fc, dateFormat)
-    } else {
-      val headerRow = StagedWorkbook.discoverHeaderRow(
-        sheet, "N° Factura", SimpleColumns.toSet)
-      simpleTabular(StagedWorkbook.table(sheet, headerRow), dateFormat)
-    }
+      else StagedWorkbook.discoverHeaderRow(sheet, "N° Factura", SimpleColumns.toSet)
+    val detail = StagedWorkbook.table(sheet, headerRow)
+
+    // schema pre-flight (excel_handler.py:168-183)
+    val required =
+      if (mixed) Seq("Órdenes de Embarque")
+      else Seq("N° Factura", "N° Referencia", "Transportista", "Monto Total")
+    val (ok, missing, extra) =
+      StagedWorkbook.validateSchema(detail.columns.toSeq, required)
+    if (!ok) throw SchemaValidationException(missing, extra)
+
+    if (mixed) mixedFormat(detail, fc, dateFormat)
+    else simpleTabular(detail, dateFormat)
   }
 }
+
+/** A workbook's detail table lacks a column its format requires. */
+final case class SchemaValidationException(missing: Seq[String], extra: Seq[String])
+  extends RuntimeException(
+    s"Columnas faltantes: ${missing.mkString(", ")}; extra: ${extra.mkString(", ")}")

@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -7,9 +9,17 @@ import org.apache.spark.sql.types._
 /** Staged-workbook ingestion — the Spark-side model of the reference's
   * Excel reading layer (reference: smartbots-etl/src/infrastructure/
   * official_format_extractor.py, excel_handler.py). A "sheet" is staged as
-  * raw rows: `(_row_num: 1-indexed physical row, cells: array<string>)` —
-  * the Excel→staging conversion itself (XLSX bytes → rows) is an ingress
-  * formatter outside the engine, exactly as the egress Excel rendering is.
+  * raw rows: `(_row_num: 1-indexed physical row, cells: array<string>)`;
+  * the Excel→staging conversion itself (XLSX bytes → rows) is
+  * [[XlsxIngress]], as the egress Excel rendering is [[XlsxEgress]].
+  *
+  * Scale posture: one workbook is a FILE-SIZED driver-side artifact, read
+  * once, as the reference reads it (official_format_extractor.py:91-125).
+  * Every staging path ends in [[fromRows]], so a sheet is a local relation:
+  * the fixed cells (S5), header discovery (S4) and the header names of
+  * [[table]] are served from it on the driver without a Spark job
+  * (Catalyst's `ConvertToLocalRelation` folds their filter and projection
+  * into the relation). The extracted DATA path stays distributed.
   *
   * Order-dependent semantics (header discovery S4, fixed cells S5,
   * take-while P5) key off `_row_num`, never off DataFrame order.
@@ -20,65 +30,35 @@ object StagedWorkbook {
     StructField("_row_num", IntegerType, nullable = false),
     StructField("cells", ArrayType(StringType), nullable = false)))
 
-  /** Stage a headerless CSV file as raw sheet rows (driver-side staging of
-    * one workbook file — files are small; the DATA path stays distributed).
+  /** Stage a headerless CSV file as raw sheet rows: one read, collected on
+    * the driver. Rows are numbered by their position in the reader's output
+    * (file order) and carry the reader's 64 cells each.
     */
   def fromCsv(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read
+    val rows = spark.read
       .option("header", "false")
       .option("quote", "\"")
       .option("escape", "\"")
       .schema(StructType((0 until 64).map(i =>
         StructField(s"_c$i", StringType))))
       .csv(path)
-    val cellCols = df.columns.toIndexedSeq.map(col)
-    df.withColumn("cells", array(cellCols: _*))
-      .withColumn("_row_num",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(monotonically_increasing_id())).cast("int"))
-      .select("_row_num", "cells")
+      .collect()
+    fromRows(spark, rows.toSeq.map(r => (0 until r.length).map(r.getString)))
   }
 
-  /** Stage a whole DIRECTORY of headerless CSV workbooks in one read:
-    * rows carry `source_file` and a per-file `_row_num` from a window
-    * partitioned by file — unlike [[fromCsv]]'s single global window,
-    * this parallelizes across files (one sort partition per file, skew
-    * bounded by the largest workbook), so a million-file landing zone
-    * numbers rows without a single-reducer bottleneck.
-    */
-  def fromCsvDir(spark: SparkSession, dir: String): DataFrame = {
-    val df = spark.read
-      .option("header", "false")
-      .option("quote", "\"")
-      .option("escape", "\"")
-      .schema(StructType((0 until 64).map(i =>
-        StructField(s"_c$i", StringType))))
-      .csv(s"$dir/*.csv")
-      .withColumn("source_file", input_file_name())
-    val cellCols = (0 until 64).map(i => col(s"_c$i"))
-    df.withColumn("cells", array(cellCols: _*))
-      .withColumn("_row_num",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("source_file"))
-          .orderBy(monotonically_increasing_id())).cast("int"))
-      .select(col("source_file"), col("_row_num"), col("cells"))
-  }
-
-  /** Build a staged sheet from in-memory rows (test fixtures). */
-  def fromRows(spark: SparkSession, rows: Seq[Seq[String]]): DataFrame = {
-    val data = rows.zipWithIndex.map { case (cells, i) =>
-      Row(i + 1, cells)
-    }
+  /** Build a staged sheet (a local relation) from in-memory rows. */
+  def fromRows(spark: SparkSession, rows: Seq[Seq[String]]): DataFrame =
     spark.createDataFrame(
-      spark.sparkContext.parallelize(data, 1), schema)
-  }
+      rows.zipWithIndex.map { case (cells, i) => Row(i + 1, cells) }.asJava,
+      schema)
 
   /** Excel column letter → 1-indexed column number ("A"→1, "C"→3, "AA"→27). */
   def colIndex(letters: String): Int =
     letters.toUpperCase.foldLeft(0)((acc, c) => acc * 26 + (c - 'A' + 1))
 
   /** S5 — read one fixed cell by Excel address ("C8"): value of column C at
-    * physical row 8, null when blank/absent. Driver-side action (one tiny
+    * physical row 8, null when blank/absent (also past a narrow .xlsx
+    * row's last column). A driver-side lookup in the local sheet (one tiny
     * lookup per file, as in the reference).
     */
   def fixedCell(sheet: DataFrame, address: String): Option[String] = {
@@ -86,7 +66,7 @@ object StagedWorkbook {
     val rowNum = digits.toInt
     val cIdx = colIndex(letters)
     sheet.filter(col("_row_num") === rowNum)
-      .select(element_at(col("cells"), cIdx))
+      .select(try_element_at(col("cells"), lit(cIdx)))
       .collect().headOption.flatMap(r => Option(r.getString(0)))
       .map(_.trim).filter(_.nonEmpty)
   }
@@ -117,13 +97,14 @@ object StagedWorkbook {
   /** S4 — header-row discovery: scan the first `maxScan` physical rows for
     * one containing `marker` or ≥ `minKnown` of `knownHeaders`; fall back
     * to `defaultRow` (official_format_extractor.py:376-396: marker
-    * "Órdenes de Embarque", default row 11). Driver-side scan of ≤15 rows.
+    * "Órdenes de Embarque", default row 11). Driver-side scan of ≤15 rows,
+    * put in row order on the driver.
     */
   def discoverHeaderRow(sheet: DataFrame, marker: String,
       knownHeaders: Set[String], maxScan: Int = 15, minKnown: Int = 3,
       defaultRow: Int = 11): Int = {
-    val head = sheet.filter(col("_row_num") <= maxScan)
-      .orderBy("_row_num").collect()
+    val head = sheet.filter(col("_row_num") <= maxScan).collect()
+      .sortBy(_.getInt(0))
     head.collectFirst {
       case r if {
         val cells = r.getSeq[String](1).filter(_ != null).map(_.trim)

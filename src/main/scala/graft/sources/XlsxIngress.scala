@@ -22,8 +22,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and both extraction formats run unchanged on real Excel bytes.
   *
   * Scale posture: one workbook is a FILE-SIZED driver-side artifact (tens
-  * of rows in the reference); the staged rows immediately enter the
-  * distributed path via [[StagedWorkbook.fromRows]]. Cell semantics:
+  * of rows in the reference); the staged rows become a local sheet via
+  * [[StagedWorkbook.fromRows]], so the fixed-cell, header-discovery and
+  * header-name lookups are served from it without a Spark job, and the
+  * extracted rows enter the distributed path from there. Cell semantics:
   * shared strings (`t="s"`), inline strings (`t="inlineStr"`), formula
   * string results (`t="str"`), booleans, and numbers; numeric text is
   * normalized to an integral string when the value is integral (Excel
@@ -35,31 +37,24 @@ object XlsxIngress {
   /** All cell rows of one sheet, 1-indexed dense (empty rows present as
     * empty seqs), each row padded to the sheet's max used column count.
     */
-  def readRows(path: String, sheetIndex: Int = 0): Seq[Seq[String]] = {
-    val zip = new ZipFile(path)
-    try {
-      val shared = readSharedStrings(zip)
-      val sheetName = sheetEntryName(zip, sheetIndex)
-      val entry = zip.getEntry(sheetName)
-      require(entry != null, s"worksheet part $sheetName not found in $path")
-      val cells = parseSheet(zip.getInputStream(entry), shared)
-      if (cells.isEmpty) return Seq.empty
-      val maxRow = cells.keys.map(_._1).max
-      val maxCol = cells.keys.map(_._2).max
-      (1 to maxRow).map(r => (1 to maxCol).map(c => cells.getOrElse((r, c), null)))
-    } finally zip.close()
-  }
+  def readRows(path: String, sheetIndex: Int = 0): Seq[Seq[String]] =
+    readSheet(path)(sheetEntryName(_, sheetIndex))
 
   /** All cell rows of the sheet with the given NAME, with the reference's
     * resolution contract (excel_handler.py:147-166): exact name →
     * `Sheet1` fallback → error listing the available sheets. A workbook
     * whose target sheet isn't first reads the RIGHT sheet, not sheet 1.
     */
-  def readRowsByName(path: String, sheetName: String): Seq[Seq[String]] = {
+  def readRowsByName(path: String, sheetName: String): Seq[Seq[String]] =
+    readSheet(path)(sheetEntryForName(_, sheetName, path))
+
+  /** The rows of the worksheet part `resolvePart` picks in the workbook. */
+  private def readSheet(path: String)(resolvePart: ZipFile => String)
+      : Seq[Seq[String]] = {
     val zip = new ZipFile(path)
     try {
       val shared = readSharedStrings(zip)
-      val part = sheetEntryForName(zip, sheetName, path)
+      val part = resolvePart(zip)
       val entry = zip.getEntry(part)
       require(entry != null, s"worksheet part $part not found in $path")
       val cells = parseSheet(zip.getInputStream(entry), shared)

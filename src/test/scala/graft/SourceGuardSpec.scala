@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps the session-state policies in one place each: the session key
   * is built only by the session-view registry, no query file grows its
   * own concurrent map (the immutable-path row-count cache aside), and
-  * only [[GraftSession]] builds a SparkSession.
+  * only [[GraftSession]] builds a SparkSession. Workbook staging keeps one
+  * path: a local sheet (no numbering window, no RDD), with the format
+  * decision made only inside `graft.sources`.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -41,5 +43,14 @@ class SourceGuardSpec extends AnyFunSuite {
   test("only GraftSession calls SparkSession.builder()") {
     val found = hits(root, "SparkSession.builder()")
     assert(found.map(_._1) == Seq("graft/GraftSession.scala"), found)
+  }
+
+  test("graft/sources stages without a window or an RDD and alone decides the format") {
+    Seq("row_number(", "Window", "parallelize(").foreach { needle =>
+      val found = hits(root.resolve("graft/sources"), needle)
+      assert(found.isEmpty, s"$needle: $found")
+    }
+    val callers = hits(root, "isMixedFormat(").map(_._1).distinct
+    assert(callers.nonEmpty && callers.forall(_.startsWith("graft/sources/")), callers)
   }
 }

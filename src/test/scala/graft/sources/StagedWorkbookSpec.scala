@@ -1,11 +1,19 @@
 package graft.sources
 
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
 import graft.SparkSpec
 
 /** Ingestion-layer semantics: Excel addressing, header-row discovery by
   * marker / known-header vote / fallback, format detection, schema
   * pre-flight (reference: official_format_extractor.py:111-121, :376-396;
-  * excel_handler.py:168-183).
+  * excel_handler.py:168-183), and the staging contract: CSV rows as the
+  * reader gives them, and lookups on a staged sheet that run no job.
   */
 class StagedWorkbookSpec extends SparkSpec {
 
@@ -75,22 +83,90 @@ class StagedWorkbookSpec extends SparkSpec {
     assert(ok2 && m2.isEmpty && e2.isEmpty)
   }
 
-  test("fromCsvDir: per-file row numbering from a file-partitioned window") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-csvdir")
-    def w(name: String, lines: Seq[String]): Unit =
-      java.nio.file.Files.writeString(dir.resolve(name), lines.mkString("\n"))
-    w("a.csv", Seq("\"a1\"", "\"a2\"", "\"a3\""))
-    w("b.csv", Seq("\"b1\"", "\"b2\""))
-    val staged = StagedWorkbook.fromCsvDir(spark, dir.toString)
-    val rows = staged.collect().map(r => (
-      r.getAs[String]("source_file").split('/').last,
-      r.getAs[Int]("_row_num"),
-      r.getSeq[String](r.fieldIndex("cells")).head)).sortBy(x => (x._1, x._2))
-    assert(rows.toSeq == Seq(
-      ("a.csv", 1, "a1"), ("a.csv", 2, "a2"), ("a.csv", 3, "a3"),
-      ("b.csv", 1, "b1"), ("b.csv", 2, "b2")))
-    // the numbering window partitions by file, never a global single reducer
-    val plan = staged.queryExecution.optimizedPlan.toString
-    assert(plan.contains("source_file"))
+  private def tmpFile(suffix: String, lines: Seq[String]): String = {
+    val f = Files.createTempFile("graft-staged", suffix)
+    Files.writeString(f, lines.mkString("\n"))
+    f.toString
+  }
+
+  /** Spark jobs `body` starts on this thread (the listener bus drained). */
+  private def jobs(body: => Unit): Int = {
+    val group = s"staged-${java.util.UUID.randomUUID()}"
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, group)
+    try body
+    finally {
+      spark.sparkContext.clearJobGroup()
+      GraftSqlBridge.waitListenerBusEmpty(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  test("fromCsv rows equal the CSV reader's own output, numbered in file order") {
+    val wide = (1 to 70).map(i => s"w$i").mkString(",")
+    val path = tmpFile(".csv", Seq(
+      "Año,\"Dirección, calle\",Ñandú,Guías",
+      "\"dijo \"\"hola\"\"\",b,,d",
+      "",
+      wide,
+      "solo"))
+    val reader = spark.read
+      .option("header", "false").option("quote", "\"").option("escape", "\"")
+      .schema(StructType((0 until 64).map(i => StructField(s"_c$i", StringType))))
+      .csv(path).collect().map(_.toSeq.map(_.asInstanceOf[String]))
+    val staged = StagedWorkbook.fromCsv(spark, path).collect()
+      .sortBy(_.getInt(0))
+    assert(staged.map(_.getInt(0)).toSeq == (1 to reader.length))
+    assert(staged.map(_.getSeq[String](1)).toSeq == reader.toSeq)
+    assert(reader.map(_.head).toSeq == Seq("Año", "dijo \"hola\"", "w1", "solo"))
+    assert(reader(0)(1) == "Dirección, calle" && reader.forall(_.size == 64))
+  }
+
+  test("a staged sheet serves fixed cells, header discovery and header names without a job") {
+    val filler = Seq.fill(10)(Seq.fill(4)(""))
+    val rows = filler ++ Seq(Seq("N° Factura", "N° Referencia", "Transportista",
+      "Monto Total"), Seq("FAC-1", "REF-1", "Carrier", "1000"))
+    val csv = tmpFile(".csv", rows.map(_.map(c => "\"" + c + "\"").mkString(",")))
+    val xlsx = Files.createTempFile("graft-staged", ".xlsx").toString
+    XlsxEgress.write(xlsx, rows)
+    def lookups(sheet: DataFrame): Seq[String] = {
+      assert(!StagedWorkbook.isMixedFormat(StagedWorkbook.fixedCells(sheet)))
+      val header = StagedWorkbook.discoverHeaderRow(sheet, "N° Factura",
+        OfficialFormatExtract.SimpleColumns.toSet)
+      StagedWorkbook.table(sheet, header).columns.toSeq
+    }
+    var sheet: DataFrame = null
+    assert(jobs { sheet = StagedWorkbook.fromCsv(spark, csv) } == 1)
+    var columns = Seq.empty[String]
+    assert(jobs { columns = lookups(sheet) } == 0)
+    assert(columns == "row_index" +: rows(10))
+    assert(jobs { columns = lookups(XlsxIngress.stage(spark, xlsx)) } == 0)
+    assert(columns == "row_index" +: rows(10))
+  }
+
+  test("extract: simple-tabular rows stop at the first blank N° Factura, with no job") {
+    val s = sheet(Seq("N° Factura", "N° Referencia", "Transportista", "Monto Total"),
+      Seq("FAC-1", "R1", "C", "100"), Seq("FAC-2", "R2", "C", "200"),
+      Seq(" ", "R3", "C", "300"), Seq("FAC-4", "R4", "C", "400"))
+    var out: DataFrame = null
+    assert(jobs { out = OfficialFormatExtract.extract(s) } == 0)
+    assert(out.orderBy("row_index").collect().map(_.getAs[String]("invoice_number"))
+      .toSeq == Seq("FAC-1", "FAC-2"))
+    assert(out.rdd.getNumPartitions == 1)
+    // no single-partition take-while window (Spark warns "No Partition Defined")
+    assert(!out.queryExecution.optimizedPlan.toString.contains("Window"))
+  }
+
+  test("extract: the schema pre-flight names the missing columns") {
+    val s = sheet(Seq("N° Factura", "Transportista", "Otra"), Seq("FAC-1", "C", "x"))
+    val e = intercept[SchemaValidationException](OfficialFormatExtract.extract(s))
+    assert(e.missing == Seq("N° Referencia", "Monto Total") && e.extra == Seq("Otra"))
   }
 }
