@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSessionExtensions}
+import org.apache.spark.sql.{GraftSqlBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 

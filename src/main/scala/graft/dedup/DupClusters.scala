@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Duplicate-cluster resolution: connected components over a near-dup
@@ -57,8 +57,6 @@ object DupClusters {
     */
   def connectedComponents(pairs: DataFrame, c1: String, c2: String,
       maxIter: Int = 20): DataFrame = {
-    val spark = pairs.sparkSession
-
     // symmetric edge list, deduped: the propagation join keys on src
     val edges = pairs.select(col(c1).as("src"), col(c2).as("dst"))
       .union(pairs.select(col(c2).as("src"), col(c1).as("dst")))

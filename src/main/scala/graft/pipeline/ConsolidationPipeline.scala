@@ -201,7 +201,7 @@ object ConsolidationPipeline {
       if (rolledBack) "ERROR" // run-level failure, store rewound to pre-run
       else if (files.isEmpty) "NO_FILES"
       else if (outcomes.isEmpty && skipped > 0) "SUCCESS" // everything idempotent-skipped
-      else Report.rollUp(outcomes.size, outcomes.count(o => o.status != "COMPLETED"))
+      else Reconcile.rollUp(outcomes.size, outcomes.count(o => o.status != "COMPLETED"))
 
     val sourceTotal = outcomes.map(_.sourceTotal).sum
     val outputTotal = sourceTotal // reconcile enforces variance ≤ 1 per file

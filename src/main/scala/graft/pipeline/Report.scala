@@ -28,10 +28,6 @@ object Report {
     def amountVariance: BigDecimal = (sourceTotal - outputTotal).abs
   }
 
-  /** A5 — status roll-up (consolidate_invoices.py:92-100,140-145). */
-  def rollUp(processable: Int, failed: Int): String =
-    graft.operators.Reconcile.rollUp(processable.toLong, failed.toLong)
-
   /** Error list capped at `cap` entries plus a "y N más" tail
     * (dtos.py:74-88).
     */

@@ -8,6 +8,8 @@ import graft.domain.InvoiceRecord
 import graft.functions._
 import graft.operators.{Canonicalize, Merge, RangeJoin, Validate}
 
+import QueryTables.{t, tw}
+
 /** Oracle-checked queries covering SURVEY.md §2's operator inventory over
   * the driver's scale tables. Each query pairs an idiomatic Spark plan with
   * an arithmetically-equivalent DuckDB oracle; outputs use explicitly cast
@@ -16,18 +18,6 @@ import graft.operators.{Canonicalize, Merge, RangeJoin, Validate}
 object CoreQueries {
 
   private val money = InvoiceRecord.money
-  private def t(s: SparkSession, dir: String, n: String) = Tables.load(s, dir, n)
-
-  /** [[t]] hash-repartitioned to engine width — for queries whose
-    * per-row CPU (decimal money math, string formatting) dominates a
-    * scan that the compacted single-row-group gate tables cap at one
-    * task (see PipelineQueries.tw / the t_text_stats precedent; the
-    * guide's repartition-after-unsplittable-read rule).
-    */
-  private def tw(s: SparkSession, dir: String, n: String, keys: String*) = {
-    val width = s.conf.get("spark.sql.shuffle.partitions").toInt
-    t(s, dir, n).repartition(width, keys.map(col): _*)
-  }
 
   /** Lineitem's deduplicated PK view, registered in the session cache so
     * the many queries deriving from it (the p6/o3, scalar-F and merge-J
@@ -342,6 +332,61 @@ object CoreQueries {
   private val errCondSql =
     "(l_orderkey % 7 = 0 OR l_orderkey % 13 = 0 OR l_orderkey % 11 = 0)"
 
+  /** The reference's validation message of a rejected row (mirror of
+    * [[Validate.split]]'s `error` column for the planted failures).
+    */
+  private val errMsgSql =
+    """CASE WHEN l_orderkey % 7 = 0 THEN 'invoice_number no puede estar vacío'
+      |     WHEN l_orderkey % 13 = 0 THEN 'Formato de fecha no reconocido'
+      |     WHEN l_orderkey % 11 = 0 THEN
+      |       'total_amount (' || CAST(l_extendedprice AS VARCHAR) ||
+      |       ') no coincide con net (' || CAST(l_extendedprice AS VARCHAR) ||
+      |       ') + tax (2.00) = ' ||
+      |       CAST(l_extendedprice + CAST(2 AS DECIMAL(18,2)) AS VARCHAR)
+      |END""".stripMargin
+
+  /** J1's anti-join: `incoming i` rows whose PK is absent from `existing`. */
+  private val notInExistingSql =
+    """FROM incoming i
+      |WHERE NOT EXISTS (SELECT 1 FROM existing e
+      |                  WHERE e.invoice_number = i.invoice_number
+      |                    AND e.reference_number = i.reference_number)""".stripMargin
+
+  /** `o`/`s` — 30-minute-gap sessions of `events` in epoch micros: a gap
+    * above the timeout opens a session, a running sum numbers them.
+    */
+  private val sessionsSql =
+    """WITH o AS (
+      |  SELECT user_id, epoch_us(ts) AS tus, event_id,
+      |         CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER (
+      |             PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
+      |           <= 1800000000 THEN 0 ELSE 1 END AS new_s
+      |  FROM events
+      |), s AS (
+      |  SELECT user_id, tus,
+      |         SUM(new_s) OVER (PARTITION BY user_id
+      |           ORDER BY tus, event_id ROWS UNBOUNDED PRECEDING) AS session_id
+      |  FROM o
+      |)""".stripMargin
+
+  /** `v`/`c`/`p` — each user's first view, first click after it and first
+    * purchase after that, in epoch nanos (the e6 funnel stages).
+    */
+  private val funnelSql =
+    """WITH v AS (
+      |  SELECT user_id, MIN(epoch_ns(ts)) AS tv
+      |  FROM events WHERE event_type = 'view' GROUP BY user_id),
+      |c AS (
+      |  SELECT e.user_id, MIN(epoch_ns(e.ts)) AS tc
+      |  FROM events e JOIN v ON e.user_id = v.user_id
+      |  WHERE e.event_type = 'click' AND epoch_ns(e.ts) > v.tv
+      |  GROUP BY e.user_id),
+      |p AS (
+      |  SELECT e.user_id, MIN(epoch_ns(e.ts)) AS tp
+      |  FROM events e JOIN c ON e.user_id = c.user_id
+      |  WHERE e.event_type = 'purchase' AND epoch_ns(e.ts) > c.tc
+      |  GROUP BY e.user_id)""".stripMargin
+
   /** P6 (valid side) + F1/F2/F3/F4 — full canonicalization + validation keep. */
   val p6ValidRows = QueryDef("p6_valid_rows",
     (s, dir) => {
@@ -383,14 +428,7 @@ object CoreQueries {
       |SELECT l_orderkey * 10 + l_linenumber AS row_index,
       |       CASE WHEN l_orderkey % 7 = 0 THEN ''
       |            ELSE CAST(l_orderkey AS VARCHAR) END AS invoice_number,
-      |       CASE WHEN l_orderkey % 7 = 0 THEN 'invoice_number no puede estar vacío'
-      |            WHEN l_orderkey % 13 = 0 THEN 'Formato de fecha no reconocido'
-      |            WHEN l_orderkey % 11 = 0 THEN
-      |              'total_amount (' || CAST(l_extendedprice AS VARCHAR) ||
-      |              ') no coincide con net (' || CAST(l_extendedprice AS VARCHAR) ||
-      |              ') + tax (2.00) = ' ||
-      |              CAST(l_extendedprice + CAST(2 AS DECIMAL(18,2)) AS VARCHAR)
-      |       END AS error
+      |       $errMsgSql AS error
       |FROM uniq
       |WHERE $errCondSql
       |ORDER BY row_index
@@ -605,10 +643,7 @@ object CoreQueries {
       |UNION ALL
       |SELECT i.invoice_number, i.reference_number, i.carrier_name,
       |       CAST(i.total_amount AS DOUBLE) AS total_amount, 'new' AS status
-      |FROM incoming i
-      |WHERE NOT EXISTS (SELECT 1 FROM existing e
-      |                  WHERE e.invoice_number = i.invoice_number
-      |                    AND e.reference_number = i.reference_number)
+      |$notInExistingSql
       |ORDER BY invoice_number, reference_number
       |""".stripMargin))
 
@@ -629,10 +664,7 @@ object CoreQueries {
       |$incomingSql
       |SELECT i.invoice_number, i.reference_number,
       |       CAST(i.total_amount AS DOUBLE) AS total_amount
-      |FROM incoming i
-      |WHERE NOT EXISTS (SELECT 1 FROM existing e
-      |                  WHERE e.invoice_number = i.invoice_number
-      |                    AND e.reference_number = i.reference_number)
+      |$notInExistingSql
       |ORDER BY invoice_number, reference_number
       |""".stripMargin))
 
@@ -861,14 +893,7 @@ object CoreQueries {
     Some(s"""
       |WITH ${InvoiceView.uniqSql}
       |SELECT l_orderkey * 10 + l_linenumber AS row_index,
-      |       CASE WHEN l_orderkey % 7 = 0 THEN 'invoice_number no puede estar vacío'
-      |            WHEN l_orderkey % 13 = 0 THEN 'Formato de fecha no reconocido'
-      |            WHEN l_orderkey % 11 = 0 THEN
-      |              'total_amount (' || CAST(l_extendedprice AS VARCHAR) ||
-      |              ') no coincide con net (' || CAST(l_extendedprice AS VARCHAR) ||
-      |              ') + tax (2.00) = ' ||
-      |              CAST(l_extendedprice + CAST(2 AS DECIMAL(18,2)) AS VARCHAR)
-      |       END AS error
+      |       $errMsgSql AS error
       |FROM uniq
       |WHERE $errCondSql
       |ORDER BY row_index
@@ -982,18 +1007,7 @@ object CoreQueries {
         gap = 1800000000L) // 30 min in micros
       .orderBy(col("user_id"), col("session_id")),
     Some(s"""
-      |WITH o AS (
-      |  SELECT user_id, epoch_us(ts) AS tus, event_id,
-      |         CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER (
-      |             PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-      |           <= 1800000000 THEN 0 ELSE 1 END AS new_s
-      |  FROM events
-      |), s AS (
-      |  SELECT user_id, tus,
-      |         SUM(new_s) OVER (PARTITION BY user_id
-      |           ORDER BY tus, event_id ROWS UNBOUNDED PRECEDING) AS session_id
-      |  FROM o
-      |)
+      |$sessionsSql
       |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
       |       MIN(tus) AS session_start, MAX(tus) AS session_end,
       |       COUNT(*) AS n_events
@@ -2648,20 +2662,8 @@ object CoreQueries {
             col("users")))
         .orderBy(col("stage"))
     },
-    Some("""
-      |WITH v AS (
-      |  SELECT user_id, MIN(epoch_ns(ts)) AS tv
-      |  FROM events WHERE event_type = 'view' GROUP BY user_id),
-      |c AS (
-      |  SELECT e.user_id, MIN(epoch_ns(e.ts)) AS tc
-      |  FROM events e JOIN v ON e.user_id = v.user_id
-      |  WHERE e.event_type = 'click' AND epoch_ns(e.ts) > v.tv
-      |  GROUP BY e.user_id),
-      |p AS (
-      |  SELECT e.user_id, MIN(epoch_ns(e.ts)) AS tp
-      |  FROM events e JOIN c ON e.user_id = c.user_id
-      |  WHERE e.event_type = 'purchase' AND epoch_ns(e.ts) > c.tc
-      |  GROUP BY e.user_id)
+    Some(s"""
+      |$funnelSql
       |SELECT stage, step, users FROM (
       |  SELECT CAST(1 AS INT) AS stage, 'view' AS step,
       |         COUNT(*) AS users FROM v
@@ -2695,19 +2697,8 @@ object CoreQueries {
           col("n_events"))
         .orderBy(col("user_id"), col("session_start"))
     },
-    Some("""
-      |WITH o AS (
-      |  SELECT user_id, epoch_us(ts) AS tus, event_id,
-      |         CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER (
-      |             PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-      |           <= 1800000000 THEN 0 ELSE 1 END AS new_s
-      |  FROM events
-      |), s AS (
-      |  SELECT user_id, tus,
-      |         SUM(new_s) OVER (PARTITION BY user_id
-      |           ORDER BY tus, event_id ROWS UNBOUNDED PRECEDING) AS session_id
-      |  FROM o
-      |)
+    Some(s"""
+      |$sessionsSql
       |SELECT user_id, MIN(tus) AS session_start,
       |       MAX(tus) + 1800000000 AS window_end,
       |       COUNT(*) AS n_events
@@ -2821,19 +2812,7 @@ object CoreQueries {
         .orderBy(col("step"), col("qi"))
     },
     Some(s"""
-      |WITH v AS (
-      |  SELECT user_id, MIN(epoch_ns(ts)) AS tv
-      |  FROM events WHERE event_type = 'view' GROUP BY user_id),
-      |c AS (
-      |  SELECT e.user_id, MIN(epoch_ns(e.ts)) AS tc
-      |  FROM events e JOIN v ON e.user_id = v.user_id
-      |  WHERE e.event_type = 'click' AND epoch_ns(e.ts) > v.tv
-      |  GROUP BY e.user_id),
-      |p AS (
-      |  SELECT e.user_id, MIN(epoch_ns(e.ts)) AS tp
-      |  FROM events e JOIN c ON e.user_id = c.user_id
-      |  WHERE e.event_type = 'purchase' AND epoch_ns(e.ts) > c.tc
-      |  GROUP BY e.user_id),
+      |$funnelSql,
       |dv AS (
       |  SELECT 'view_to_click' AS step, (c.tc - v.tv) // 1000000000 AS v
       |  FROM c JOIN v ON c.user_id = v.user_id

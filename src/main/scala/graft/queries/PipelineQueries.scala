@@ -1,11 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
 import graft.similarity.{Similarity, VecIndex}
 import graft.text.TextAnalysis
+
+import QueryTables.{t, tw}
 
 /** Oracle-checked queries for the training-data pipeline operators
   * (dedup / similarity / text analysis) over the `documents` and
@@ -14,27 +16,6 @@ import graft.text.TextAnalysis
   * cosines via exact quantized-integer dot products.
   */
 object PipelineQueries {
-
-  private def t(s: SparkSession, dir: String, n: String) = Tables.load(s, dir, n)
-
-  /** [[t]] hash-repartitioned to engine width on `keys` — for queries
-    * whose per-row CPU (multi-md5 sketching, wide aggregates) dominates
-    * the scan. A compacted table (one parquet row group per file — the
-    * gate tables' layout, and common after production compaction) caps
-    * everything up to the first exchange at SCAN parallelism, which can
-    * be a single task while the rest of the engine idles; one narrow
-    * key-hash exchange up front runs the expensive pass at full width
-    * (the guide's repartition-after-unsplittable-read rule, and the
-    * t_text_stats precedent). Hash on a high-cardinality key, not
-    * round-robin: round-robin pays the sort-before-repartition pass
-    * inside the narrow scan stage. At multi-row-group scale the scan is
-    * already wide and this exchange is a bounded one-pass cost the
-    * CPU-dense pass amortizes.
-    */
-  private def tw(s: SparkSession, dir: String, n: String, keys: String*) = {
-    val width = s.conf.get("spark.sql.shuffle.partitions").toInt
-    t(s, dir, n).repartition(width, keys.map(col): _*)
-  }
 
   // DuckDB building blocks mirroring TextAnalysis/Dedup ------------------
 
@@ -93,6 +74,455 @@ object PipelineQueries {
       |    ON a.g = b.g AND a.lang = b.lang AND a.source = b.source
       |   AND a.doc_id < b.doc_id)""".stripMargin
 
+  /** `edges`/`reach` — the symmetric edge list of `$pairs(id1, id2)` and
+    * its recursive closure, every node reached under every label of its
+    * component (min label = [[graft.dedup.DupClusters]]' cluster id).
+    */
+  private def closureSql(pairs: String): String =
+    s"""edges AS (
+       |  SELECT id1 AS src, id2 AS dst FROM $pairs
+       |  UNION
+       |  SELECT id2, id1 FROM $pairs),
+       |reach AS (
+       |  SELECT DISTINCT src AS node, src AS lbl FROM edges
+       |  UNION
+       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)""".stripMargin
+
+  /** The d7 closure over the blocked 3-gram co-occurrence graph, ending
+    * at `reach` — d7, d8 and d23 stand on it.
+    */
+  private val jaccardClosureSql =
+    s"""WITH RECURSIVE $tokSql,
+       |$shSql,
+       |$seSql,
+       |$prCoocSql,
+       |${closureSql("pr")}""".stripMargin
+
+  /** MinHash(16) + LSH(4×4) banding over `sh` (mirror of
+    * [[Dedup.minhashSignatures]] / [[Dedup.lshCandidatePairs]]): `hs`
+    * the 28-bit md5 shingle hashes, `sig` the 16 affine-permuted minima,
+    * `bands` four 4-row band keys. Shingle-less docs (< n tokens) get NO
+    * signature row: the Spark side has nothing to aggregate, and an
+    * all-sentinel signature would falsely band every short doc together.
+    */
+  private val minhashBandsSql =
+    s"""$tokSql,
+       |$shSql,
+       |hs AS (
+       |  SELECT doc_id,
+       |         list_transform(sh, s -> CAST('0x' || substr(md5(s), 1, 7) AS BIGINT)) AS hs
+       |  FROM sh WHERE len(sh) > 0),
+       |sig AS (
+       |  SELECT doc_id,
+       |         list_transform(range(0, 16),
+       |           i -> coalesce(list_min(list_transform(hs,
+       |                  h -> (h * (i * 2 + 3) + 7919 * i) % 1000003)), 1000003)) AS sig
+       |  FROM hs),
+       |bands AS (
+       |  SELECT doc_id, b.b AS band_idx,
+       |         array_to_string(sig[b.b*4+1:b.b*4+4], '-') AS band_sig
+       |  FROM sig, (SELECT unnest(range(4)) AS b) b)""".stripMargin
+
+  /** `cand(id1, id2)` — band-equal doc pairs, id1 < id2 (d3's pair set). */
+  private val lshCandSql =
+    """cand AS (
+      |  SELECT DISTINCT b1.doc_id AS id1, b2.doc_id AS id2
+      |  FROM bands b1 JOIN bands b2
+      |    ON b1.band_idx = b2.band_idx AND b1.band_sig = b2.band_sig
+      |   AND b1.doc_id < b2.doc_id)""".stripMargin
+
+  /** Matching signature positions per `cand` pair — d3's output rows. */
+  private val lshEstSql =
+    """SELECT c.id1, c.id2,
+      |       CAST(list_sum(list_transform(range(0, 16),
+      |              i -> CASE WHEN s1.sig[CAST(i AS INT)+1] = s2.sig[CAST(i AS INT)+1]
+      |                        THEN 1 ELSE 0 END)) AS INT) AS est_matches
+      |FROM cand c
+      |JOIN sig s1 ON s1.doc_id = c.id1
+      |JOIN sig s2 ON s2.doc_id = c.id2""".stripMargin
+
+  /** Deterministic 90/5/5 train/val/test label of `$id` over `$src` — the
+    * mirror of `Sampling.hashUniformPpm($id, "split")`, t10's split.
+    */
+  private def splitSql(id: String, src: String): String =
+    s"""SELECT $id,
+       |       CASE WHEN ppm < 900000 THEN 'train'
+       |            WHEN ppm < 950000 THEN 'val'
+       |            ELSE 'test' END AS split
+       |FROM (
+       |  SELECT $id,
+       |         CAST('0x' || substr(md5(CAST($id AS VARCHAR) || '|split'), 1, 15) AS BIGINT)
+       |           % 1000000 AS ppm
+       |  FROM $src)""".stripMargin
+
+  /** T1's integer quality score over `n_tok`, `n_chr`, `n_pun` and the
+    * stopword-hit count `$hits` (mirror of [[TextAnalysis.qualityScore]]).
+    */
+  private def qualitySql(hits: String): String =
+    s"""LEAST(100, n_tok)
+       |+ CASE WHEN n_tok > 0
+       |       THEN LEAST(100, CAST(FLOOR($hits * 500 / n_tok) AS INT))
+       |       ELSE 0 END
+       |+ 100 - CASE WHEN n_chr > 0
+       |       THEN LEAST(100, CAST(FLOOR(n_pun * 300 / n_chr) AS INT))
+       |       ELSE 0 END""".stripMargin
+
+  /** BM25/TF-IDF inputs for the fixed query (join, scan, merge): per-doc
+    * `base(doc_id, dl, tf_*)` over `toks`.
+    */
+  private val bm25BaseSql =
+    """base AS (
+      |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl,
+      |         CAST(len(list_filter(tk, x -> x = 'join')) AS BIGINT) AS tf_join,
+      |         CAST(len(list_filter(tk, x -> x = 'scan')) AS BIGINT) AS tf_scan,
+      |         CAST(len(list_filter(tk, x -> x = 'merge')) AS BIGINT) AS tf_merge
+      |  FROM toks)""".stripMargin
+
+  /** Per-term document frequencies and the corpus size — `stats` columns. */
+  private val bm25DfSql =
+    """CAST(SUM(CASE WHEN tf_join > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_join,
+      |CAST(SUM(CASE WHEN tf_scan > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_scan,
+      |CAST(SUM(CASE WHEN tf_merge > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_merge,
+      |(SELECT COUNT(*) FROM documents) AS n_all""".stripMargin
+
+  /** t23's BM25 score over `base, stats`, per-term sums in FIXED order. */
+  private val bm25ScoreSql =
+    """CAST(length(bin((n_all + 1) // (df_join + 1))) AS BIGINT)
+      |  * CAST(22 * tf_join * tl AS DOUBLE)
+      |  / CAST(10 * tl * tf_join + 3 * tl + 9 * dl * n_all AS DOUBLE)
+      |+ CAST(length(bin((n_all + 1) // (df_scan + 1))) AS BIGINT)
+      |  * CAST(22 * tf_scan * tl AS DOUBLE)
+      |  / CAST(10 * tl * tf_scan + 3 * tl + 9 * dl * n_all AS DOUBLE)
+      |+ CAST(length(bin((n_all + 1) // (df_merge + 1))) AS BIGINT)
+      |  * CAST(22 * tf_merge * tl AS DOUBLE)
+      |  / CAST(10 * tl * tf_merge + 3 * tl + 9 * dl * n_all AS DOUBLE)""".stripMargin
+
+  /** Exact KMV(64) estimate over md5-40-bit content hashes (t4's one-shot
+    * sketch), open-ended so callers may add output columns before
+    * `FROM topk`.
+    */
+  private val kmvEstimateSql =
+    s"""WITH h AS (
+       |  SELECT DISTINCT CAST('0x' || substr(md5(text), 1, 10) AS BIGINT) AS hh
+       |  FROM documents),
+       |topk AS (SELECT hh FROM h ORDER BY hh LIMIT 64)
+       |SELECT CAST(CASE WHEN COUNT(*) < 64 THEN COUNT(*)
+       |            ELSE ${63L * graft.sketch.Sketch.HashSpace} // MAX(hh) END
+       |       AS BIGINT) AS distinct_estimate,
+       |       COUNT(*) AS sketch_size""".stripMargin
+
+  /** Per-language token-budget shard manifest (t19's cumulative-sum
+    * arithmetic) at `$budget` tokens per shard.
+    */
+  private def shardManifestSql(budget: Long): String =
+    s"""WITH $tokSql,
+       |v AS (SELECT lang, doc_id, CAST(len(tk) AS BIGINT) AS tok FROM toks),
+       |w AS (SELECT lang, doc_id, tok,
+       |        CAST(SUM(tok) OVER (PARTITION BY lang ORDER BY doc_id
+       |               ROWS UNBOUNDED PRECEDING) - tok AS BIGINT) AS start_off
+       |      FROM v)
+       |SELECT lang, CAST(start_off // $budget AS BIGINT) AS shard_id,
+       |       COUNT(*) AS n_docs, CAST(SUM(tok) AS BIGINT) AS tok_sum,
+       |       MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
+       |FROM w
+       |GROUP BY lang, shard_id
+       |ORDER BY lang, shard_id""".stripMargin
+
+  /** τ=½ mixture weights over `sup(lang, supply_tokens)`: `w` the integer
+    * √supply per language, `tot` the supply and weight totals (mirror of
+    * the temperature weights in [[graft.sampling.Sampling]]).
+    */
+  private val sqrtWeightsSql =
+    """w AS (
+      |  SELECT lang, supply_tokens,
+      |         CAST(floor(sqrt(CAST(supply_tokens AS DOUBLE))) AS BIGINT)
+      |           AS weight_s
+      |  FROM sup),
+      |tot AS (
+      |  SELECT CAST(SUM(supply_tokens) AS BIGINT) AS t,
+      |         CAST(SUM(weight_s) AS BIGINT) AS sw
+      |  FROM w)""".stripMargin
+
+  /** `cells(source, r, bucket, cnt)` — the 4×512 count-min grid of
+    * `tok2(source, token)` per source (mirror of
+    * [[graft.sketch.Sketch.cmsJoinSize]]'s md5 row hashes).
+    */
+  private val cmsCellsSql =
+    """rr AS (SELECT unnest([0, 1, 2, 3]) AS r),
+      |cells AS (
+      |  SELECT source, r,
+      |         CAST('0x' || substr(md5(r || ':' || token), 1, 10)
+      |              AS BIGINT) % 512 AS bucket,
+      |         COUNT(*) AS cnt
+      |  FROM tok2 CROSS JOIN rr GROUP BY 1, 2, 3)""".stripMargin
+
+  /** The lineitem columns the column profilers (a9/a12/a15/a17) cover. */
+  private val profileCols = Seq("l_orderkey", "l_partkey", "l_suppkey",
+    "l_linenumber", "l_quantity", "l_extendedprice", "l_discount", "l_tax")
+
+  /** One profiler leg of column `$c`: exact non-null count, min, max and
+    * row count, with the distinct estimate `$est.nd` of the subquery the
+    * caller cross-joins as `$est`.
+    */
+  private def profileLegSql(c: String, est: String): String =
+    s"""SELECT '$c' AS column_name, s.n_nonnull, $est.nd AS n_distinct_est,
+       |  s.min_v, s.max_v, s.n_rows
+       |FROM (SELECT CAST(COUNT($c) AS BIGINT) AS n_nonnull,
+       |             CAST(MIN($c) AS DOUBLE) AS min_v,
+       |             CAST(MAX($c) AS DOUBLE) AS max_v,
+       |             CAST(COUNT(*) AS BIGINT) AS n_rows
+       |      FROM lineitem) s""".stripMargin
+
+  /** The KMV(256) estimate `$est` of a column from its minima (the a12
+    * sketch, exact below 256 distinct values), over [[kmv256MinimaSql]].
+    */
+  private def kmv256EstSql(est: String): String =
+    s"""CAST(CASE WHEN COUNT(*) < 256 THEN COUNT(*)
+       |            ELSE ${255L * graft.sketch.Sketch.HashSpace} // MAX(hh)
+       |            END AS BIGINT) AS $est""".stripMargin
+
+  /** The 256 smallest md5-40-bit hashes of lineitem column `$c`. */
+  private def kmv256MinimaSql(c: String): String =
+    s"""SELECT hh FROM (
+       |    SELECT DISTINCT CAST('0x' ||
+       |        substr(md5(CAST($c AS VARCHAR)), 1, 10) AS BIGINT) AS hh
+       |    FROM lineitem WHERE $c IS NOT NULL)
+       |  ORDER BY hh LIMIT 256""".stripMargin
+
+  // DuckDB building blocks mirroring Similarity ---------------------------
+
+  /** `SELECT $cols, qv FROM $src` — the ×1000 rounding quantizer of
+    * `embedding` (mirror of [[Similarity.quantize]]).
+    */
+  private def quantizeSql(cols: String, src: String): String =
+    s"""SELECT $cols,
+       |         list_transform(embedding,
+       |           x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
+       |  FROM $src""".stripMargin
+
+  private val qSql = s"qv AS (\n  ${quantizeSql("vec_id", "embeddings")})"
+
+  private def dotSql(a: String, b: String): String =
+    s"CAST(list_dot_product(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[])) AS BIGINT)"
+
+  /** IEEE cosine of two quantized vectors from their exact integer dots,
+    * NULL when either norm is zero (mirror of [[Similarity.cosineFromQ]]).
+    */
+  private def cosineSql(a: String, b: String): String =
+    s"""CASE WHEN ${dotSql(a, a)} > 0 AND ${dotSql(b, b)} > 0
+       |              THEN CAST(${dotSql(a, b)} AS DOUBLE) /
+       |                   sqrt(CAST(${dotSql(a, a)} * ${dotSql(b, b)} AS DOUBLE))
+       |         END""".stripMargin
+
+  /** Exact integer test cosine(a, b) ≥ `$ppm`/10⁶ in HUGEINT (mirror of
+    * `graft.functions.cosine_gate_ppm`) — no float at the boundary.
+    */
+  private def cosineGateSql(a: String, b: String, ppm: Long): String =
+    s"""${dotSql(a, b)} > 0
+       |    AND CAST(${dotSql(a, b)} AS HUGEINT) * ${dotSql(a, b)}
+       |        * 1000000 * 1000000
+       |        >= CAST(${dotSql(a, a)} AS HUGEINT) * ${dotSql(b, b)}
+       |           * $ppm * $ppm""".stripMargin
+
+  /** Per-`$key` cosine rank over `$src(…, neighbor_id, cosine)`: NULL
+    * cosines last, ties to the smaller neighbor (bruteForceTopK's order).
+    */
+  private def rankSql(key: String, src: String): String =
+    s"""SELECT *, row_number() OVER (PARTITION BY $key
+       |            ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
+       |  FROM $src""".stripMargin
+
+  /** The tail every ANN oracle ends with: rank `scored` per query and
+    * output `query_id, rank, $cols` for rank ≤ `$k`.
+    */
+  private def topKSql(k: Int, cols: String): String =
+    s"""ranked AS (
+       |  ${rankSql("query_id", "scored")})
+       |SELECT query_id, CAST(rank AS INT) AS rank, $cols
+       |FROM ranked WHERE rank <= $k
+       |ORDER BY query_id, rank""".stripMargin
+
+  /** The exact top-5 reference set of the recall queries: `ex_scored`
+    * (brute force over the 1-in-20 `$key` sample) and `exact($key,
+    * neighbor_id)`.
+    */
+  private def exactTop5Sql(key: String): String =
+    s"""ex_scored AS (
+       |  SELECT q.vec_id AS $key, c.vec_id AS neighbor_id,
+       |         ${cosineSql("q.qv", "c.qv")} AS cosine
+       |  FROM qv q, qv c
+       |  WHERE q.vec_id % 20 = 0 AND q.vec_id <> c.vec_id),
+       |exact AS (
+       |  SELECT $key, neighbor_id FROM (
+       |    ${rankSql(key, "ex_scored")}) WHERE rank <= 5)""".stripMargin
+
+  /** Per-query recall of `approx` against `exact` (s11's tail). */
+  private val recallSql =
+    """SELECT e.query_id, COUNT(*) AS n_exact,
+      |       CAST(COALESCE(SUM(CASE WHEN a.neighbor_id IS NOT NULL
+      |                              THEN 1 ELSE 0 END), 0) AS BIGINT) AS hits,
+      |       CAST(COALESCE(SUM(CASE WHEN a.neighbor_id IS NOT NULL
+      |                              THEN 1 ELSE 0 END), 0) * 1000000
+      |            // COUNT(*) AS BIGINT) AS recall_ppm
+      |FROM exact e LEFT JOIN approx a
+      |  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
+      |GROUP BY e.query_id
+      |ORDER BY e.query_id""".stripMargin
+
+  /** Per-`$key` recall of `$approx` (aliased `$a`) against `exact`, with
+    * the hit test on `$a.$key` (s22/s23's tail).
+    */
+  private def keyedRecallSql(key: String, approx: String, a: String): String =
+    s"""SELECT e.$key AS $key, CAST(COUNT(*) AS BIGINT) AS n_exact,
+       |       CAST(COALESCE(SUM(CASE WHEN $a.$key IS NOT NULL
+       |                               THEN 1 ELSE 0 END), 0) AS BIGINT) AS hits,
+       |       CAST(COALESCE(SUM(CASE WHEN $a.$key IS NOT NULL
+       |                               THEN 1 ELSE 0 END), 0) * 1000000
+       |            // COUNT(*) AS BIGINT) AS recall_ppm
+       |FROM exact e LEFT JOIN $approx $a
+       |  ON e.$key = $a.$key AND e.neighbor_id = $a.neighbor_id
+       |GROUP BY e.$key
+       |ORDER BY e.$key""".stripMargin
+
+  /** Scale-aware ANN oracle constants — [[Similarity.scaledBits]] and
+    * [[Similarity.scaledCentroids]] replayed in SQL, so one oracle text
+    * is correct at EVERY scale factor (the former literal 8/16 were only
+    * right while the embeddings corpus stayed under 4096 rows; the sf1
+    * ratchet crosses that). `ceil(log2(buckets))` equals the Scala
+    * `64 - nlz(buckets - 1)` for buckets >= 2; the greatest(2, ·) floor
+    * lands in the same max(8, ·) clamp as Scala's buckets <= 1 case.
+    */
+  private val annParamsSql =
+    """params AS (
+      |  SELECT least(24, greatest(8,
+      |           CAST(ceil(log2(greatest(2, count(*) // 64))) AS INT))) AS bits,
+      |         CASE WHEN count(*) <= 4096 THEN 16
+      |              ELSE least(65536, CAST(ceil(sqrt(count(*))) AS BIGINT))
+      |         END AS k
+      |  FROM embeddings)""".stripMargin
+
+  /** `rp(i, r)` — `$n` deterministic Rademacher hyperplanes over 64 dims
+    * (the md5 mirror of [[Similarity.randomProjection]]'s ±1 planes).
+    */
+  private def hyperplanesSql(n: String): String =
+    s"""rp AS (
+       |  SELECT i.i AS i,
+       |         list_transform(range(0, 64),
+       |           j -> CASE WHEN CAST('0x' || substr(md5('rp-' || i.i || '-' || j),
+       |                               1, 1) AS INT) % 2 = 0
+       |                     THEN 1 ELSE -1 END) AS r
+       |  FROM (SELECT unnest(range($n)) AS i) i)""".stripMargin
+
+  /** `bk(vec_id, qv, bucket)` — the `params.bits`-bit sign bucket of
+    * every `qv` vector (mirror of [[Similarity.signBucket]]).
+    */
+  private val signBucketSql =
+    """bk AS (
+      |  SELECT vec_id, qv,
+      |         CAST(list_sum(list_transform(range(0, p.bits),
+      |           j -> CASE WHEN qv[CAST(j AS INT)+1] > 0
+      |                     THEN (1 << CAST(j AS INT)) ELSE 0 END)) AS INT) AS bucket
+      |  FROM qv, params p)""".stripMargin
+
+  /** `cent(centroid_id, nrm, cv)` — the `params.k` md5 hash centroids over
+    * 64 dims, L2-normalized to the ×1000 scale (mirror of
+    * [[Similarity.ivfCentroids]]).
+    */
+  private val hashCentroidsSql =
+    """cent AS (
+      |  SELECT centroid_id,
+      |         greatest(1.0, sqrt(list_sum(list_transform(raw,
+      |           x -> CAST(x * x AS DOUBLE))))) AS nrm,
+      |         list_transform(raw,
+      |           x -> CAST(trunc(x * 1000.0 / nrm) AS BIGINT)) AS cv
+      |  FROM (
+      |    SELECT c.c AS centroid_id,
+      |           list_transform(range(0, 64),
+      |             d -> CAST('0x' || substr(md5('ivf-' || c.c || '-' || d), 1, 7) AS BIGINT)
+      |                  % 2001 - 1000) AS raw
+      |    FROM (SELECT unnest(range((SELECT k FROM params))) AS c) c))""".stripMargin
+
+  /** Nearest-centroid rank of every `$src` vector (`$cols` from `v`)
+    * against `$cents(centroid_id, cv)`: exact integer squared distance,
+    * ties to the smaller id — `rk = 1` is the IVF assignment.
+    */
+  private def centroidRanksSql(cols: String, src: String, cents: String): String =
+    s"""SELECT $cols, c.centroid_id,
+       |       row_number() OVER (PARTITION BY v.vec_id ORDER BY
+       |         ${dotSql("v.qv", "v.qv")} - 2 * ${dotSql("v.qv", "c.cv")}
+       |           + ${dotSql("c.cv", "c.cv")} ASC, c.centroid_id) AS rk
+       |FROM $src v CROSS JOIN $cents c""".stripMargin
+
+  /** Single-list IVF assignment `(vec_id, qv, centroid_id)` of `qv`. */
+  private def assignSql(cents: String): String =
+    s"""SELECT vec_id, qv, centroid_id FROM (
+       |  ${centroidRanksSql("v.vec_id, v.qv", "qv", cents)}) WHERE rk = 1""".stripMargin
+
+  /** Multi-probe sides over `ranks`: `assignq` (each `% $queryMod` query's
+    * `$nprobe` nearest lists) and `assignc` (the corpus, single-list).
+    */
+  private def probeSidesSql(nprobe: Int, queryMod: Int): String =
+    s"""assignq AS (
+       |  SELECT vec_id, qv, centroid_id FROM ranks
+       |  WHERE rk <= $nprobe AND vec_id % $queryMod = 0),
+       |assignc AS (SELECT vec_id, qv, centroid_id FROM ranks WHERE rk = 1)""".stripMargin
+
+  /** `$name(query_id, neighbor_id, cosine)` — cosine of every `$q` query
+    * against the `$c` vectors of the same centroid list.
+    */
+  private def listScoredSql(name: String, q: String, c: String): String =
+    s"""$name AS (
+       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+       |         ${cosineSql("q.qv", "c.qv")} AS cosine
+       |  FROM $q q JOIN $c c
+       |    ON q.centroid_id = c.centroid_id AND q.vec_id <> c.vec_id)""".stripMargin
+
+  /** The planted-leakage embeddings (the m4/d18 re-ingest pattern): every
+    * `vec_id % 17 = 0` vector re-enters under +10⁷ (ids < 10⁷ only, the
+    * planted offset's domain) — the `aug` CTE of [[plantedEmbeddings]].
+    */
+  private val augSql =
+    """aug AS (
+      |  SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10000000
+      |  UNION ALL
+      |  SELECT vec_id + 10000000, embedding
+      |  FROM embeddings WHERE vec_id % 17 = 0 AND vec_id < 10000000)""".stripMargin
+
+  /** The s21 decontamination inputs over `aug`: quantized vectors with
+    * their squared norms `nn`, split labels `sp`, and the val∪test side
+    * `ev` that the exact asymmetric scan confirms against `nn`.
+    */
+  private val plantedEvalSql =
+    s"""$augSql,
+       |nv AS (
+       |  ${quantizeSql("vec_id", "aug")}),
+       |nn AS (SELECT vec_id, qv, ${dotSql("qv", "qv")} AS nsq FROM nv),
+       |sp AS (
+       |  ${splitSql("vec_id", "aug")}),
+       |ev AS (
+       |  SELECT n.vec_id, n.qv, n.nsq FROM nn n JOIN sp s USING (vec_id)
+       |  WHERE s.split <> 'train')""".stripMargin
+
+  /** The planted-leakage corpus, the Spark twin of [[augSql]]: every
+    * `vec_id % 17 = 0` embedding re-enters under +10⁷ with an independent
+    * split hash, so identical vectors straddle splits at every scale.
+    * id-range guard: planted re-ingests live at vec_id + 10⁷ (no-op at
+    * gate scales; collision-proof domain bound at any other).
+    */
+  private def plantedEmbeddings(s: SparkSession, dir: String): DataFrame = {
+    val emb0 = t(s, dir, "embeddings").filter(col("vec_id") < 10000000L)
+    emb0.unionByName(emb0.filter(col("vec_id") % 17 === 0)
+      .withColumn("vec_id", col("vec_id") + 10000000L))
+  }
+
+  /** The 90/5/5 train/val/test label of `id` — t10's split, the Spark twin
+    * of [[splitSql]].
+    */
+  private def splitLabel(id: String): Column = {
+    val u = graft.sampling.Sampling.hashUniformPpm(col(id), "split")
+    when(u < 900000L, "train").when(u < 950000L, "val").otherwise("test")
+  }
+
   // ------------------------------------------------------------------ text
 
   /** T1–T4 — token counts, quality score, language ID, rolling-hash
@@ -140,13 +570,7 @@ object PipelineQueries {
       |       CAST(n_tok AS INT) AS n_tokens,
       |       CAST((n_let + 3) // 4 + n_dig + n_pun AS BIGINT) AS n_subwords,
       |       CAST(n_pun AS INT) AS n_punct,
-      |       CAST(LEAST(100, n_tok)
-      |            + CASE WHEN n_tok > 0
-      |                   THEN LEAST(100, CAST(FLOOR((en_hits + es_hits) * 500 / n_tok) AS INT))
-      |                   ELSE 0 END
-      |            + 100 - CASE WHEN n_chr > 0
-      |                   THEN LEAST(100, CAST(FLOOR(n_pun * 300 / n_chr) AS INT))
-      |                   ELSE 0 END
+      |       CAST(${qualitySql("(en_hits + es_hits)")}
       |            AS BIGINT) AS quality,
       |       CASE WHEN en_hits > es_hits THEN 'en'
       |            WHEN es_hits > en_hits THEN 'es' ELSE 'und' END AS lang_guess,
@@ -390,22 +814,11 @@ object PipelineQueries {
   val t10SplitAssignment = QueryDef("t10_split_assignment",
     (s, dir) => {
       val docs = t(s, dir, "documents")
-      val u = graft.sampling.Sampling.hashUniformPpm(col("doc_id"), "split")
-      docs.select(col("doc_id"),
-          when(u < 900000L, "train").when(u < 950000L, "val")
-            .otherwise("test").as("split"))
+      docs.select(col("doc_id"), splitLabel("doc_id").as("split"))
         .orderBy(col("doc_id"))
     },
-    Some("""
-      |SELECT doc_id,
-      |       CASE WHEN ppm < 900000 THEN 'train'
-      |            WHEN ppm < 950000 THEN 'val'
-      |            ELSE 'test' END AS split
-      |FROM (
-      |  SELECT doc_id,
-      |         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '|split'), 1, 15) AS BIGINT)
-      |           % 1000000 AS ppm
-      |  FROM documents)
+    Some(s"""
+      |${splitSql("doc_id", "documents")}
       |ORDER BY doc_id
       |""".stripMargin))
 
@@ -616,18 +1029,7 @@ object PipelineQueries {
       .select(col("id").as("doc_id"), col("cluster_id"))
       .orderBy(col("doc_id")),
     Some(s"""
-      |WITH RECURSIVE $tokSql,
-      |$shSql,
-      |$seSql,
-      |$prCoocSql,
-      |edges AS (
-      |  SELECT id1 AS src, id2 AS dst FROM pr
-      |  UNION
-      |  SELECT id2, id1 FROM pr),
-      |reach AS (
-      |  SELECT DISTINCT src AS node, src AS lbl FROM edges
-      |  UNION
-      |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)
+      |$jaccardClosureSql
       |SELECT node AS doc_id, CAST(min(lbl) AS BIGINT) AS cluster_id
       |FROM reach GROUP BY node
       |ORDER BY doc_id
@@ -645,18 +1047,7 @@ object PipelineQueries {
         "doc_id", "text")
       .orderBy(col("cluster_id")),
     Some(s"""
-      |WITH RECURSIVE $tokSql,
-      |$shSql,
-      |$seSql,
-      |$prCoocSql,
-      |edges AS (
-      |  SELECT id1 AS src, id2 AS dst FROM pr
-      |  UNION
-      |  SELECT id2, id1 FROM pr),
-      |reach AS (
-      |  SELECT DISTINCT src AS node, src AS lbl FROM edges
-      |  UNION
-      |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
+      |$jaccardClosureSql,
       |comp AS (
       |  SELECT node AS id, min(lbl) AS cluster_id FROM reach GROUP BY node),
       |ranked AS (
@@ -741,37 +1132,9 @@ object PipelineQueries {
   val d3MinhashLsh = QueryDef("d3_minhash_lsh",
     (s, dir) => lshCandsShared(s, dir).orderBy(col("id1"), col("id2")),
     Some(s"""
-      |WITH $tokSql,
-      |$shSql,
-      |hs AS (
-      |  -- shingle-less docs (< n tokens) get NO signature row on the
-      |  -- Spark side (nothing to aggregate) — an all-sentinel signature
-      |  -- here would falsely band every short doc together
-      |  SELECT doc_id,
-      |         list_transform(sh, s -> CAST('0x' || substr(md5(s), 1, 7) AS BIGINT)) AS hs
-      |  FROM sh WHERE len(sh) > 0),
-      |sig AS (
-      |  SELECT doc_id,
-      |         list_transform(range(0, 16),
-      |           i -> coalesce(list_min(list_transform(hs,
-      |                  h -> (h * (i * 2 + 3) + 7919 * i) % 1000003)), 1000003)) AS sig
-      |  FROM hs),
-      |bands AS (
-      |  SELECT doc_id, b.b AS band_idx,
-      |         array_to_string(sig[b.b*4+1:b.b*4+4], '-') AS band_sig
-      |  FROM sig, (SELECT unnest(range(4)) AS b) b),
-      |cand AS (
-      |  SELECT DISTINCT b1.doc_id AS id1, b2.doc_id AS id2
-      |  FROM bands b1 JOIN bands b2
-      |    ON b1.band_idx = b2.band_idx AND b1.band_sig = b2.band_sig
-      |   AND b1.doc_id < b2.doc_id)
-      |SELECT c.id1, c.id2,
-      |       CAST(list_sum(list_transform(range(0, 16),
-      |              i -> CASE WHEN s1.sig[CAST(i AS INT)+1] = s2.sig[CAST(i AS INT)+1]
-      |                        THEN 1 ELSE 0 END)) AS INT) AS est_matches
-      |FROM cand c
-      |JOIN sig s1 ON s1.doc_id = c.id1
-      |JOIN sig s2 ON s2.doc_id = c.id2
+      |WITH $minhashBandsSql,
+      |$lshCandSql
+      |$lshEstSql
       |ORDER BY id1, id2
       |""".stripMargin))
 
@@ -813,30 +1176,8 @@ object PipelineQueries {
         .orderBy(col("id1"), col("id2"))
     },
     Some(s"""
-      |WITH $tokSql,
-      |$shSql,
-      |hs AS (
-      |  -- shingle-less docs (< n tokens) get NO signature row on the
-      |  -- Spark side (nothing to aggregate) — an all-sentinel signature
-      |  -- here would falsely band every short doc together
-      |  SELECT doc_id,
-      |         list_transform(sh, s -> CAST('0x' || substr(md5(s), 1, 7) AS BIGINT)) AS hs
-      |  FROM sh WHERE len(sh) > 0),
-      |sig AS (
-      |  SELECT doc_id,
-      |         list_transform(range(0, 16),
-      |           i -> coalesce(list_min(list_transform(hs,
-      |                  h -> (h * (i * 2 + 3) + 7919 * i) % 1000003)), 1000003)) AS sig
-      |  FROM hs),
-      |bands AS (
-      |  SELECT doc_id, b.b AS band_idx,
-      |         array_to_string(sig[b.b*4+1:b.b*4+4], '-') AS band_sig
-      |  FROM sig, (SELECT unnest(range(4)) AS b) b),
-      |cand AS (
-      |  SELECT DISTINCT b1.doc_id AS id1, b2.doc_id AS id2
-      |  FROM bands b1 JOIN bands b2
-      |    ON b1.band_idx = b2.band_idx AND b1.band_sig = b2.band_sig
-      |   AND b1.doc_id < b2.doc_id),
+      |WITH $minhashBandsSql,
+      |$lshCandSql,
       |est AS (
       |  SELECT c.id1, c.id2,
       |         CAST(list_sum(list_transform(range(0, 16),
@@ -930,33 +1271,6 @@ object PipelineQueries {
 
   // ------------------------------------------------------------ similarity
 
-  private val qSql =
-    """qv AS (
-      |  SELECT vec_id,
-      |         list_transform(embedding,
-      |           x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-      |  FROM embeddings)""".stripMargin
-
-  private def dotSql(a: String, b: String): String =
-    s"CAST(list_dot_product(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[])) AS BIGINT)"
-
-  /** Scale-aware ANN oracle constants — [[Similarity.scaledBits]] and
-    * [[Similarity.scaledCentroids]] replayed in SQL, so one oracle text
-    * is correct at EVERY scale factor (the former literal 8/16 were only
-    * right while the embeddings corpus stayed under 4096 rows; the sf1
-    * ratchet crosses that). `ceil(log2(buckets))` equals the Scala
-    * `64 - nlz(buckets - 1)` for buckets >= 2; the greatest(2, ·) floor
-    * lands in the same max(8, ·) clamp as Scala's buckets <= 1 case.
-    */
-  private val annParamsSql =
-    """params AS (
-      |  SELECT least(24, greatest(8,
-      |           CAST(ceil(log2(greatest(2, count(*) // 64))) AS INT))) AS bits,
-      |         CASE WHEN count(*) <= 4096 THEN 16
-      |              ELSE least(65536, CAST(ceil(sqrt(count(*))) AS BIGINT))
-      |         END AS k
-      |  FROM embeddings)""".stripMargin
-
   /** S1 — brute-force cosine top-5 for the query subset vec_id % 20 == 0:
     * the exact baseline every ANN variant is measured against.
     */
@@ -972,19 +1286,10 @@ object PipelineQueries {
       |scored AS (
       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
       |         ${dotSql("q.qv", "c.qv")} AS dot_q,
-      |         CASE WHEN ${dotSql("q.qv", "q.qv")} > 0 AND ${dotSql("c.qv", "c.qv")} > 0
-      |              THEN CAST(${dotSql("q.qv", "c.qv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("q.qv", "q.qv")} * ${dotSql("c.qv", "c.qv")} AS DOUBLE))
-      |         END AS cosine
+      |         ${cosineSql("q.qv", "c.qv")} AS cosine
       |  FROM qv q, qv c
       |  WHERE q.vec_id % 20 = 0 AND q.vec_id <> c.vec_id),
-      |ranked AS (
-      |  SELECT *, row_number() OVER (PARTITION BY query_id
-      |            ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |  FROM scored)
-      |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, dot_q, cosine
-      |FROM ranked WHERE rank <= 5
-      |ORDER BY query_id, rank
+      |${topKSql(5, "neighbor_id, dot_q, cosine")}
       |""".stripMargin))
 
   /** S2 — sign-bucket LSH ANN: top-3 within the query's 8-bit sign bucket.
@@ -1004,26 +1309,12 @@ object PipelineQueries {
     Some(s"""
       |WITH $qSql,
       |$annParamsSql,
-      |bk AS (
-      |  SELECT vec_id, qv,
-      |         CAST(list_sum(list_transform(range(0, p.bits),
-      |           j -> CASE WHEN qv[CAST(j AS INT)+1] > 0
-      |                     THEN (1 << CAST(j AS INT)) ELSE 0 END)) AS INT) AS bucket
-      |  FROM qv, params p),
+      |$signBucketSql,
       |scored AS (
       |  SELECT q.bucket, q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |         CASE WHEN ${dotSql("q.qv", "q.qv")} > 0 AND ${dotSql("c.qv", "c.qv")} > 0
-      |              THEN CAST(${dotSql("q.qv", "c.qv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("q.qv", "q.qv")} * ${dotSql("c.qv", "c.qv")} AS DOUBLE))
-      |         END AS cosine
+      |         ${cosineSql("q.qv", "c.qv")} AS cosine
       |  FROM bk q JOIN bk c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id),
-      |ranked AS (
-      |  SELECT *, row_number() OVER (PARTITION BY query_id
-      |            ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |  FROM scored)
-      |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, bucket, cosine
-      |FROM ranked WHERE rank <= 3
-      |ORDER BY query_id, rank
+      |${topKSql(3, "neighbor_id, bucket, cosine")}
       |""".stripMargin))
 
   /** S3 — IVF ANN (nprobe=1): deterministic md5-derived coarse centroids,
@@ -1044,40 +1335,15 @@ object PipelineQueries {
     Some(s"""
       |WITH $qSql,
       |$annParamsSql,
-      |cent AS (
-      |  SELECT centroid_id,
-      |         greatest(1.0, sqrt(list_sum(list_transform(raw,
-      |           x -> CAST(x * x AS DOUBLE))))) AS nrm,
-      |         list_transform(raw,
-      |           x -> CAST(trunc(x * 1000.0 / nrm) AS BIGINT)) AS cv
-      |  FROM (
-      |    SELECT c.c AS centroid_id,
-      |           list_transform(range(0, 64),
-      |             d -> CAST('0x' || substr(md5('ivf-' || c.c || '-' || d), 1, 7) AS BIGINT)
-      |                  % 2001 - 1000) AS raw
-      |    FROM (SELECT unnest(range((SELECT k FROM params))) AS c) c)),
+      |$hashCentroidsSql,
       |assign AS (
-      |  SELECT vec_id, qv, centroid_id FROM (
-      |    SELECT v.vec_id, v.qv, c.centroid_id,
-      |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-      |             ${dotSql("v.qv", "v.qv")} - 2 * ${dotSql("v.qv", "c.cv")}
-      |               + ${dotSql("c.cv", "c.cv")} ASC, c.centroid_id) AS rk
-      |    FROM qv v CROSS JOIN cent c) WHERE rk = 1),
+      |  ${assignSql("cent")}),
       |scored AS (
       |  SELECT q.centroid_id, q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |         CASE WHEN ${dotSql("q.qv", "q.qv")} > 0 AND ${dotSql("c.qv", "c.qv")} > 0
-      |              THEN CAST(${dotSql("q.qv", "c.qv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("q.qv", "q.qv")} * ${dotSql("c.qv", "c.qv")} AS DOUBLE))
-      |         END AS cosine
+      |         ${cosineSql("q.qv", "c.qv")} AS cosine
       |  FROM assign q JOIN assign c
       |    ON q.centroid_id = c.centroid_id AND q.vec_id <> c.vec_id),
-      |ranked AS (
-      |  SELECT *, row_number() OVER (PARTITION BY query_id
-      |            ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |  FROM scored)
-      |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, centroid_id, cosine
-      |FROM ranked WHERE rank <= 3
-      |ORDER BY query_id, rank
+      |${topKSql(3, "neighbor_id, centroid_id, cosine")}
       |""".stripMargin))
 
   /** S4 — multi-probe IVF (nprobe=4): each query searches its 4 nearest
@@ -1096,43 +1362,12 @@ object PipelineQueries {
     Some(s"""
       |WITH $qSql,
       |$annParamsSql,
-      |cent AS (
-      |  SELECT centroid_id,
-      |         greatest(1.0, sqrt(list_sum(list_transform(raw,
-      |           x -> CAST(x * x AS DOUBLE))))) AS nrm,
-      |         list_transform(raw,
-      |           x -> CAST(trunc(x * 1000.0 / nrm) AS BIGINT)) AS cv
-      |  FROM (
-      |    SELECT c.c AS centroid_id,
-      |           list_transform(range(0, 64),
-      |             d -> CAST('0x' || substr(md5('ivf-' || c.c || '-' || d), 1, 7) AS BIGINT)
-      |                  % 2001 - 1000) AS raw
-      |    FROM (SELECT unnest(range((SELECT k FROM params))) AS c) c)),
+      |$hashCentroidsSql,
       |ranks AS (
-      |  SELECT v.vec_id, v.qv, c.centroid_id,
-      |         row_number() OVER (PARTITION BY v.vec_id ORDER BY
-      |           ${dotSql("v.qv", "v.qv")} - 2 * ${dotSql("v.qv", "c.cv")}
-      |             + ${dotSql("c.cv", "c.cv")} ASC, c.centroid_id) AS rk
-      |  FROM qv v CROSS JOIN cent c),
-      |assignq AS (
-      |  SELECT vec_id, qv, centroid_id FROM ranks
-      |  WHERE rk <= 4 AND vec_id % 20 = 0),
-      |assignc AS (SELECT vec_id, qv, centroid_id FROM ranks WHERE rk = 1),
-      |scored AS (
-      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |         CASE WHEN ${dotSql("q.qv", "q.qv")} > 0 AND ${dotSql("c.qv", "c.qv")} > 0
-      |              THEN CAST(${dotSql("q.qv", "c.qv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("q.qv", "q.qv")} * ${dotSql("c.qv", "c.qv")} AS DOUBLE))
-      |         END AS cosine
-      |  FROM assignq q JOIN assignc c
-      |    ON q.centroid_id = c.centroid_id AND q.vec_id <> c.vec_id),
-      |ranked AS (
-      |  SELECT *, row_number() OVER (PARTITION BY query_id
-      |            ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |  FROM scored)
-      |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, cosine
-      |FROM ranked WHERE rank <= 5
-      |ORDER BY query_id, rank
+      |  ${centroidRanksSql("v.vec_id, v.qv", "qv", "cent")}),
+      |${probeSidesSql(4, 20)},
+      |${listScoredSql("scored", "assignq", "assignc")},
+      |${topKSql(5, "neighbor_id, cosine")}
       |""".stripMargin))
 
   /** T23 — BM25 retrieval scoring (integer-idf variant), the classic
@@ -1186,30 +1421,14 @@ object PipelineQueries {
     },
     Some(s"""
       |WITH $tokSql,
-      |base AS (
-      |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl,
-      |         CAST(len(list_filter(tk, x -> x = 'join')) AS BIGINT) AS tf_join,
-      |         CAST(len(list_filter(tk, x -> x = 'scan')) AS BIGINT) AS tf_scan,
-      |         CAST(len(list_filter(tk, x -> x = 'merge')) AS BIGINT) AS tf_merge
-      |  FROM toks),
+      |$bm25BaseSql,
       |stats AS (
       |  SELECT CAST(SUM(dl) AS BIGINT) AS tl, COUNT(*) AS n,
-      |         CAST(SUM(CASE WHEN tf_join > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_join,
-      |         CAST(SUM(CASE WHEN tf_scan > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_scan,
-      |         CAST(SUM(CASE WHEN tf_merge > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_merge,
-      |         (SELECT COUNT(*) FROM documents) AS n_all
+      |         $bm25DfSql
       |  FROM base),
       |scored AS (
       |  SELECT doc_id, dl, tf_join, tf_scan, tf_merge,
-      |    CAST(length(bin((n_all + 1) // (df_join + 1))) AS BIGINT)
-      |      * CAST(22 * tf_join * tl AS DOUBLE)
-      |      / CAST(10 * tl * tf_join + 3 * tl + 9 * dl * n_all AS DOUBLE)
-      |    + CAST(length(bin((n_all + 1) // (df_scan + 1))) AS BIGINT)
-      |      * CAST(22 * tf_scan * tl AS DOUBLE)
-      |      / CAST(10 * tl * tf_scan + 3 * tl + 9 * dl * n_all AS DOUBLE)
-      |    + CAST(length(bin((n_all + 1) // (df_merge + 1))) AS BIGINT)
-      |      * CAST(22 * tf_merge * tl AS DOUBLE)
-      |      / CAST(10 * tl * tf_merge + 3 * tl + 9 * dl * n_all AS DOUBLE)
+      |    $bm25ScoreSql
       |      AS score
       |  FROM base, stats)
       |SELECT doc_id, dl, tf_join, tf_scan, tf_merge, score
@@ -1239,50 +1458,19 @@ object PipelineQueries {
     },
     Some(s"""
       |WITH qvl AS (
-      |  SELECT vec_id, label,
-      |         list_transform(embedding,
-      |           x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-      |  FROM embeddings),
+      |  ${quantizeSql("vec_id, label", "embeddings")}),
       |$annParamsSql,
-      |cent AS (
-      |  SELECT centroid_id,
-      |         greatest(1.0, sqrt(list_sum(list_transform(raw,
-      |           x -> CAST(x * x AS DOUBLE))))) AS nrm,
-      |         list_transform(raw,
-      |           x -> CAST(trunc(x * 1000.0 / nrm) AS BIGINT)) AS cv
-      |  FROM (
-      |    SELECT c.c AS centroid_id,
-      |           list_transform(range(0, 64),
-      |             d -> CAST('0x' || substr(md5('ivf-' || c.c || '-' || d), 1, 7) AS BIGINT)
-      |                  % 2001 - 1000) AS raw
-      |    FROM (SELECT unnest(range((SELECT k FROM params))) AS c) c)),
+      |$hashCentroidsSql,
       |ranks AS (
-      |  SELECT v.vec_id, v.label, v.qv, c.centroid_id,
-      |         row_number() OVER (PARTITION BY v.vec_id ORDER BY
-      |           ${dotSql("v.qv", "v.qv")} - 2 * ${dotSql("v.qv", "c.cv")}
-      |             + ${dotSql("c.cv", "c.cv")} ASC, c.centroid_id) AS rk
-      |  FROM qvl v CROSS JOIN cent c),
+      |  ${centroidRanksSql("v.vec_id, v.label, v.qv", "qvl", "cent")}),
       |assignq AS (
       |  SELECT vec_id, qv, centroid_id FROM ranks
       |  WHERE rk <= 4 AND vec_id % 20 = 0),
       |assignc AS (
       |  SELECT vec_id, qv, centroid_id FROM ranks
       |  WHERE rk = 1 AND label % 2 = 0),
-      |scored AS (
-      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |         CASE WHEN ${dotSql("q.qv", "q.qv")} > 0 AND ${dotSql("c.qv", "c.qv")} > 0
-      |              THEN CAST(${dotSql("q.qv", "c.qv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("q.qv", "q.qv")} * ${dotSql("c.qv", "c.qv")} AS DOUBLE))
-      |         END AS cosine
-      |  FROM assignq q JOIN assignc c
-      |    ON q.centroid_id = c.centroid_id AND q.vec_id <> c.vec_id),
-      |ranked AS (
-      |  SELECT *, row_number() OVER (PARTITION BY query_id
-      |            ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |  FROM scored)
-      |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, cosine
-      |FROM ranked WHERE rank <= 5
-      |ORDER BY query_id, rank
+      |${listScoredSql("scored", "assignq", "assignc")},
+      |${topKSql(5, "neighbor_id, cosine")}
       |""".stripMargin))
 
   /** Trained centroids memoized per (session, dir): training runs
@@ -1312,12 +1500,7 @@ object PipelineQueries {
       nprobe: Int, topK: Int, queryMod: Int): String = {
     val iterCtes = (1 to iterations).map { i =>
       s"""a$i AS (
-         |  SELECT vec_id, qv, centroid_id FROM (
-         |    SELECT v.vec_id, v.qv, c.centroid_id,
-         |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |             ${dotSql("v.qv", "v.qv")} - 2 * ${dotSql("v.qv", "c.cv")}
-         |               + ${dotSql("c.cv", "c.cv")} ASC, c.centroid_id) AS rk
-         |    FROM qv v CROSS JOIN c${i - 1} c) WHERE rk = 1),
+         |  ${assignSql(s"c${i - 1}")}),
          |m$i AS (
          |  SELECT a.centroid_id, dd.d AS d,
          |         SUM(a.qv[CAST(dd.d AS INT)+1]) AS s, COUNT(*) AS n
@@ -1342,30 +1525,10 @@ object PipelineQueries {
        |  QUALIFY row_number() OVER (ORDER BY vec_id) <= (SELECT k FROM params)),
        |$iterCtes,
        |ranks AS (
-       |  SELECT v.vec_id, v.qv, c.centroid_id,
-       |         row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |           ${dotSql("v.qv", "v.qv")} - 2 * ${dotSql("v.qv", "c.cv")}
-       |             + ${dotSql("c.cv", "c.cv")} ASC, c.centroid_id) AS rk
-       |  FROM qv v CROSS JOIN c$iterations c),
-       |assignq AS (
-       |  SELECT vec_id, qv, centroid_id FROM ranks
-       |  WHERE rk <= $nprobe AND vec_id % $queryMod = 0),
-       |assignc AS (SELECT vec_id, qv, centroid_id FROM ranks WHERE rk = 1),
-       |scored AS (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |         CASE WHEN ${dotSql("q.qv", "q.qv")} > 0 AND ${dotSql("c.qv", "c.qv")} > 0
-       |              THEN CAST(${dotSql("q.qv", "c.qv")} AS DOUBLE) /
-       |                   sqrt(CAST(${dotSql("q.qv", "q.qv")} * ${dotSql("c.qv", "c.qv")} AS DOUBLE))
-       |         END AS cosine
-       |  FROM assignq q JOIN assignc c
-       |    ON q.centroid_id = c.centroid_id AND q.vec_id <> c.vec_id),
-       |ranked AS (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |            ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-       |  FROM scored)
-       |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, cosine
-       |FROM ranked WHERE rank <= $topK
-       |ORDER BY query_id, rank
+       |  ${centroidRanksSql("v.vec_id, v.qv", "qv", s"c$iterations")}),
+       |${probeSidesSql(nprobe, queryMod)},
+       |${listScoredSql("scored", "assignq", "assignc")},
+       |${topKSql(topK, "neighbor_id, cosine")}
        |""".stripMargin
   }
 
@@ -1455,40 +1618,11 @@ object PipelineQueries {
     Some(s"""
       |WITH $qSql,
       |$annParamsSql,
-      |cent AS (
-      |  SELECT centroid_id,
-      |         greatest(1.0, sqrt(list_sum(list_transform(raw,
-      |           x -> CAST(x * x AS DOUBLE))))) AS nrm,
-      |         list_transform(raw,
-      |           x -> CAST(trunc(x * 1000.0 / nrm) AS BIGINT)) AS cv
-      |  FROM (
-      |    SELECT c.c AS centroid_id,
-      |           list_transform(range(0, 64),
-      |             d -> CAST('0x' || substr(md5('ivf-' || c.c || '-' || d), 1, 7) AS BIGINT)
-      |                  % 2001 - 1000) AS raw
-      |    FROM (SELECT unnest(range((SELECT k FROM params))) AS c) c)),
+      |$hashCentroidsSql,
       |assign AS (
-      |  SELECT vec_id, qv, centroid_id FROM (
-      |    SELECT v.vec_id, v.qv, c.centroid_id,
-      |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-      |             ${dotSql("v.qv", "v.qv")} - 2 * ${dotSql("v.qv", "c.cv")}
-      |               + ${dotSql("c.cv", "c.cv")} ASC, c.centroid_id) AS rk
-      |    FROM qv v CROSS JOIN cent c) WHERE rk = 1),
-      |scored AS (
-      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |         CASE WHEN ${dotSql("q.qv", "q.qv")} > 0 AND ${dotSql("c.qv", "c.qv")} > 0
-      |              THEN CAST(${dotSql("q.qv", "c.qv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("q.qv", "q.qv")} * ${dotSql("c.qv", "c.qv")} AS DOUBLE))
-      |         END AS cosine
-      |  FROM assign q JOIN assign c
-      |    ON q.centroid_id = c.centroid_id AND q.vec_id <> c.vec_id),
-      |ranked AS (
-      |  SELECT *, row_number() OVER (PARTITION BY query_id
-      |            ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |  FROM scored)
-      |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, cosine
-      |FROM ranked WHERE rank <= 3
-      |ORDER BY query_id, rank
+      |  ${assignSql("cent")}),
+      |${listScoredSql("scored", "assign", "assign")},
+      |${topKSql(3, "neighbor_id, cosine")}
       |""".stripMargin))
 
   /** D5 — embedding-cosine near-duplicate pairs at threshold 0.40, decided
@@ -1508,20 +1642,11 @@ object PipelineQueries {
     Some(s"""
       |WITH $qSql,
       |$annParamsSql,
-      |bk AS (
-      |  SELECT vec_id, qv,
-      |         CAST(list_sum(list_transform(range(0, p.bits),
-      |           j -> CASE WHEN qv[CAST(j AS INT)+1] > 0
-      |                     THEN (1 << CAST(j AS INT)) ELSE 0 END)) AS INT) AS bucket
-      |  FROM qv, params p)
+      |$signBucketSql
       |SELECT a.vec_id AS id1, b.vec_id AS id2,
       |       ${dotSql("a.qv", "b.qv")} AS dot_q
       |FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-      |WHERE ${dotSql("a.qv", "b.qv")} > 0
-      |  AND CAST(${dotSql("a.qv", "b.qv")} AS HUGEINT) * ${dotSql("a.qv", "b.qv")}
-      |      * 1000000 * 1000000
-      |      >= CAST(${dotSql("a.qv", "a.qv")} AS HUGEINT) * ${dotSql("b.qv", "b.qv")}
-      |         * 400000 * 400000
+      |WHERE ${cosineGateSql("a.qv", "b.qv", 400000L)}
       |ORDER BY id1, id2
       |""".stripMargin))
 
@@ -1536,14 +1661,7 @@ object PipelineQueries {
       graft.sketch.Sketch.kmvEstimate(docs, "text", 64)
     },
     Some(s"""
-      |WITH h AS (
-      |  SELECT DISTINCT CAST('0x' || substr(md5(text), 1, 10) AS BIGINT) AS hh
-      |  FROM documents),
-      |topk AS (SELECT hh FROM h ORDER BY hh LIMIT 64)
-      |SELECT CAST(CASE WHEN COUNT(*) < 64 THEN COUNT(*)
-      |            ELSE ${63L * graft.sketch.Sketch.HashSpace} // MAX(hh) END
-      |       AS BIGINT) AS distinct_estimate,
-      |       COUNT(*) AS sketch_size
+      |$kmvEstimateSql
       |FROM topk
       |""".stripMargin))
 
@@ -1595,7 +1713,7 @@ object PipelineQueries {
           "media_id", "features", 3)
         .orderBy(col("query_id"), col("rank"))
     },
-    Some("""
+    Some(s"""
       |WITH m AS (
       |  SELECT doc_id AS media_id, md5(text) AS h FROM documents),
       |fv AS (
@@ -1615,13 +1733,7 @@ object PipelineQueries {
       |         END AS cosine
       |  FROM fv q, fv c
       |  WHERE q.media_id % 25 = 0 AND q.media_id <> c.media_id),
-      |ranked AS (
-      |  SELECT *, row_number() OVER (PARTITION BY query_id
-      |            ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |  FROM scored)
-      |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, dot_q, cosine
-      |FROM ranked WHERE rank <= 3
-      |ORDER BY query_id, rank
+      |${topKSql(3, "neighbor_id, dot_q, cosine")}
       |""".stripMargin))
 
   /** M3 — multimodal resize → frame-sample composition: binary media
@@ -1997,22 +2109,7 @@ object PipelineQueries {
         .orderBy(col("probe_id"), col("corpus_id"))
     },
     Some(s"""
-      |WITH $tokSql,
-      |$shSql,
-      |hs AS (
-      |  SELECT doc_id,
-      |         list_transform(sh, s -> CAST('0x' || substr(md5(s), 1, 7) AS BIGINT)) AS hs
-      |  FROM sh WHERE len(sh) > 0),
-      |sig AS (
-      |  SELECT doc_id,
-      |         list_transform(range(0, 16),
-      |           i -> coalesce(list_min(list_transform(hs,
-      |                  h -> (h * (i * 2 + 3) + 7919 * i) % 1000003)), 1000003)) AS sig
-      |  FROM hs),
-      |bands AS (
-      |  SELECT doc_id, b.b AS band_idx,
-      |         array_to_string(sig[b.b*4+1:b.b*4+4], '-') AS band_sig
-      |  FROM sig, (SELECT unnest(range(4)) AS b) b),
+      |WITH $minhashBandsSql,
       |cand AS (
       |  SELECT DISTINCT p.doc_id AS probe_id, c.doc_id AS corpus_id
       |  FROM bands p JOIN bands c
@@ -2089,18 +2186,7 @@ object PipelineQueries {
         .orderBy(col("lang"), col("shard_id"))
     },
     Some(s"""
-      |WITH $tokSql,
-      |v AS (SELECT lang, doc_id, CAST(len(tk) AS BIGINT) AS tok FROM toks),
-      |w AS (SELECT lang, doc_id, tok,
-      |        CAST(SUM(tok) OVER (PARTITION BY lang ORDER BY doc_id
-      |               ROWS UNBOUNDED PRECEDING) - tok AS BIGINT) AS start_off
-      |      FROM v)
-      |SELECT lang, CAST(start_off // 512 AS BIGINT) AS shard_id,
-      |       COUNT(*) AS n_docs, CAST(SUM(tok) AS BIGINT) AS tok_sum,
-      |       MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-      |FROM w
-      |GROUP BY lang, shard_id
-      |ORDER BY lang, shard_id
+      |${shardManifestSql(512L)}
       |""".stripMargin))
 
   /** T22 — corpus mixing to target proportions
@@ -2170,27 +2256,15 @@ object PipelineQueries {
     },
     Some(s"""
       |WITH qv AS (
-      |  SELECT vec_id, label,
-      |         list_transform(embedding,
-      |           x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-      |  FROM embeddings),
+      |  ${quantizeSql("vec_id, label", "embeddings")}),
       |scored AS (
       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
       |         ${dotSql("q.qv", "c.qv")} AS dot_q,
-      |         CASE WHEN ${dotSql("q.qv", "q.qv")} > 0 AND ${dotSql("c.qv", "c.qv")} > 0
-      |              THEN CAST(${dotSql("q.qv", "c.qv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("q.qv", "q.qv")} * ${dotSql("c.qv", "c.qv")} AS DOUBLE))
-      |         END AS cosine
+      |         ${cosineSql("q.qv", "c.qv")} AS cosine
       |  FROM qv q, qv c
       |  WHERE q.vec_id % 20 = 0 AND c.label % 2 = 0
       |    AND q.vec_id <> c.vec_id),
-      |ranked AS (
-      |  SELECT *, row_number() OVER (PARTITION BY query_id
-      |            ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |  FROM scored)
-      |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, dot_q, cosine
-      |FROM ranked WHERE rank <= 5
-      |ORDER BY query_id, rank
+      |${topKSql(5, "neighbor_id, dot_q, cosine")}
       |""".stripMargin))
 
   /** Memoized packed shard store for T21 (the k6/s6 read-path pattern):
@@ -2230,18 +2304,7 @@ object PipelineQueries {
         .orderBy(col("lang"), col("shard_id"))
     },
     Some(s"""
-      |WITH $tokSql,
-      |v AS (SELECT lang, doc_id, CAST(len(tk) AS BIGINT) AS tok FROM toks),
-      |w AS (SELECT lang, doc_id, tok,
-      |        CAST(SUM(tok) OVER (PARTITION BY lang ORDER BY doc_id
-      |               ROWS UNBOUNDED PRECEDING) - tok AS BIGINT) AS start_off
-      |      FROM v)
-      |SELECT lang, CAST(start_off // 512 AS BIGINT) AS shard_id,
-      |       COUNT(*) AS n_docs, CAST(SUM(tok) AS BIGINT) AS tok_sum,
-      |       MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-      |FROM w
-      |GROUP BY lang, shard_id
-      |ORDER BY lang, shard_id
+      |${shardManifestSql(512L)}
       |""".stripMargin))
 
   /** D13 — snapshot diff (incremental-refresh front door): two simulated
@@ -2306,10 +2369,8 @@ object PipelineQueries {
   val d15SplitLeakage = QueryDef("d15_split_leakage",
     (s, dir) => {
       val cands = lshCandsShared(s, dir)
-      val u = graft.sampling.Sampling.hashUniformPpm(col("doc_id"), "split")
       val splits = t(s, dir, "documents").select(col("doc_id"),
-        when(u < 900000L, "train").when(u < 950000L, "val")
-          .otherwise("test").as("split"))
+        splitLabel("doc_id").as("split"))
       cands.filter(col("est_matches") >= 8)
         .join(splits.select(col("doc_id").as("id1"),
           col("split").as("split1")), "id1")
@@ -2321,45 +2382,12 @@ object PipelineQueries {
         .orderBy(col("id1"), col("id2"))
     },
     Some(s"""
-      |WITH $tokSql,
-      |$shSql,
-      |hs AS (
-      |  SELECT doc_id,
-      |         list_transform(sh, s -> CAST('0x' || substr(md5(s), 1, 7) AS BIGINT)) AS hs
-      |  FROM sh WHERE len(sh) > 0),
-      |sig AS (
-      |  SELECT doc_id,
-      |         list_transform(range(0, 16),
-      |           i -> coalesce(list_min(list_transform(hs,
-      |                  h -> (h * (i * 2 + 3) + 7919 * i) % 1000003)), 1000003)) AS sig
-      |  FROM hs),
-      |bands AS (
-      |  SELECT doc_id, b.b AS band_idx,
-      |         array_to_string(sig[b.b*4+1:b.b*4+4], '-') AS band_sig
-      |  FROM sig, (SELECT unnest(range(4)) AS b) b),
-      |cand AS (
-      |  SELECT DISTINCT b1.doc_id AS id1, b2.doc_id AS id2
-      |  FROM bands b1 JOIN bands b2
-      |    ON b1.band_idx = b2.band_idx AND b1.band_sig = b2.band_sig
-      |   AND b1.doc_id < b2.doc_id),
+      |WITH $minhashBandsSql,
+      |$lshCandSql,
       |est AS (
-      |  SELECT c.id1, c.id2,
-      |         CAST(list_sum(list_transform(range(0, 16),
-      |                i -> CASE WHEN s1.sig[CAST(i AS INT)+1] = s2.sig[CAST(i AS INT)+1]
-      |                          THEN 1 ELSE 0 END)) AS INT) AS est_matches
-      |  FROM cand c
-      |  JOIN sig s1 ON s1.doc_id = c.id1
-      |  JOIN sig s2 ON s2.doc_id = c.id2),
+      |$lshEstSql),
       |splits AS (
-      |  SELECT doc_id,
-      |         CASE WHEN ppm < 900000 THEN 'train'
-      |              WHEN ppm < 950000 THEN 'val'
-      |              ELSE 'test' END AS split
-      |  FROM (
-      |    SELECT doc_id,
-      |           CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '|split'), 1, 15) AS BIGINT)
-      |             % 1000000 AS ppm
-      |    FROM documents))
+      |  ${splitSql("doc_id", "documents")})
       |SELECT e.id1, s1.split AS split1, e.id2, s2.split AS split2,
       |       e.est_matches
       |FROM est e
@@ -2400,64 +2428,16 @@ object PipelineQueries {
     Some(s"""
       |WITH $qSql,
       |$annParamsSql,
-      |cent AS (
-      |  SELECT centroid_id,
-      |         greatest(1.0, sqrt(list_sum(list_transform(raw,
-      |           x -> CAST(x * x AS DOUBLE))))) AS nrm,
-      |         list_transform(raw,
-      |           x -> CAST(trunc(x * 1000.0 / nrm) AS BIGINT)) AS cv
-      |  FROM (
-      |    SELECT c.c AS centroid_id,
-      |           list_transform(range(0, 64),
-      |             d -> CAST('0x' || substr(md5('ivf-' || c.c || '-' || d), 1, 7) AS BIGINT)
-      |                  % 2001 - 1000) AS raw
-      |    FROM (SELECT unnest(range((SELECT k FROM params))) AS c) c)),
-      |ex_scored AS (
-      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |         CASE WHEN ${dotSql("q.qv", "q.qv")} > 0 AND ${dotSql("c.qv", "c.qv")} > 0
-      |              THEN CAST(${dotSql("q.qv", "c.qv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("q.qv", "q.qv")} * ${dotSql("c.qv", "c.qv")} AS DOUBLE))
-      |         END AS cosine
-      |  FROM qv q, qv c
-      |  WHERE q.vec_id % 20 = 0 AND q.vec_id <> c.vec_id),
-      |exact AS (
-      |  SELECT query_id, neighbor_id FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |              ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |    FROM ex_scored) WHERE rank <= 5),
+      |$hashCentroidsSql,
+      |${exactTop5Sql("query_id")},
       |ranks AS (
-      |  SELECT v.vec_id, v.qv, c.centroid_id,
-      |         row_number() OVER (PARTITION BY v.vec_id ORDER BY
-      |           ${dotSql("v.qv", "v.qv")} - 2 * ${dotSql("v.qv", "c.cv")}
-      |             + ${dotSql("c.cv", "c.cv")} ASC, c.centroid_id) AS rk
-      |  FROM qv v CROSS JOIN cent c),
-      |assignq AS (
-      |  SELECT vec_id, qv, centroid_id FROM ranks
-      |  WHERE rk <= 4 AND vec_id % 20 = 0),
-      |assignc AS (SELECT vec_id, qv, centroid_id FROM ranks WHERE rk = 1),
-      |ap_scored AS (
-      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |         CASE WHEN ${dotSql("q.qv", "q.qv")} > 0 AND ${dotSql("c.qv", "c.qv")} > 0
-      |              THEN CAST(${dotSql("q.qv", "c.qv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("q.qv", "q.qv")} * ${dotSql("c.qv", "c.qv")} AS DOUBLE))
-      |         END AS cosine
-      |  FROM assignq q JOIN assignc c
-      |    ON q.centroid_id = c.centroid_id AND q.vec_id <> c.vec_id),
+      |  ${centroidRanksSql("v.vec_id, v.qv", "qv", "cent")}),
+      |${probeSidesSql(4, 20)},
+      |${listScoredSql("ap_scored", "assignq", "assignc")},
       |approx AS (
       |  SELECT query_id, neighbor_id FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |              ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |    FROM ap_scored) WHERE rank <= 5)
-      |SELECT e.query_id, COUNT(*) AS n_exact,
-      |       CAST(COALESCE(SUM(CASE WHEN a.neighbor_id IS NOT NULL
-      |                              THEN 1 ELSE 0 END), 0) AS BIGINT) AS hits,
-      |       CAST(COALESCE(SUM(CASE WHEN a.neighbor_id IS NOT NULL
-      |                              THEN 1 ELSE 0 END), 0) * 1000000
-      |            // COUNT(*) AS BIGINT) AS recall_ppm
-      |FROM exact e LEFT JOIN approx a
-      |  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-      |GROUP BY e.query_id
-      |ORDER BY e.query_id
+      |    ${rankSql("query_id", "ap_scored")}) WHERE rank <= 5)
+      |$recallSql
       |""".stripMargin))
 
   /** T26 — incremental cardinality store ([[graft.sketch.Sketch
@@ -2483,14 +2463,7 @@ object PipelineQueries {
         .withColumn("n_batches", lit(3))
     },
     Some(s"""
-      |WITH h AS (
-      |  SELECT DISTINCT CAST('0x' || substr(md5(text), 1, 10) AS BIGINT) AS hh
-      |  FROM documents),
-      |topk AS (SELECT hh FROM h ORDER BY hh LIMIT 64)
-      |SELECT CAST(CASE WHEN COUNT(*) < 64 THEN COUNT(*)
-      |            ELSE ${63L * graft.sketch.Sketch.HashSpace} // MAX(hh) END
-      |       AS BIGINT) AS distinct_estimate,
-      |       COUNT(*) AS sketch_size,
+      |$kmvEstimateSql,
       |       CAST(3 AS INT) AS n_batches
       |FROM topk
       |""".stripMargin))
@@ -2535,13 +2508,7 @@ object PipelineQueries {
       |  FROM toks),
       |q AS (
       |  SELECT source, lang, h, pii,
-      |         LEAST(100, n_tok)
-      |         + CASE WHEN n_tok > 0
-      |                THEN LEAST(100, CAST(FLOOR(hits * 500 / n_tok) AS INT))
-      |                ELSE 0 END
-      |         + 100 - CASE WHEN n_chr > 0
-      |                THEN LEAST(100, CAST(FLOOR(n_pun * 300 / n_chr) AS INT))
-      |                ELSE 0 END AS quality
+      |         ${qualitySql("hits")} AS quality
       |  FROM st)
       |SELECT source, COUNT(*) AS n_docs,
       |       CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
@@ -2584,27 +2551,8 @@ object PipelineQueries {
         .limit(20)
     },
     Some(s"""
-      |WITH $tokSql,
-      |$shSql,
-      |hs AS (
-      |  SELECT doc_id,
-      |         list_transform(sh, s -> CAST('0x' || substr(md5(s), 1, 7) AS BIGINT)) AS hs
-      |  FROM sh WHERE len(sh) > 0),
-      |sig AS (
-      |  SELECT doc_id,
-      |         list_transform(range(0, 16),
-      |           i -> coalesce(list_min(list_transform(hs,
-      |                  h -> (h * (i * 2 + 3) + 7919 * i) % 1000003)), 1000003)) AS sig
-      |  FROM hs),
-      |bands AS (
-      |  SELECT doc_id, b.b AS band_idx,
-      |         array_to_string(sig[b.b*4+1:b.b*4+4], '-') AS band_sig
-      |  FROM sig, (SELECT unnest(range(4)) AS b) b),
-      |cand AS (
-      |  SELECT DISTINCT b1.doc_id AS id1, b2.doc_id AS id2
-      |  FROM bands b1 JOIN bands b2
-      |    ON b1.band_idx = b2.band_idx AND b1.band_sig = b2.band_sig
-      |   AND b1.doc_id < b2.doc_id),
+      |WITH $minhashBandsSql,
+      |$lshCandSql,
       |hubs AS (SELECT lang, MIN(doc_id) AS hub FROM documents GROUP BY lang),
       |pairs AS (
       |  SELECT id1, id2 FROM cand
@@ -2817,30 +2765,14 @@ object PipelineQueries {
     },
     Some(s"""
       |WITH $tokSql,
-      |base AS (
-      |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl,
-      |         CAST(len(list_filter(tk, x -> x = 'join')) AS BIGINT) AS tf_join,
-      |         CAST(len(list_filter(tk, x -> x = 'scan')) AS BIGINT) AS tf_scan,
-      |         CAST(len(list_filter(tk, x -> x = 'merge')) AS BIGINT) AS tf_merge
-      |  FROM toks),
+      |$bm25BaseSql,
       |stats AS (
       |  SELECT CAST(SUM(dl) AS BIGINT) AS tl,
-      |         CAST(SUM(CASE WHEN tf_join > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_join,
-      |         CAST(SUM(CASE WHEN tf_scan > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_scan,
-      |         CAST(SUM(CASE WHEN tf_merge > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_merge,
-      |         (SELECT COUNT(*) FROM documents) AS n_all
+      |         $bm25DfSql
       |  FROM base),
       |scored AS (
       |  SELECT doc_id,
-      |    CAST(length(bin((n_all + 1) // (df_join + 1))) AS BIGINT)
-      |      * CAST(22 * tf_join * tl AS DOUBLE)
-      |      / CAST(10 * tl * tf_join + 3 * tl + 9 * dl * n_all AS DOUBLE)
-      |    + CAST(length(bin((n_all + 1) // (df_scan + 1))) AS BIGINT)
-      |      * CAST(22 * tf_scan * tl AS DOUBLE)
-      |      / CAST(10 * tl * tf_scan + 3 * tl + 9 * dl * n_all AS DOUBLE)
-      |    + CAST(length(bin((n_all + 1) // (df_merge + 1))) AS BIGINT)
-      |      * CAST(22 * tf_merge * tl AS DOUBLE)
-      |      / CAST(10 * tl * tf_merge + 3 * tl + 9 * dl * n_all AS DOUBLE)
+      |    $bm25ScoreSql
       |      AS s_bm,
       |    CASE WHEN dl > 0 THEN
       |      CAST(length(bin((n_all + 1) // (df_join + 1)))
@@ -3108,35 +3040,10 @@ object PipelineQueries {
         .orderBy(col("id1"), col("id2"))
     },
     Some(s"""
-      |WITH $tokSql,
-      |$shSql,
-      |hs AS (
-      |  SELECT doc_id,
-      |         list_transform(sh, s -> CAST('0x' || substr(md5(s), 1, 7) AS BIGINT)) AS hs
-      |  FROM sh WHERE len(sh) > 0),
-      |sig AS (
-      |  SELECT doc_id,
-      |         list_transform(range(0, 16),
-      |           i -> coalesce(list_min(list_transform(hs,
-      |                  h -> (h * (i * 2 + 3) + 7919 * i) % 1000003)), 1000003)) AS sig
-      |  FROM hs),
-      |bands AS (
-      |  SELECT doc_id, b.b AS band_idx,
-      |         array_to_string(sig[b.b*4+1:b.b*4+4], '-') AS band_sig
-      |  FROM sig, (SELECT unnest(range(4)) AS b) b),
-      |cand AS (
-      |  SELECT DISTINCT b1.doc_id AS id1, b2.doc_id AS id2
-      |  FROM bands b1 JOIN bands b2
-      |    ON b1.band_idx = b2.band_idx AND b1.band_sig = b2.band_sig
-      |   AND b1.doc_id < b2.doc_id),
+      |WITH $minhashBandsSql,
+      |$lshCandSql,
       |est AS (
-      |  SELECT c.id1, c.id2,
-      |         CAST(list_sum(list_transform(range(0, 16),
-      |                i -> CASE WHEN s1.sig[CAST(i AS INT)+1] = s2.sig[CAST(i AS INT)+1]
-      |                          THEN 1 ELSE 0 END)) AS INT) AS est_matches
-      |  FROM cand c
-      |  JOIN sig s1 ON s1.doc_id = c.id1
-      |  JOIN sig s2 ON s2.doc_id = c.id2),
+      |$lshEstSql),
       |p AS (SELECT doc_id, substr(text, 1, 200) AS pfx FROM documents),
       |v AS (
       |  SELECT e.id1, e.id2, e.est_matches,
@@ -3287,23 +3194,15 @@ object PipelineQueries {
       |WITH $qSql,
       |scored AS (
       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |         CASE WHEN ${dotSql("q.qv", "q.qv")} > 0 AND ${dotSql("c.qv", "c.qv")} > 0
-      |              THEN CAST(${dotSql("q.qv", "c.qv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("q.qv", "q.qv")} * ${dotSql("c.qv", "c.qv")} AS DOUBLE))
-      |         END AS cosine
+      |         ${cosineSql("q.qv", "c.qv")} AS cosine
       |  FROM qv q, qv c
       |  WHERE q.vec_id % 50 = 0 AND q.vec_id <> c.vec_id),
       |pool AS (
       |  SELECT * FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |              ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |    FROM scored) WHERE rank <= 10),
+      |    ${rankSql("query_id", "scored")}) WHERE rank <= 10),
       |ps AS (
       |  SELECT a.query_id, a.neighbor_id AS a, b.neighbor_id AS b,
-      |         CASE WHEN ${dotSql("va.qv", "va.qv")} > 0 AND ${dotSql("vb.qv", "vb.qv")} > 0
-      |              THEN CAST(${dotSql("va.qv", "vb.qv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("va.qv", "va.qv")} * ${dotSql("vb.qv", "vb.qv")} AS DOUBLE))
-      |         END AS sim
+      |         ${cosineSql("va.qv", "vb.qv")} AS sim
       |  FROM pool a JOIN pool b
       |    ON a.query_id = b.query_id AND a.neighbor_id <> b.neighbor_id
       |  JOIN qv va ON va.vec_id = a.neighbor_id
@@ -3446,13 +3345,7 @@ object PipelineQueries {
       |  FROM toks),
       |q AS (
       |  SELECT lang,
-      |         LEAST(100, n_tok)
-      |         + CASE WHEN n_tok > 0
-      |                THEN LEAST(100, CAST(FLOOR(hits * 500 / n_tok) AS INT))
-      |                ELSE 0 END
-      |         + 100 - CASE WHEN n_chr > 0
-      |                THEN LEAST(100, CAST(FLOOR(n_pun * 300 / n_chr) AS INT))
-      |                ELSE 0 END AS v
+      |         ${qualitySql("hits")} AS v
       |  FROM st),
       |b AS (SELECT lang, ${graft.sketch.ApproxQuantiles.logBinSql("v", 4)} AS id
       |      FROM q WHERE v >= 0),
@@ -3615,13 +3508,7 @@ object PipelineQueries {
     },
     Some(s"""
       |WITH $qSql,
-      |rp AS (
-      |  SELECT i.i AS i,
-      |         list_transform(range(0, 64),
-      |           j -> CASE WHEN CAST('0x' || substr(md5('rp-' || i.i || '-' || j),
-      |                               1, 1) AS INT) % 2 = 0
-      |                     THEN 1 ELSE -1 END) AS r
-      |  FROM (SELECT unnest(range(16)) AS i) i),
+      |${hyperplanesSql("16")},
       |pvec AS (
       |  SELECT vec_id, list(CAST(d AS BIGINT) ORDER BY i) AS pv
       |  FROM (SELECT v.vec_id, r.i,
@@ -3629,42 +3516,16 @@ object PipelineQueries {
       |                                CAST(r.r AS DOUBLE[])) AS d
       |        FROM qv v, rp r)
       |  GROUP BY vec_id),
-      |ex_scored AS (
-      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |         CASE WHEN ${dotSql("q.qv", "q.qv")} > 0 AND ${dotSql("c.qv", "c.qv")} > 0
-      |              THEN CAST(${dotSql("q.qv", "c.qv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("q.qv", "q.qv")} * ${dotSql("c.qv", "c.qv")} AS DOUBLE))
-      |         END AS cosine
-      |  FROM qv q, qv c
-      |  WHERE q.vec_id % 20 = 0 AND q.vec_id <> c.vec_id),
-      |exact AS (
-      |  SELECT query_id, neighbor_id FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |              ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |    FROM ex_scored) WHERE rank <= 5),
+      |${exactTop5Sql("query_id")},
       |ap_scored AS (
       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |         CASE WHEN ${dotSql("q.pv", "q.pv")} > 0 AND ${dotSql("c.pv", "c.pv")} > 0
-      |              THEN CAST(${dotSql("q.pv", "c.pv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("q.pv", "q.pv")} * ${dotSql("c.pv", "c.pv")} AS DOUBLE))
-      |         END AS cosine
+      |         ${cosineSql("q.pv", "c.pv")} AS cosine
       |  FROM pvec q, pvec c
       |  WHERE q.vec_id % 20 = 0 AND q.vec_id <> c.vec_id),
       |approx AS (
       |  SELECT query_id, neighbor_id FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |              ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |    FROM ap_scored) WHERE rank <= 5)
-      |SELECT e.query_id, COUNT(*) AS n_exact,
-      |       CAST(COALESCE(SUM(CASE WHEN a.neighbor_id IS NOT NULL
-      |                              THEN 1 ELSE 0 END), 0) AS BIGINT) AS hits,
-      |       CAST(COALESCE(SUM(CASE WHEN a.neighbor_id IS NOT NULL
-      |                              THEN 1 ELSE 0 END), 0) * 1000000
-      |            // COUNT(*) AS BIGINT) AS recall_ppm
-      |FROM exact e LEFT JOIN approx a
-      |  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-      |GROUP BY e.query_id
-      |ORDER BY e.query_id
+      |    ${rankSql("query_id", "ap_scored")}) WHERE rank <= 5)
+      |$recallSql
       |""".stripMargin))
 
   /** T36 — per-language fixed-size priority sample
@@ -4157,27 +4018,8 @@ object PipelineQueries {
         .orderBy(col("deg").desc, col("doc_id")).limit(20)
     },
     Some(s"""
-      |WITH $tokSql,
-      |$shSql,
-      |hs AS (
-      |  SELECT doc_id,
-      |         list_transform(sh, s -> CAST('0x' || substr(md5(s), 1, 7) AS BIGINT)) AS hs
-      |  FROM sh WHERE len(sh) > 0),
-      |sig AS (
-      |  SELECT doc_id,
-      |         list_transform(range(0, 16),
-      |           i -> coalesce(list_min(list_transform(hs,
-      |                  h -> (h * (i * 2 + 3) + 7919 * i) % 1000003)), 1000003)) AS sig
-      |  FROM hs),
-      |bands AS (
-      |  SELECT doc_id, b.b AS band_idx,
-      |         array_to_string(sig[b.b*4+1:b.b*4+4], '-') AS band_sig
-      |  FROM sig, (SELECT unnest(range(4)) AS b) b),
-      |cand AS (
-      |  SELECT DISTINCT b1.doc_id AS id1, b2.doc_id AS id2
-      |  FROM bands b1 JOIN bands b2
-      |    ON b1.band_idx = b2.band_idx AND b1.band_sig = b2.band_sig
-      |   AND b1.doc_id < b2.doc_id),
+      |WITH $minhashBandsSql,
+      |$lshCandSql,
       |hubs AS (SELECT lang, MIN(doc_id) AS hub FROM documents GROUP BY lang),
       |pairs AS (
       |  SELECT id1, id2 FROM cand
@@ -4225,7 +4067,6 @@ object PipelineQueries {
     */
   val d20ClusterMedoids = QueryDef("d20_cluster_medoids",
     (s, dir) => {
-      val docs = t(s, dir, "documents")
       val members = dupMembers(s, dir)
       val pairs = jaccardPairsShared(s, dir) // both incidence directions
       val cs = members.groupBy(col("cluster_id")).agg(count(lit(1)).as("n"))
@@ -4378,18 +4219,7 @@ object PipelineQueries {
         .orderBy(col("lang"), col("shard_id"))
     },
     Some(s"""
-      |WITH $tokSql,
-      |v AS (SELECT lang, doc_id, CAST(len(tk) AS BIGINT) AS tok FROM toks),
-      |w AS (SELECT lang, doc_id, tok,
-      |        CAST(SUM(tok) OVER (PARTITION BY lang ORDER BY doc_id
-      |               ROWS UNBOUNDED PRECEDING) - tok AS BIGINT) AS start_off
-      |      FROM v)
-      |SELECT lang, CAST(start_off // 256 AS BIGINT) AS shard_id,
-      |       COUNT(*) AS n_docs, CAST(SUM(tok) AS BIGINT) AS tok_sum,
-      |       MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-      |FROM w
-      |GROUP BY lang, shard_id
-      |ORDER BY lang, shard_id
+      |${shardManifestSql(256L)}
       |""".stripMargin))
 
   /** The t42 oracle, generated: `n` unrolled BPE rounds, each a pair
@@ -4523,16 +4353,8 @@ object PipelineQueries {
     */
   val s15SemanticLeakage = QueryDef("s15_semantic_leakage",
     (s, dir) => {
-      // id-range guard: planted re-ingests live at vec_id + 10⁷ (no-op
-      // at gate scales; collision-proof domain bound at any other)
-      val emb0 = t(s, dir, "embeddings")
-        .filter(col("vec_id") < 10000000L)
-      val emb = emb0.unionByName(emb0.filter(col("vec_id") % 17 === 0)
-        .withColumn("vec_id", col("vec_id") + 10000000L))
-      val u = graft.sampling.Sampling.hashUniformPpm(col("vec_id"), "split")
-      val split = emb.select(col("vec_id"),
-        when(u < 900000L, "train").when(u < 950000L, "val")
-          .otherwise("test").as("split"))
+      val emb = plantedEmbeddings(s, dir)
+      val split = emb.select(col("vec_id"), splitLabel("vec_id").as("split"))
       Similarity.cosineNearDupPairsBanded(emb, "vec_id", "embedding", 400000L,
           bands = 8,
           bitsPerBand =
@@ -4548,37 +4370,18 @@ object PipelineQueries {
         .orderBy(col("id1"), col("id2"))
     },
     Some(s"""
-      |WITH aug AS (
-      |  SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10000000
-      |  UNION ALL
-      |  SELECT vec_id + 10000000, embedding
-      |  FROM embeddings WHERE vec_id % 17 = 0 AND vec_id < 10000000),
+      |WITH $augSql,
       |qv AS (
-      |  SELECT vec_id,
-      |         list_transform(embedding,
-      |           x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-      |  FROM aug),
+      |  ${quantizeSql("vec_id", "aug")}),
       |$annParamsSql,
       |sp AS (
-      |  SELECT vec_id,
-      |         CASE WHEN ppm < 900000 THEN 'train'
-      |              WHEN ppm < 950000 THEN 'val'
-      |              ELSE 'test' END AS split
-      |  FROM (
-      |    SELECT vec_id,
-      |           CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR) || '|split'), 1, 15) AS BIGINT)
-      |             % 1000000 AS ppm
-      |    FROM aug)),
+      |  ${splitSql("vec_id", "aug")}),
       |${bandedBlockSql("qv")}
       |pairs AS (
       |  SELECT c.id1, c.id2, ${dotSql("x.qv", "y.qv")} AS dot_q
       |  FROM cand c
       |  JOIN qv x ON x.vec_id = c.id1 JOIN qv y ON y.vec_id = c.id2
-      |  WHERE ${dotSql("x.qv", "y.qv")} > 0
-      |    AND CAST(${dotSql("x.qv", "y.qv")} AS HUGEINT) * ${dotSql("x.qv", "y.qv")}
-      |        * 1000000 * 1000000
-      |        >= CAST(${dotSql("x.qv", "x.qv")} AS HUGEINT) * ${dotSql("y.qv", "y.qv")}
-      |           * 400000 * 400000)
+      |  WHERE ${cosineGateSql("x.qv", "y.qv", 400000L)})
       |SELECT id1, id2, s1.split AS split1, s2.split AS split2, dot_q
       |FROM pairs
       |JOIN sp s1 ON s1.vec_id = id1
@@ -4607,16 +4410,8 @@ object PipelineQueries {
     */
   val s21ExactLeakage = QueryDef("s21_exact_leakage",
     (s, dir) => {
-      // id-range guard: planted re-ingests live at vec_id + 10⁷ (no-op
-      // at gate scales; collision-proof domain bound at any other)
-      val emb0 = t(s, dir, "embeddings")
-        .filter(col("vec_id") < 10000000L)
-      val emb = emb0.unionByName(emb0.filter(col("vec_id") % 17 === 0)
-        .withColumn("vec_id", col("vec_id") + 10000000L))
-      val u = graft.sampling.Sampling.hashUniformPpm(col("vec_id"), "split")
-      val split = emb.select(col("vec_id"),
-        when(u < 900000L, "train").when(u < 950000L, "val")
-          .otherwise("test").as("split"))
+      val emb = plantedEmbeddings(s, dir)
+      val split = emb.select(col("vec_id"), splitLabel("vec_id").as("split"))
         .localCheckpoint(eager = false) // eval filter + two label joins
       val evalSide = emb.join(
         split.filter(col("split") =!= "train").select("vec_id"), "vec_id")
@@ -4636,30 +4431,7 @@ object PipelineQueries {
         .orderBy(col("id1"), col("id2"))
     },
     Some(s"""
-      |WITH aug AS (
-      |  SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10000000
-      |  UNION ALL
-      |  SELECT vec_id + 10000000, embedding
-      |  FROM embeddings WHERE vec_id % 17 = 0 AND vec_id < 10000000),
-      |nv AS (
-      |  SELECT vec_id,
-      |         list_transform(embedding,
-      |           x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-      |  FROM aug),
-      |nn AS (SELECT vec_id, qv, ${dotSql("qv", "qv")} AS nsq FROM nv),
-      |sp AS (
-      |  SELECT vec_id,
-      |         CASE WHEN ppm < 900000 THEN 'train'
-      |              WHEN ppm < 950000 THEN 'val'
-      |              ELSE 'test' END AS split
-      |  FROM (
-      |    SELECT vec_id,
-      |           CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR) || '|split'), 1, 15) AS BIGINT)
-      |             % 1000000 AS ppm
-      |    FROM aug)),
-      |ev AS (
-      |  SELECT n.vec_id, n.qv, n.nsq FROM nn n JOIN sp s USING (vec_id)
-      |  WHERE s.split <> 'train'),
+      |WITH $plantedEvalSql,
       |conf AS (
       |  SELECT DISTINCT least(eid, cid) AS id1, greatest(eid, cid) AS id2,
       |         dot AS dot_q
@@ -4688,13 +4460,7 @@ object PipelineQueries {
     * and s16 share one replay of the blocking they both stand on.
     */
   private def bandedBlockSql(src: String, bands: Int = 8): String = s"""
-      |rp AS (
-      |  SELECT i.i AS i,
-      |         list_transform(range(0, 64),
-      |           j -> CASE WHEN CAST('0x' || substr(md5('rp-' || i.i || '-' || j),
-      |                               1, 1) AS INT) % 2 = 0
-      |                     THEN 1 ELSE -1 END) AS r
-      |  FROM (SELECT unnest(range($bands * (SELECT bits FROM params))) AS i) i),
+      |${hyperplanesSql(s"$bands * (SELECT bits FROM params)")},
       |pl AS (
       |  SELECT v.vec_id, CAST(r.i // p.bits AS INT) AS band,
       |         CASE WHEN ${dotSql("v.qv", "r.r")} > 0
@@ -4714,6 +4480,34 @@ object PipelineQueries {
       |  SELECT DISTINCT a.vec_id AS id1, b.vec_id AS id2
       |  FROM pr a JOIN bb b ON a.band = b.band AND a.bucket = b.bucket
       |    AND a.vec_id < b.vec_id),""".stripMargin
+
+  /** The s18/s25 store-probe replay: the planted re-ingest tier (`bb`
+    * rows passing `$probeFilter`, re-keyed to +10⁷) multi-probes the
+    * banded buckets of `$src` and confirms at cosine 0.9.
+    */
+  private def storeProbeSql(src: String, probeFilter: String): String =
+    s"""${bandedBlockSql(src)}
+       |pbb AS (
+       |  SELECT vec_id + 10000000 AS probe_id, vec_id AS orig_id,
+       |         band, bucket
+       |  FROM bb WHERE $probeFilter),
+       |ppr AS (
+       |  SELECT probe_id, orig_id, band,
+       |         CAST(xor(bucket, CAST(f AS INT)) AS INT) AS bucket
+       |  FROM pbb, fl),
+       |cands AS (
+       |  SELECT DISTINCT p.probe_id, p.orig_id, b.vec_id AS corpus_id
+       |  FROM ppr p JOIN bb b ON p.band = b.band AND p.bucket = b.bucket),
+       |conf AS (
+       |  SELECT c.probe_id, c.corpus_id,
+       |         ${dotSql("x.qv", "y.qv")} AS dot_q
+       |  FROM cands c
+       |  JOIN $src x ON x.vec_id = c.orig_id
+       |  JOIN $src y ON y.vec_id = c.corpus_id
+       |  WHERE c.probe_id <> c.corpus_id
+       |    AND ${cosineGateSql("x.qv", "y.qv", 900000L)})
+       |SELECT probe_id, corpus_id, dot_q FROM conf
+       |ORDER BY probe_id, corpus_id""".stripMargin
 
   /** S16 — BLOCKING RECALL of the near-dup pair proposers, measured the
     * way s11/s13 measure ANN recall: the d5 single-band sign bucket and
@@ -4789,34 +4583,17 @@ object PipelineQueries {
       |         greatest(q.vec_id, c.vec_id) AS id2
       |  FROM qv q, qv c
       |  WHERE q.vec_id % 20 = 0 AND q.vec_id <> c.vec_id
-      |    AND ${dotSql("q.qv", "c.qv")} > 0
-      |    AND CAST(${dotSql("q.qv", "c.qv")} AS HUGEINT) * ${dotSql("q.qv", "c.qv")}
-      |        * 1000000 * 1000000
-      |        >= CAST(${dotSql("q.qv", "q.qv")} AS HUGEINT) * ${dotSql("c.qv", "c.qv")}
-      |           * 400000 * 400000),
-      |bk AS (
-      |  SELECT vec_id, qv,
-      |         CAST(list_sum(list_transform(range(0, p.bits),
-      |           j -> CASE WHEN qv[CAST(j AS INT)+1] > 0
-      |                     THEN (1 << CAST(j AS INT)) ELSE 0 END)) AS INT) AS bucket
-      |  FROM qv, params p),
+      |    AND ${cosineGateSql("q.qv", "c.qv", 400000L)}),
+      |$signBucketSql,
       |plain AS (
       |  SELECT a.vec_id AS id1, b.vec_id AS id2
       |  FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-      |  WHERE ${dotSql("a.qv", "b.qv")} > 0
-      |    AND CAST(${dotSql("a.qv", "b.qv")} AS HUGEINT) * ${dotSql("a.qv", "b.qv")}
-      |        * 1000000 * 1000000
-      |        >= CAST(${dotSql("a.qv", "a.qv")} AS HUGEINT) * ${dotSql("b.qv", "b.qv")}
-      |           * 400000 * 400000),
+      |  WHERE ${cosineGateSql("a.qv", "b.qv", 400000L)}),
       |${bandedBlockSql("qv")}
       |banded AS (
       |  SELECT c.id1, c.id2 FROM cand c
       |  JOIN qv x ON x.vec_id = c.id1 JOIN qv y ON y.vec_id = c.id2
-      |  WHERE ${dotSql("x.qv", "y.qv")} > 0
-      |    AND CAST(${dotSql("x.qv", "y.qv")} AS HUGEINT) * ${dotSql("x.qv", "y.qv")}
-      |        * 1000000 * 1000000
-      |        >= CAST(${dotSql("x.qv", "x.qv")} AS HUGEINT) * ${dotSql("y.qv", "y.qv")}
-      |           * 400000 * 400000),
+      |  WHERE ${cosineGateSql("x.qv", "y.qv", 400000L)}),
       |scored AS (
       |  SELECT 'banded_probe1' AS method, COUNT(*) AS n_exact,
       |         CAST(COALESCE(SUM(CASE WHEN b.id1 IS NOT NULL THEN 1 ELSE 0 END), 0)
@@ -4875,15 +4652,10 @@ object PipelineQueries {
       |scored AS (
       |  SELECT s.id1 AS node_id, s.id2 AS neighbor_id,
       |         ${dotSql("x.qv", "y.qv")} AS dot_q,
-      |         CASE WHEN ${dotSql("x.qv", "x.qv")} > 0 AND ${dotSql("y.qv", "y.qv")} > 0
-      |              THEN CAST(${dotSql("x.qv", "y.qv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("x.qv", "x.qv")} * ${dotSql("y.qv", "y.qv")} AS DOUBLE))
-      |         END AS cosine
+      |         ${cosineSql("x.qv", "y.qv")} AS cosine
       |  FROM sym s JOIN qv x ON x.vec_id = s.id1 JOIN qv y ON y.vec_id = s.id2),
       |ranked AS (
-      |  SELECT *, row_number() OVER (PARTITION BY node_id
-      |            ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |  FROM scored)
+      |  ${rankSql("node_id", "scored")})
       |SELECT node_id, CAST(rank AS INT) AS rank, neighbor_id, dot_q, cosine
       |FROM ranked WHERE rank <= 5
       |ORDER BY node_id, rank
@@ -4941,40 +4713,14 @@ object PipelineQueries {
       |  SELECT id2 AS id1, id1 AS id2 FROM cand),
       |g_scored AS (
       |  SELECT s.id1 AS node_id, s.id2 AS neighbor_id,
-      |         CASE WHEN ${dotSql("x.qv", "x.qv")} > 0 AND ${dotSql("y.qv", "y.qv")} > 0
-      |              THEN CAST(${dotSql("x.qv", "y.qv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("x.qv", "x.qv")} * ${dotSql("y.qv", "y.qv")} AS DOUBLE))
-      |         END AS cosine
+      |         ${cosineSql("x.qv", "y.qv")} AS cosine
       |  FROM sym s JOIN qv x ON x.vec_id = s.id1 JOIN qv y ON y.vec_id = s.id2
       |  WHERE s.id1 % 20 = 0),
       |g_ranked AS (
       |  SELECT node_id, neighbor_id FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY node_id
-      |              ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |    FROM g_scored) WHERE rank <= 5),
-      |ex_scored AS (
-      |  SELECT q.vec_id AS node_id, c.vec_id AS neighbor_id,
-      |         CASE WHEN ${dotSql("q.qv", "q.qv")} > 0 AND ${dotSql("c.qv", "c.qv")} > 0
-      |              THEN CAST(${dotSql("q.qv", "c.qv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("q.qv", "q.qv")} * ${dotSql("c.qv", "c.qv")} AS DOUBLE))
-      |         END AS cosine
-      |  FROM qv q, qv c
-      |  WHERE q.vec_id % 20 = 0 AND q.vec_id <> c.vec_id),
-      |exact AS (
-      |  SELECT node_id, neighbor_id FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY node_id
-      |              ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |    FROM ex_scored) WHERE rank <= 5)
-      |SELECT e.node_id AS node_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
-      |       CAST(COALESCE(SUM(CASE WHEN g.node_id IS NOT NULL
-      |                               THEN 1 ELSE 0 END), 0) AS BIGINT) AS hits,
-      |       CAST(COALESCE(SUM(CASE WHEN g.node_id IS NOT NULL
-      |                               THEN 1 ELSE 0 END), 0) * 1000000
-      |            // COUNT(*) AS BIGINT) AS recall_ppm
-      |FROM exact e LEFT JOIN g_ranked g
-      |  ON e.node_id = g.node_id AND e.neighbor_id = g.neighbor_id
-      |GROUP BY e.node_id
-      |ORDER BY e.node_id
+      |    ${rankSql("node_id", "g_scored")}) WHERE rank <= 5),
+      |${exactTop5Sql("node_id")}
+      |${keyedRecallSql("node_id", "g_ranked", "g")}
       |""".stripMargin))
 
   /** S23 — INT8 quantization recall audit
@@ -5002,42 +4748,16 @@ object PipelineQueries {
       |             THEN (x * 127 + 500) // 1000
       |             ELSE -((-x * 127 + 500) // 1000) END))) AS cv
       |  FROM qv),
-      |ex_scored AS (
-      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |         CASE WHEN ${dotSql("q.qv", "q.qv")} > 0 AND ${dotSql("c.qv", "c.qv")} > 0
-      |              THEN CAST(${dotSql("q.qv", "c.qv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("q.qv", "q.qv")} * ${dotSql("c.qv", "c.qv")} AS DOUBLE))
-      |         END AS cosine
-      |  FROM qv q, qv c
-      |  WHERE q.vec_id % 20 = 0 AND q.vec_id <> c.vec_id),
-      |exact AS (
-      |  SELECT query_id, neighbor_id FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |              ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |    FROM ex_scored) WHERE rank <= 5),
+      |${exactTop5Sql("query_id")},
       |a_scored AS (
       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |         CASE WHEN ${dotSql("q.cv", "q.cv")} > 0 AND ${dotSql("c.cv", "c.cv")} > 0
-      |              THEN CAST(${dotSql("q.cv", "c.cv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("q.cv", "q.cv")} * ${dotSql("c.cv", "c.cv")} AS DOUBLE))
-      |         END AS cosine
+      |         ${cosineSql("q.cv", "c.cv")} AS cosine
       |  FROM q8 q, q8 c
       |  WHERE q.vec_id % 20 = 0 AND q.vec_id <> c.vec_id),
       |approx AS (
       |  SELECT query_id, neighbor_id FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |              ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |    FROM a_scored) WHERE rank <= 5)
-      |SELECT e.query_id AS query_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
-      |       CAST(COALESCE(SUM(CASE WHEN a.query_id IS NOT NULL
-      |                               THEN 1 ELSE 0 END), 0) AS BIGINT) AS hits,
-      |       CAST(COALESCE(SUM(CASE WHEN a.query_id IS NOT NULL
-      |                               THEN 1 ELSE 0 END), 0) * 1000000
-      |            // COUNT(*) AS BIGINT) AS recall_ppm
-      |FROM exact e LEFT JOIN approx a
-      |  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-      |GROUP BY e.query_id
-      |ORDER BY e.query_id
+      |    ${rankSql("query_id", "a_scored")}) WHERE rank <= 5)
+      |${keyedRecallSql("query_id", "approx", "a")}
       |""".stripMargin))
 
   /** D22 — SEMANTIC dedup clusters, keep-one (the SemDeDup pass):
@@ -5112,19 +4832,8 @@ object PipelineQueries {
       |conf AS (
       |  SELECT c.id1, c.id2 FROM cand c
       |  JOIN qv x ON x.vec_id = c.id1 JOIN qv y ON y.vec_id = c.id2
-      |  WHERE ${dotSql("x.qv", "y.qv")} > 0
-      |    AND CAST(${dotSql("x.qv", "y.qv")} AS HUGEINT) * ${dotSql("x.qv", "y.qv")}
-      |        * 1000000 * 1000000
-      |        >= CAST(${dotSql("x.qv", "x.qv")} AS HUGEINT) * ${dotSql("y.qv", "y.qv")}
-      |           * 900000 * 900000),
-      |edges AS (
-      |  SELECT id1 AS src, id2 AS dst FROM conf
-      |  UNION
-      |  SELECT id2, id1 FROM conf),
-      |reach AS (
-      |  SELECT DISTINCT src AS node, src AS lbl FROM edges
-      |  UNION
-      |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
+      |  WHERE ${cosineGateSql("x.qv", "y.qv", 900000L)}),
+      |${closureSql("conf")},
       |comp AS (
       |  SELECT node AS id, min(lbl) AS cluster_id FROM reach GROUP BY node),
       |nrm AS (
@@ -5165,15 +4874,7 @@ object PipelineQueries {
       |sup AS (
       |  SELECT lang, CAST(SUM(len(tk)) AS BIGINT) AS supply_tokens
       |  FROM toks GROUP BY lang),
-      |w AS (
-      |  SELECT lang, supply_tokens,
-      |         CAST(floor(sqrt(CAST(supply_tokens AS DOUBLE))) AS BIGINT)
-      |           AS weight_s
-      |  FROM sup),
-      |tot AS (
-      |  SELECT CAST(SUM(supply_tokens) AS BIGINT) AS t,
-      |         CAST(SUM(weight_s) AS BIGINT) AS sw
-      |  FROM w),
+      |$sqrtWeightsSql,
       |a1 AS (
       |  SELECT w.lang, w.supply_tokens, w.weight_s, t.sw,
       |         CAST(t.t AS HUGEINT) * 900 // 1000 AS budget,
@@ -5288,32 +4989,7 @@ object PipelineQueries {
     Some(s"""
       |WITH $qSql,
       |$annParamsSql,
-      |${bandedBlockSql("qv")}
-      |pbb AS (
-      |  SELECT vec_id + 10000000 AS probe_id, vec_id AS orig_id,
-      |         band, bucket
-      |  FROM bb WHERE vec_id % 17 = 0),
-      |ppr AS (
-      |  SELECT probe_id, orig_id, band,
-      |         CAST(xor(bucket, CAST(f AS INT)) AS INT) AS bucket
-      |  FROM pbb, fl),
-      |cands AS (
-      |  SELECT DISTINCT p.probe_id, p.orig_id, b.vec_id AS corpus_id
-      |  FROM ppr p JOIN bb b ON p.band = b.band AND p.bucket = b.bucket),
-      |conf AS (
-      |  SELECT c.probe_id, c.corpus_id,
-      |         ${dotSql("x.qv", "y.qv")} AS dot_q
-      |  FROM cands c
-      |  JOIN qv x ON x.vec_id = c.orig_id
-      |  JOIN qv y ON y.vec_id = c.corpus_id
-      |  WHERE c.probe_id <> c.corpus_id
-      |    AND ${dotSql("x.qv", "y.qv")} > 0
-      |    AND CAST(${dotSql("x.qv", "y.qv")} AS HUGEINT) * ${dotSql("x.qv", "y.qv")}
-      |        * 1000000 * 1000000
-      |        >= CAST(${dotSql("x.qv", "x.qv")} AS HUGEINT) * ${dotSql("y.qv", "y.qv")}
-      |           * 900000 * 900000)
-      |SELECT probe_id, corpus_id, dot_q FROM conf
-      |ORDER BY probe_id, corpus_id
+      |${storeProbeSql("qv", "vec_id % 17 = 0")}
       |""".stripMargin))
 
   /** S25 — the s18 accreted-store gate on the INT8 store
@@ -5342,32 +5018,7 @@ object PipelineQueries {
       |WITH $qSql,
       |$q8Sql,
       |$annParamsSql,
-      |${bandedBlockSql("q8")}
-      |pbb AS (
-      |  SELECT vec_id + 10000000 AS probe_id, vec_id AS orig_id,
-      |         band, bucket
-      |  FROM bb WHERE vec_id % 17 = 0 AND vec_id < 10000000),
-      |ppr AS (
-      |  SELECT probe_id, orig_id, band,
-      |         CAST(xor(bucket, CAST(f AS INT)) AS INT) AS bucket
-      |  FROM pbb, fl),
-      |cands AS (
-      |  SELECT DISTINCT p.probe_id, p.orig_id, b.vec_id AS corpus_id
-      |  FROM ppr p JOIN bb b ON p.band = b.band AND p.bucket = b.bucket),
-      |conf AS (
-      |  SELECT c.probe_id, c.corpus_id,
-      |         ${dotSql("x.qv", "y.qv")} AS dot_q
-      |  FROM cands c
-      |  JOIN q8 x ON x.vec_id = c.orig_id
-      |  JOIN q8 y ON y.vec_id = c.corpus_id
-      |  WHERE c.probe_id <> c.corpus_id
-      |    AND ${dotSql("x.qv", "y.qv")} > 0
-      |    AND CAST(${dotSql("x.qv", "y.qv")} AS HUGEINT) * ${dotSql("x.qv", "y.qv")}
-      |        * 1000000 * 1000000
-      |        >= CAST(${dotSql("x.qv", "x.qv")} AS HUGEINT) * ${dotSql("y.qv", "y.qv")}
-      |           * 900000 * 900000)
-      |SELECT probe_id, corpus_id, dot_q FROM conf
-      |ORDER BY probe_id, corpus_id
+      |${storeProbeSql("q8", "vec_id % 17 = 0 AND vec_id < 10000000")}
       |""".stripMargin))
 
   /** S26 — s23's recall question asked of the STORE PATH end-to-end:
@@ -5439,11 +5090,7 @@ object PipelineQueries {
       |  JOIN q8 x ON x.vec_id = c.src_id
       |  JOIN q8 y ON y.vec_id = c.corpus_id
       |  WHERE c.probe_id <> c.corpus_id
-      |    AND ${dotSql("x.qv", "y.qv")} > 0
-      |    AND CAST(${dotSql("x.qv", "y.qv")} AS HUGEINT) * ${dotSql("x.qv", "y.qv")}
-      |        * 1000000 * 1000000
-      |        >= CAST(${dotSql("x.qv", "x.qv")} AS HUGEINT) * ${dotSql("y.qv", "y.qv")}
-      |           * 400000 * 400000),
+      |    AND ${cosineGateSql("x.qv", "y.qv", 400000L)}),
       |plist AS (
       |  SELECT vec_id AS probe_id, vec_id AS src_id FROM qv
       |  WHERE vec_id % 20 = 0
@@ -5455,11 +5102,7 @@ object PipelineQueries {
       |  FROM plist p
       |  JOIN qv x ON x.vec_id = p.src_id
       |  JOIN qv c ON c.vec_id <> p.probe_id
-      |  WHERE ${dotSql("x.qv", "c.qv")} > 0
-      |    AND CAST(${dotSql("x.qv", "c.qv")} AS HUGEINT) * ${dotSql("x.qv", "c.qv")}
-      |        * 1000000 * 1000000
-      |        >= CAST(${dotSql("x.qv", "x.qv")} AS HUGEINT) * ${dotSql("c.qv", "c.qv")}
-      |           * 400000 * 400000),
+      |  WHERE ${cosineGateSql("x.qv", "c.qv", 400000L)}),
       |per AS (
       |  SELECT t.probe_id, COUNT(*) AS n_exact,
       |         SUM(CASE WHEN s.corpus_id IS NOT NULL THEN 1 ELSE 0 END)
@@ -5565,30 +5208,20 @@ object PipelineQueries {
       |${pqTrainCtes(kCodes, trainMod, m)},
       |apx_scored AS (
       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |         CASE WHEN ${dotSql("q.qv", "q.qv")} > 0 AND ${dotSql("c.rv", "c.rv")} > 0
-      |              THEN CAST(${dotSql("q.qv", "c.rv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("q.qv", "q.qv")} * ${dotSql("c.rv", "c.rv")} AS DOUBLE))
-      |         END AS cosine
+      |         ${cosineSql("q.qv", "c.rv")} AS cosine
       |  FROM qv q JOIN recon c ON q.vec_id <> c.vec_id
       |  WHERE q.vec_id % 20 = 0),
       |apx AS (
       |  SELECT query_id, neighbor_id, rank FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |              ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |    FROM apx_scored) WHERE rank <= 50),
+      |    ${rankSql("query_id", "apx_scored")}) WHERE rank <= 50),
       |ex_scored AS (
       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |         CASE WHEN ${dotSql("q.qv", "q.qv")} > 0 AND ${dotSql("c.qv", "c.qv")} > 0
-      |              THEN CAST(${dotSql("q.qv", "c.qv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("q.qv", "q.qv")} * ${dotSql("c.qv", "c.qv")} AS DOUBLE))
-      |         END AS cosine
+      |         ${cosineSql("q.qv", "c.qv")} AS cosine
       |  FROM qv q JOIN qv c ON q.vec_id <> c.vec_id
       |  WHERE q.vec_id % 20 = 0),
       |exact AS (
       |  SELECT query_id, neighbor_id FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |              ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |    FROM ex_scored) WHERE rank <= 5)
+      |    ${rankSql("query_id", "ex_scored")}) WHERE rank <= 5)
       |SELECT e.query_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
       |       CAST(COALESCE(SUM(CASE WHEN a.rank <= 5
       |                              THEN 1 ELSE 0 END), 0) AS BIGINT)
@@ -5729,10 +5362,7 @@ object PipelineQueries {
       |  WHERE p.vec_id % 20 = 0 AND b.vec_id <> p.vec_id),
       |adc AS (
       |  SELECT c.query_id, c.neighbor_id,
-      |         CASE WHEN ${dotSql("q.qv", "q.qv")} > 0 AND ${dotSql("r.rv", "r.rv")} > 0
-      |              THEN CAST(${dotSql("q.qv", "r.rv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("q.qv", "q.qv")} * ${dotSql("r.rv", "r.rv")} AS DOUBLE))
-      |         END AS cosine
+      |         ${cosineSql("q.qv", "r.rv")} AS cosine
       |  FROM pcand c
       |  JOIN qv q ON q.vec_id = c.query_id
       |  JOIN recon r ON r.vec_id = c.neighbor_id),
@@ -5747,26 +5377,18 @@ object PipelineQueries {
       |           ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
       |  FROM (
       |    SELECT s.query_id, s.neighbor_id,
-      |           CASE WHEN ${dotSql("q.qv", "q.qv")} > 0 AND ${dotSql("c.qv", "c.qv")} > 0
-      |                THEN CAST(${dotSql("q.qv", "c.qv")} AS DOUBLE) /
-      |                     sqrt(CAST(${dotSql("q.qv", "q.qv")} * ${dotSql("c.qv", "c.qv")} AS DOUBLE))
-      |           END AS cosine
+      |           ${cosineSql("q.qv", "c.qv")} AS cosine
       |    FROM short s
       |    JOIN qv q ON q.vec_id = s.query_id
       |    JOIN qv c ON c.vec_id = s.neighbor_id)),
       |ex_scored AS (
       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |         CASE WHEN ${dotSql("q.qv", "q.qv")} > 0 AND ${dotSql("c.qv", "c.qv")} > 0
-      |              THEN CAST(${dotSql("q.qv", "c.qv")} AS DOUBLE) /
-      |                   sqrt(CAST(${dotSql("q.qv", "q.qv")} * ${dotSql("c.qv", "c.qv")} AS DOUBLE))
-      |         END AS cosine
+      |         ${cosineSql("q.qv", "c.qv")} AS cosine
       |  FROM qv q JOIN qv c ON q.vec_id <> c.vec_id
       |  WHERE q.vec_id % 20 = 0),
       |truth AS (
       |  SELECT query_id, neighbor_id FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |              ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rank
-      |    FROM ex_scored) WHERE rank <= 5)
+      |    ${rankSql("query_id", "ex_scored")}) WHERE rank <= 5)
       |SELECT t.query_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
       |       CAST(COALESCE(SUM(CASE WHEN r.rank <= 5
       |                              THEN 1 ELSE 0 END), 0) AS BIGINT)
@@ -6046,18 +5668,7 @@ object PipelineQueries {
         dupMembers(s, dir), "id", "cluster_id")
       .orderBy(col("doc_id")),
     Some(s"""
-      |WITH RECURSIVE $tokSql,
-      |$shSql,
-      |$seSql,
-      |$prCoocSql,
-      |edges AS (
-      |  SELECT id1 AS src, id2 AS dst FROM pr
-      |  UNION
-      |  SELECT id2, id1 FROM pr),
-      |reach AS (
-      |  SELECT DISTINCT src AS node, src AS lbl FROM edges
-      |  UNION
-      |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
+      |$jaccardClosureSql,
       |comp AS (
       |  SELECT node AS id, min(lbl) AS cluster_id FROM reach GROUP BY node),
       |cs AS (SELECT cluster_id, COUNT(*) AS csize FROM comp GROUP BY 1),
@@ -6147,15 +5758,7 @@ object PipelineQueries {
       |sup AS (
       |  SELECT lang, CAST(SUM(len(tk)) AS BIGINT) AS supply_tokens
       |  FROM toks GROUP BY lang HAVING SUM(len(tk)) > 0),
-      |w AS (
-      |  SELECT lang, supply_tokens,
-      |         CAST(floor(sqrt(CAST(supply_tokens AS DOUBLE))) AS BIGINT)
-      |           AS weight_s
-      |  FROM sup),
-      |tot AS (
-      |  SELECT CAST(SUM(supply_tokens) AS BIGINT) AS t,
-      |         CAST(SUM(weight_s) AS BIGINT) AS sw
-      |  FROM w),
+      |$sqrtWeightsSql,
       |base AS (
       |  SELECT w.lang, w.supply_tokens,
       |         CAST(CAST(t.t AS HUGEINT) * 3000 // 1000
@@ -6291,12 +5894,7 @@ object PipelineQueries {
     */
   val s20ContrastivePairs = QueryDef("s20_contrastive_pairs",
     (s, dir) => {
-      // id-range guard: planted re-ingests live at vec_id + 10⁷ (no-op
-      // at gate scales; collision-proof domain bound at any other)
-      val emb0 = t(s, dir, "embeddings")
-        .filter(col("vec_id") < 10000000L)
-      val aug = emb0.unionByName(emb0.filter(col("vec_id") % 17 === 0)
-        .withColumn("vec_id", col("vec_id") + 10000000L))
+      val aug = plantedEmbeddings(s, dir)
       Similarity.contrastivePairs(aug, "vec_id", "embedding",
           kPos = 3, kNeg = 3, posFloorPpm = 900000L, negCeilPpm = 400000L,
           bands = 8,
@@ -6305,16 +5903,9 @@ object PipelineQueries {
         .orderBy(col("anchor_id"), col("role"), col("rank"))
     },
     Some(s"""
-      |WITH aug AS (
-      |  SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10000000
-      |  UNION ALL
-      |  SELECT vec_id + 10000000, embedding
-      |  FROM embeddings WHERE vec_id % 17 = 0 AND vec_id < 10000000),
+      |WITH $augSql,
       |qv AS (
-      |  SELECT vec_id,
-      |         list_transform(embedding,
-      |           x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-      |  FROM aug),
+      |  ${quantizeSql("vec_id", "aug")}),
       |$annParamsSql,
       |${bandedBlockSql("qv")}
       |dir AS (
@@ -6420,9 +6011,7 @@ object PipelineQueries {
       // is a single-distinct aggregate over ONE parquet-pruned column —
       // no Expand, and the 8 legs run as concurrent stages of one job.
       // Same rows, same order; the oracle is unchanged.
-      val cols = Seq("l_orderkey", "l_partkey", "l_suppkey",
-        "l_linenumber", "l_quantity", "l_extendedprice", "l_discount",
-        "l_tax")
+      val cols = profileCols
       val legs = cols.map { c =>
         t(s, dir, "lineitem").select(col(c))
           .agg(
@@ -6437,9 +6026,7 @@ object PipelineQueries {
       legs.reduce(_ unionByName _).orderBy(col("column_name"))
     },
     Some(s"""
-      |${Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax")
-        .map(c =>
+      |${profileCols.map(c =>
           s"""SELECT '$c' AS column_name,
              |  CAST(COUNT($c) AS BIGINT) AS n_nonnull,
              |  CAST(COUNT(DISTINCT $c) AS BIGINT) AS n_distinct,
@@ -6586,9 +6173,7 @@ object PipelineQueries {
   val a12ColumnProfileSketch = QueryDef("a12_column_profile_sketch",
     (s, dir) => {
       val li = tw(s, dir, "lineitem", "l_orderkey", "l_linenumber")
-      val cols = Seq("l_orderkey", "l_partkey", "l_suppkey",
-        "l_linenumber", "l_quantity", "l_extendedprice", "l_discount",
-        "l_tax")
+      val cols = profileCols
       val k = 256
       val sk = udaf(graft.sketch.Sketch.KmvAggregator(k))
       val aggs = cols.flatMap(c => Seq(
@@ -6611,26 +6196,12 @@ object PipelineQueries {
         .orderBy(col("column_name"))
     },
     Some(s"""
-      |${Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax")
-        .map(c =>
-          s"""SELECT '$c' AS column_name, s.n_nonnull, k.nd AS n_distinct_est,
-             |  s.min_v, s.max_v, s.n_rows
-             |FROM (SELECT CAST(COUNT($c) AS BIGINT) AS n_nonnull,
-             |             CAST(MIN($c) AS DOUBLE) AS min_v,
-             |             CAST(MAX($c) AS DOUBLE) AS max_v,
-             |             CAST(COUNT(*) AS BIGINT) AS n_rows
-             |      FROM lineitem) s
+      |${profileCols.map(c =>
+          s"""${profileLegSql(c, "k")}
              |CROSS JOIN (
-             |  SELECT CAST(CASE WHEN COUNT(*) < 256 THEN COUNT(*)
-             |              ELSE ${255L * graft.sketch.Sketch.HashSpace} // MAX(hh)
-             |              END AS BIGINT) AS nd
+             |  SELECT ${kmv256EstSql("nd")}
              |  FROM (
-             |    SELECT hh FROM (
-             |      SELECT DISTINCT CAST('0x' ||
-             |          substr(md5(CAST($c AS VARCHAR)), 1, 10) AS BIGINT) AS hh
-             |      FROM lineitem WHERE $c IS NOT NULL)
-             |    ORDER BY hh LIMIT 256)) k""".stripMargin)
+             |    ${kmv256MinimaSql(c)})) k""".stripMargin)
         .mkString("\nUNION ALL\n")}
       |ORDER BY column_name
       |""".stripMargin))
@@ -6668,9 +6239,7 @@ object PipelineQueries {
       // would read all 8 columns), and the 8 one-task leg scans already
       // overlap as independent stages of one job
       val li = t(s, dir, "lineitem")
-      val cols = Seq("l_orderkey", "l_partkey", "l_suppkey",
-        "l_linenumber", "l_quantity", "l_extendedprice", "l_discount",
-        "l_tax")
+      val cols = profileCols
       def leg(c: String) = {
         val h = graft.sketch.Sketch.hash40(col(c))
         val rest = h.bitwiseAND(lit((1L << 32) - 1))
@@ -6699,16 +6268,8 @@ object PipelineQueries {
       cols.map(leg).reduce(_.unionByName(_)).orderBy(col("column_name"))
     },
     Some(s"""
-      |${Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax")
-        .map(c =>
-          s"""SELECT '$c' AS column_name, s.n_nonnull, e.nd AS n_distinct_est,
-             |  s.min_v, s.max_v, s.n_rows
-             |FROM (SELECT CAST(COUNT($c) AS BIGINT) AS n_nonnull,
-             |             CAST(MIN($c) AS DOUBLE) AS min_v,
-             |             CAST(MAX($c) AS DOUBLE) AS max_v,
-             |             CAST(COUNT(*) AS BIGINT) AS n_rows
-             |      FROM lineitem) s
+      |${profileCols.map(c =>
+          s"""${profileLegSql(c, "e")}
              |CROSS JOIN (
              |  SELECT CAST(${graft.sketch.Sketch
                   .hllEstimateSql("s_ne", "ne", spark = false)
@@ -6802,9 +6363,6 @@ object PipelineQueries {
     * time — the at-least-once replay the distinct-union algebra must
     * absorb for free.
     */
-  private val kmvProfileCols = Seq("l_orderkey", "l_partkey",
-    "l_suppkey", "l_linenumber", "l_quantity", "l_extendedprice",
-    "l_discount", "l_tax")
   private def kmvStoreDir(s: SparkSession, dir: String): String =
     SessionViews(s, dir, "kmv") {
       val path = TempStores.dir("graft-kmvstore") + "/kidx"
@@ -6813,8 +6371,8 @@ object PipelineQueries {
       // raw column hashes the identical rendering, so the store's
       // minima are bit-equal to a12's per-column k-minima
       def unpivot(df: org.apache.spark.sql.DataFrame) =
-        df.select(expr("stack(" + kmvProfileCols.size + ", " +
-          kmvProfileCols.map(c => s"'$c', cast($c as string)")
+        df.select(expr("stack(" + profileCols.size + ", " +
+          profileCols.map(c => s"'$c', cast($c as string)")
             .mkString(", ") + ") as (column_name, val)"))
       graft.sketch.KmvStore.write(unpivot(li.filter(col("l_orderkey") % 3 === 0)),
         Seq("column_name"), "val", 256, path)
@@ -6845,18 +6403,12 @@ object PipelineQueries {
     (s, dir) => graft.sketch.KmvStore.estimate(s, kmvStoreDir(s, dir))
       .orderBy(col("column_name")),
     Some(s"""
-      |${kmvProfileCols.map(c =>
+      |${profileCols.map(c =>
         s"""SELECT '$c' AS column_name,
-           |       CAST(CASE WHEN COUNT(*) < 256 THEN COUNT(*)
-           |            ELSE ${255L * graft.sketch.Sketch.HashSpace} // MAX(hh)
-           |            END AS BIGINT) AS n_distinct_est,
+           |       ${kmv256EstSql("n_distinct_est")},
            |       CAST(COUNT(*) AS BIGINT) AS sketch_size
            |FROM (
-           |  SELECT hh FROM (
-           |    SELECT DISTINCT CAST('0x' ||
-           |        substr(md5(CAST($c AS VARCHAR)), 1, 10) AS BIGINT) AS hh
-           |    FROM lineitem WHERE $c IS NOT NULL)
-           |  ORDER BY hh LIMIT 256)""".stripMargin)
+           |  ${kmv256MinimaSql(c)})""".stripMargin)
         .mkString("\nUNION ALL\n")}
       |ORDER BY column_name
       |""".stripMargin))
@@ -6935,13 +6487,7 @@ object PipelineQueries {
       |ex AS (
       |  SELECT token, COUNT(*) AS n FROM tok2
       |  GROUP BY token ORDER BY n DESC, token LIMIT 10),
-      |rr AS (SELECT unnest([0, 1, 2, 3]) AS r),
-      |cells AS (
-      |  SELECT source, r,
-      |         CAST('0x' || substr(md5(r || ':' || token), 1, 10)
-      |              AS BIGINT) % 512 AS bucket,
-      |         COUNT(*) AS cnt
-      |  FROM tok2 CROSS JOIN rr GROUP BY 1, 2, 3),
+      |$cmsCellsSql,
       |probe AS (
       |  SELECT token, r,
       |         CAST('0x' || substr(md5(r || ':' || token), 1, 10)
@@ -7010,13 +6556,7 @@ object PipelineQueries {
     Some(s"""
       |WITH $tokSql,
       |tok2 AS (SELECT source, unnest(tk) AS token FROM toks),
-      |rr AS (SELECT unnest([0, 1, 2, 3]) AS r),
-      |cells AS (
-      |  SELECT source, r,
-      |         CAST('0x' || substr(md5(r || ':' || token), 1, 10)
-      |              AS BIGINT) % 512 AS bucket,
-      |         COUNT(*) AS cnt
-      |  FROM tok2 CROSS JOIN rr GROUP BY 1, 2, 3),
+      |$cmsCellsSql,
       |pr AS (
       |  SELECT a.source AS sa, b.source AS sb, r,
       |         SUM(a.cnt * b.cnt) AS est
@@ -7313,16 +6853,8 @@ object PipelineQueries {
     */
   val t56DecontaminatedSplit = QueryDef("t56_decontaminated_split",
     (s, dir) => {
-      // id-range guard: planted re-ingests live at vec_id + 10⁷ (no-op
-      // at gate scales; collision-proof domain bound at any other)
-      val emb0 = t(s, dir, "embeddings")
-        .filter(col("vec_id") < 10000000L)
-      val emb = emb0.unionByName(emb0.filter(col("vec_id") % 17 === 0)
-        .withColumn("vec_id", col("vec_id") + 10000000L))
-      val u = graft.sampling.Sampling.hashUniformPpm(col("vec_id"), "split")
-      val split = emb.select(col("vec_id"),
-        when(u < 900000L, "train").when(u < 950000L, "val")
-          .otherwise("test").as("split"))
+      val emb = plantedEmbeddings(s, dir)
+      val split = emb.select(col("vec_id"), splitLabel("vec_id").as("split"))
         .localCheckpoint(eager = false) // eval filter + relabel join
       val evalSide = emb.join(
         split.filter(col("split") =!= "train").select("vec_id"), "vec_id")
@@ -7340,30 +6872,7 @@ object PipelineQueries {
         .orderBy(col("vec_id"))
     },
     Some(s"""
-      |WITH aug AS (
-      |  SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10000000
-      |  UNION ALL
-      |  SELECT vec_id + 10000000, embedding
-      |  FROM embeddings WHERE vec_id % 17 = 0 AND vec_id < 10000000),
-      |nv AS (
-      |  SELECT vec_id,
-      |         list_transform(embedding,
-      |           x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-      |  FROM aug),
-      |nn AS (SELECT vec_id, qv, ${dotSql("qv", "qv")} AS nsq FROM nv),
-      |sp AS (
-      |  SELECT vec_id,
-      |         CASE WHEN ppm < 900000 THEN 'train'
-      |              WHEN ppm < 950000 THEN 'val'
-      |              ELSE 'test' END AS split
-      |  FROM (
-      |    SELECT vec_id,
-      |           CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR) || '|split'), 1, 15) AS BIGINT)
-      |             % 1000000 AS ppm
-      |    FROM aug)),
-      |ev AS (
-      |  SELECT n.vec_id, n.qv, n.nsq FROM nn n JOIN sp s USING (vec_id)
-      |  WHERE s.split <> 'train'),
+      |WITH $plantedEvalSql,
       |lk AS (
       |  SELECT DISTINCT cid AS vec_id FROM (
       |    SELECT c.vec_id AS cid, ${dotSql("e.qv", "c.qv")} AS dot,
@@ -7725,16 +7234,8 @@ object PipelineQueries {
     */
   val s24DecontamThresholds = QueryDef("s24_decontam_thresholds",
     (s, dir) => {
-      // id-range guard: planted re-ingests live at vec_id + 10⁷ (no-op
-      // at gate scales; collision-proof domain bound at any other)
-      val emb0 = t(s, dir, "embeddings")
-        .filter(col("vec_id") < 10000000L)
-      val emb = emb0.unionByName(emb0.filter(col("vec_id") % 17 === 0)
-        .withColumn("vec_id", col("vec_id") + 10000000L))
-      val u = graft.sampling.Sampling.hashUniformPpm(col("vec_id"), "split")
-      val split = emb.select(col("vec_id"),
-        when(u < 900000L, "train").when(u < 950000L, "val")
-          .otherwise("test").as("split"))
+      val emb = plantedEmbeddings(s, dir)
+      val split = emb.select(col("vec_id"), splitLabel("vec_id").as("split"))
         .localCheckpoint(eager = false) // eval filter + two label joins
       val norms = emb.select(col("vec_id"),
         Similarity.normSqQ(Similarity.quantize(col("embedding")))
@@ -7776,30 +7277,7 @@ object PipelineQueries {
       tiers.reduce(_.unionByName(_)).orderBy(col("threshold_ppm"))
     },
     Some(s"""
-      |WITH aug AS (
-      |  SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10000000
-      |  UNION ALL
-      |  SELECT vec_id + 10000000, embedding
-      |  FROM embeddings WHERE vec_id % 17 = 0 AND vec_id < 10000000),
-      |nv AS (
-      |  SELECT vec_id,
-      |         list_transform(embedding,
-      |           x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-      |  FROM aug),
-      |nn AS (SELECT vec_id, qv, ${dotSql("qv", "qv")} AS nsq FROM nv),
-      |sp AS (
-      |  SELECT vec_id,
-      |         CASE WHEN ppm < 900000 THEN 'train'
-      |              WHEN ppm < 950000 THEN 'val'
-      |              ELSE 'test' END AS split
-      |  FROM (
-      |    SELECT vec_id,
-      |           CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR) || '|split'), 1, 15) AS BIGINT)
-      |             % 1000000 AS ppm
-      |    FROM aug)),
-      |ev AS (
-      |  SELECT n.vec_id, n.qv, n.nsq FROM nn n JOIN sp s USING (vec_id)
-      |  WHERE s.split <> 'train'),
+      |WITH $plantedEvalSql,
       |cp AS (
       |  SELECT DISTINCT least(eid, cid) AS id1, greatest(eid, cid) AS id2,
       |         dot

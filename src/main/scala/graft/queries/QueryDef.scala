@@ -48,6 +48,32 @@ object QueryDef {
     }.toIndexedSeq: _*)
 }
 
+/** The query registries' table readers, shared by [[CoreQueries]] and
+  * [[PipelineQueries]]: `t` is [[Tables.load]], and `tw` is `t`
+  * hash-repartitioned to engine width on `keys` — for queries whose
+  * per-row CPU (multi-md5 sketching, decimal money math, wide aggregates)
+  * dominates the scan. A compacted table (one parquet row group per file
+  * — the gate tables' layout, and common after production compaction)
+  * caps everything up to the first exchange at SCAN parallelism, which
+  * can be a single task while the rest of the engine idles; one narrow
+  * key-hash exchange up front runs the expensive pass at full width (the
+  * guide's repartition-after-unsplittable-read rule, and the
+  * t_text_stats precedent). Hash on a high-cardinality key, not
+  * round-robin: round-robin pays the sort-before-repartition pass inside
+  * the narrow scan stage. At multi-row-group scale the scan is already
+  * wide and this exchange is a bounded one-pass cost the CPU-dense pass
+  * amortizes.
+  */
+private[queries] object QueryTables {
+  def t(s: SparkSession, dir: String, n: String): DataFrame =
+    Tables.load(s, dir, n)
+
+  def tw(s: SparkSession, dir: String, n: String, keys: String*): DataFrame = {
+    val width = s.conf.get("spark.sql.shuffle.partitions").toInt
+    t(s, dir, n).repartition(width, keys.map(col): _*)
+  }
+}
+
 object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet"))

@@ -842,28 +842,20 @@ object Similarity {
     * `dot > 0 && dot^2 * 10^12 >= t^2 * |a|^2 * |b|^2` — no float boundary.
     * Pairs are blocked by sign bucket (near-identical vectors share it).
     */
-  /** Banded multi-probe blocking for [[cosineNearDupPairsBanded]]: one
-    * row per (id, band) with that band's sign bucket over `bitsPerBand`
-    * DETERMINISTIC RANDOM HYPERPLANES (Rademacher rows of
-    * [[rademacherMatrix]], hyperplane index `band*bitsPerBand + j`) —
-    * the general form of [[signBucket]]'s axis-aligned planes. Using
-    * hyperplanes instead of raw dimensions frees the band budget from
-    * the 64-dim axis supply: 8 bands × 24 bits needs 192 planes, which
-    * axis slicing cannot provide but the hash-derived matrix can, so
-    * the bucket count per band keeps scaling with the corpus while the
-    * band count (the recall lever) stays fixed.
-    */
-  def bandedSignBuckets(df: DataFrame, idCol: String, vecCol: String,
-      bands: Int, bitsPerBand: Int, dims: Int = 64): DataFrame =
-    bandedSignBucketsQ(
-      index(widen(df)
-        .select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"))),
-      "id", "qv", bands, bitsPerBand, dims)
-
-  /** [[bandedSignBuckets]] over an ALREADY-QUANTIZED frame — the form a
-    * persisted index path uses so one quantization feeds both the
-    * vector sidecar and the band rows. Output columns are named after
-    * the input (`idCol`, `qvCol`) plus `band`/`bucket`.
+  /** Banded multi-probe blocking for [[cosineNearDupPairsBanded]] over an
+    * ALREADY-QUANTIZED frame: one row per (id, band) with that band's
+    * sign bucket over `bitsPerBand` DETERMINISTIC RANDOM HYPERPLANES
+    * (Rademacher rows of [[rademacherMatrix]], hyperplane index
+    * `band*bitsPerBand + j`) — the general form of [[signBucket]]'s
+    * axis-aligned planes. Using hyperplanes instead of raw dimensions
+    * frees the band budget from the 64-dim axis supply: 8 bands × 24
+    * bits needs 192 planes, which axis slicing cannot provide but the
+    * hash-derived matrix can, so the bucket count per band keeps scaling
+    * with the corpus while the band count (the recall lever) stays
+    * fixed. Taking quantized input lets a persisted index path feed one
+    * quantization to both the vector sidecar and the band rows. Output
+    * columns are named after the input (`idCol`, `qvCol`) plus
+    * `band`/`bucket`.
     */
   def bandedSignBucketsQ(qdf: DataFrame, idCol: String, qvCol: String,
       bands: Int, bitsPerBand: Int, dims: Int = 64): DataFrame = {

@@ -258,14 +258,9 @@ object Sketch {
   /** HyperLogLog (Flajolet et al. 2007) register count: 2^8 buckets. */
   val HllM: Int = 256
 
-  /** α_256 = 0.7213 / (1 + 1.079/256), in exact parts-per-billion —
-    * both engines multiply by the same integer, so the estimate is a
-    * pure function of the data.
-    */
-  val HllAlphaPpb: Long = 718272593L
-
   /** Pre-folded estimator numerator `α·m²·2^33 = (α_ppb · 2^49) DIV 1e9`
-    * = 404351522773154 (49 bits). Folding the two constants BEFORE the
+    * = 404351522773154 (49 bits), where α_ppb = 718272593 is
+    * α_256 = 0.7213 / (1 + 1.079/256) in exact parts-per-billion. Folding the two constants BEFORE the
     * register division keeps every runtime intermediate ≤ this constant:
     * the previous shape `α_ppb · (2^49 DIV S)` overflowed Long once
     * S < ~43,840 (per-group cardinality ≳ 9e9 — inside the 40-bit hash

@@ -1,7 +1,10 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets
+
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -30,20 +33,41 @@ object StagedWorkbook {
     StructField("_row_num", IntegerType, nullable = false),
     StructField("cells", ArrayType(StringType), nullable = false)))
 
-  /** Stage a headerless CSV file as raw sheet rows: one read, collected on
-    * the driver. Rows are numbered by their position in the reader's output
-    * (file order) and carry the reader's 64 cells each.
+  /** Stage a headerless CSV file as raw sheet rows, one row per physical
+    * line: one read by Spark's CSV reader (quote and escape `"`, 64
+    * cells), collected on the driver. The reader drops blank lines (those
+    * whose `trim` is empty), so the file's lines, re-read on the driver
+    * without a job, put a row of 64 null cells back at each blank line, as
+    * [[XlsxIngress]] stages an empty row: `_row_num` stays the physical row
+    * the fixed cells (S5) and header discovery (S4) address. A final line
+    * terminator adds no row.
     */
   def fromCsv(spark: SparkSession, path: String): DataFrame = {
-    val rows = spark.read
+    val parsed = spark.read
       .option("header", "false")
       .option("quote", "\"")
       .option("escape", "\"")
       .schema(StructType((0 until 64).map(i =>
         StructField(s"_c$i", StringType))))
       .csv(path)
-      .collect()
-    fromRows(spark, rows.toSeq.map(r => (0 until r.length).map(r.getString)))
+      .collect().iterator
+    val blank = Seq.fill[String](64)(null)
+    fromRows(spark, readLines(spark, path).map { line =>
+      if (line.trim.isEmpty) blank
+      else { val r = parsed.next(); (0 until r.length).map(r.getString) }
+    })
+  }
+
+  /** The lines of a text file as Spark's line reader splits them (`\n`,
+    * `\r\n` or `\r`), read on the driver without a Spark job.
+    */
+  private def readLines(spark: SparkSession, path: String): Seq[String] = {
+    val p = new Path(path)
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+      finally in.close()
+    val lines = text.split("\r\n|\r|\n", -1).toSeq
+    if (lines.lastOption.contains("")) lines.init else lines
   }
 
   /** Build a staged sheet (a local relation) from in-memory rows. */

@@ -4,7 +4,6 @@ import java.io.InputStream
 import java.util.zip.ZipFile
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 import javax.xml.parsers.SAXParserFactory
 import org.xml.sax.Attributes

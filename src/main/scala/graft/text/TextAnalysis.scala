@@ -134,8 +134,6 @@ object TextAnalysis {
     when(en > es, "en").when(es > en, "es").otherwise("und")
   }
 
-  val FingerprintMod = 2147483647L // 2^31 - 1
-
   /** T-fingerprint — polynomial rolling hash over code points,
     * `h = (h*31 + cp) mod (2^31-1)`, null/empty → null. A native codegen'd
     * expression ([[graft.functions.RollingHash]]) — the HOF character loop

@@ -11,7 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * own concurrent map (the immutable-path row-count cache aside), and
   * only [[GraftSession]] builds a SparkSession. Workbook staging keeps one
   * path: a local sheet (no numbering window, no RDD), with the format
-  * decision made only inside `graft.sources`.
+  * decision made only inside `graft.sources`. Oracle SQL is composed from
+  * named building blocks, one home each beside its Spark twin: a block
+  * pasted into a second oracle drifts from the Spark primitive it mirrors
+  * as soon as one copy is edited, so a re-pasted run of SQL lines fails
+  * here and belongs in a shared block instead.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -52,5 +56,27 @@ class SourceGuardSpec extends AnyFunSuite {
     }
     val callers = hits(root, "isMixedFormat(").map(_._1).distinct
     assert(callers.nonEmpty && callers.forall(_.startsWith("graft/sources/")), callers)
+  }
+
+  test("no 6-line run of oracle SQL is pasted twice under graft/queries") {
+    // stripMargin SQL lines, whitespace collapsed; a line that is only an
+    // interpolation (`|$x,`, `|${f(…)}`) or only `)`/`,` joins no window
+    val skip = """\|\s*(\$\w+|\$\{.*\})\s*,?\s*|\|[\s),]*""".r
+    val files = Files.walk(root.resolve("graft/queries")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+    val runs = files.flatMap { f =>
+      val lines = Files.readAllLines(f).asScala.map(_.trim).zipWithIndex
+      val blocks = lines.foldLeft(Vector(Vector.empty[(String, Int)])) {
+        case (acc, (l, i)) =>
+          if (!l.startsWith("|")) acc :+ Vector.empty
+          else if (skip.matches(l)) acc
+          else acc.init :+ (acc.last :+ (l.split("\\s+").mkString(" "), i + 1))
+      }
+      blocks.flatMap(_.sliding(6).filter(_.size == 6).map(w =>
+        (w.map(_._1), s"${root.relativize(f)}:${w.head._2}")))
+    }
+    val repeated = runs.groupBy(_._1).values.filter(_.size > 1)
+      .map(_.map(_._2).mkString(" = ")).toSeq.sorted
+    assert(repeated.isEmpty, repeated.mkString("\n"))
   }
 }

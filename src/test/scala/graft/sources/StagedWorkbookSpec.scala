@@ -110,6 +110,7 @@ class StagedWorkbookSpec extends SparkSpec {
   }
 
   test("fromCsv rows equal the CSV reader's own output, numbered in file order") {
+    // the reader drops the blank line 3; fromCsv stages it as a null row
     val wide = (1 to 70).map(i => s"w$i").mkString(",")
     val path = tmpFile(".csv", Seq(
       "Año,\"Dirección, calle\",Ñandú,Guías",
@@ -123,10 +124,27 @@ class StagedWorkbookSpec extends SparkSpec {
       .csv(path).collect().map(_.toSeq.map(_.asInstanceOf[String]))
     val staged = StagedWorkbook.fromCsv(spark, path).collect()
       .sortBy(_.getInt(0))
-    assert(staged.map(_.getInt(0)).toSeq == (1 to reader.length))
-    assert(staged.map(_.getSeq[String](1)).toSeq == reader.toSeq)
+    assert(staged.map(_.getInt(0)).toSeq == (1 to reader.length + 1))
+    assert(staged.map(_.getSeq[String](1)).toSeq ==
+      reader.take(2).toSeq ++ Seq(Seq.fill[String](64)(null)) ++ reader.drop(2))
     assert(reader.map(_.head).toSeq == Seq("Año", "dijo \"hola\"", "w1", "solo"))
     assert(reader(0)(1) == "Dirección, calle" && reader.forall(_.size == 64))
+  }
+
+  test("a mixed-format CSV with a blank line above row 6 reads C6/C8 from their physical rows") {
+    val cells = (1 to 9).map {
+      case 2 => ""
+      case 6 => "\"\",\"\",\"Naviera Sur\""
+      case 8 => "\"\",\"\",\"FAC-77\""
+      case 9 => "   "
+      case _ => "\"\",\"\",\"\""
+    } :+ "\"\",\"\",\"last\""
+    val sheet = StagedWorkbook.fromCsv(spark, tmpFile(".csv", cells))
+    val fc = StagedWorkbook.fixedCells(sheet)
+    assert(fc.empresaTransporte.contains("Naviera Sur"))
+    assert(fc.numeroFactura.contains("FAC-77"))
+    assert(StagedWorkbook.isMixedFormat(fc))
+    assert(sheet.count() == 10 && StagedWorkbook.fixedCell(sheet, "C10").contains("last"))
   }
 
   test("a staged sheet serves fixed cells, header discovery and header names without a job") {
