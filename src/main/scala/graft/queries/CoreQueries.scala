@@ -19,16 +19,6 @@ object CoreQueries {
 
   private val money = InvoiceRecord.money
 
-  /** Lineitem's deduplicated PK view, registered in the session cache so
-    * the many queries deriving from it (the p6/o3, scalar-F and merge-J
-    * families) share ONE materialization instead of each re-running the
-    * 600k-row groupBy.
-    */
-  private def uniqShared(s: SparkSession, dir: String): DataFrame = {
-    InvoiceView.ensureShared(s, dir)
-    InvoiceView.uniq(t(s, dir, "lineitem"))
-  }
-
   // ---------------------------------------------------------------- scans/agg
 
   /** A1/A-class headline agg (TPC-H Q1 shape) on exact decimals. */
@@ -323,11 +313,6 @@ object CoreQueries {
 
   // --------------------------------------------------------------- validation
 
-  private def canonicalInvoices(s: SparkSession, dir: String): DataFrame = {
-    InvoiceView.ensureShared(s, dir)
-    InvoiceView.canonical(t(s, dir, "lineitem"))
-  }
-
   /** Oracle-side predicate marking rows the pipeline must reject. */
   private val errCondSql =
     "(l_orderkey % 7 = 0 OR l_orderkey % 13 = 0 OR l_orderkey % 11 = 0)"
@@ -390,7 +375,7 @@ object CoreQueries {
   /** P6 (valid side) + F1/F2/F3/F4 — full canonicalization + validation keep. */
   val p6ValidRows = QueryDef("p6_valid_rows",
     (s, dir) => {
-      val split = Validate.split(canonicalInvoices(s, dir))
+      val split = Validate.split(InvoiceView.sharedCanonical(s, dir))
       split.valid
         .select(col("row_index"), col("invoice_number"), col("reference_number"),
           col("carrier_name"), col("invoice_date"), col("net_amount"),
@@ -418,7 +403,7 @@ object CoreQueries {
     */
   val p6ErrorChannel = QueryDef("p6_error_channel",
     (s, dir) => {
-      val split = Validate.split(canonicalInvoices(s, dir))
+      val split = Validate.split(InvoiceView.sharedCanonical(s, dir))
       split.errors
         .select(col("row_index"), col("invoice_number"), col("error"))
         .orderBy(col("row_index"))
@@ -441,7 +426,7 @@ object CoreQueries {
     */
   val f3ParseMoney = QueryDef("f3_parse_money",
     (s, dir) => {
-      val li = uniqShared(s, dir)
+      val li = InvoiceView.sharedUniq(s, dir)
       val k1 = (col("l_orderkey") % 900 + 100).cast("string") // 3 digits
       val k2 = lpad((col("l_partkey") % 1000).cast("string"), 3, "0")
       val k3 = lpad((col("l_suppkey") % 100).cast("string"), 2, "0")
@@ -483,7 +468,7 @@ object CoreQueries {
   /** F4 + F5 — multi-format date parse incl. the Excel-serial fallback. */
   val f4ParseDate = QueryDef("f4_parse_date",
     (s, dir) => {
-      val li = uniqShared(s, dir)
+      val li = InvoiceView.sharedUniq(s, dir)
       val ok = col("l_orderkey")
       val d = col("l_shipdate")
       val serial = datediff(d, lit(java.sql.Date.valueOf("1899-12-30")))
@@ -522,7 +507,7 @@ object CoreQueries {
     */
   val f7TotalOverride = QueryDef("f7_total_override",
     (s, dir) => {
-      val li = uniqShared(s, dir)
+      val li = InvoiceView.sharedUniq(s, dir)
       val ok = col("l_orderkey")
       val totalServicio = when(ok % 4 === 0, col("l_extendedprice").cast(money))
         .otherwise(lit(0).cast(money))
@@ -549,7 +534,7 @@ object CoreQueries {
   /** F9 — best-effort integral invoice-number rendering on egress. */
   val f9InvoiceInt = QueryDef("f9_invoice_int",
     (s, dir) => {
-      val li = uniqShared(s, dir)
+      val li = InvoiceView.sharedUniq(s, dir)
       val raw = when(col("l_orderkey") % 9 === 0,
         concat(lit("FAC-"), col("l_orderkey").cast("string")))
         .otherwise(concat(col("l_orderkey").cast("string"), lit(".0")))
@@ -568,22 +553,20 @@ object CoreQueries {
 
   // ------------------------------------------------------------------- merge
 
-  private def existingInv(s: SparkSession, dir: String): DataFrame = {
-    InvoiceView.ensureShared(s, dir)
-    InvoiceView.clean(t(s, dir, "lineitem")).filter(col("ok") % 3 === 0).drop("ok")
-  }
+  private def cleanInv(s: SparkSession, dir: String): DataFrame =
+    InvoiceView.cleanOf(InvoiceView.sharedUniq(s, dir))
 
-  private def incomingInv(s: SparkSession, dir: String): DataFrame = {
-    InvoiceView.ensureShared(s, dir)
-    InvoiceView.clean(t(s, dir, "lineitem")).filter(col("ok") % 2 === 0).drop("ok")
-  }
+  private def existingInv(s: SparkSession, dir: String): DataFrame =
+    cleanInv(s, dir).filter(col("ok") % 3 === 0).drop("ok")
+
+  private def incomingInv(s: SparkSession, dir: String): DataFrame =
+    cleanInv(s, dir).filter(col("ok") % 2 === 0).drop("ok")
 
   /** Incoming side for the upsert: carrier mutated on ok%5==0 rows so the
     * full-outer merge sees NEW / UPDATED / UNCHANGED all three.
     */
   private def incomingUpsert(s: SparkSession, dir: String): DataFrame =
-    { InvoiceView.ensureShared(s, dir); InvoiceView.clean(t(s, dir, "lineitem")) }
-      .filter(col("ok") % 2 === 0)
+    cleanInv(s, dir).filter(col("ok") % 2 === 0)
       .withColumn("carrier_name",
         when(col("ok") % 5 === 0, concat(col("carrier_name"), lit("X")))
           .otherwise(col("carrier_name"))).drop("ok")
@@ -592,23 +575,27 @@ object CoreQueries {
     * / a2_reconcile — same materialized-view idiom as [[fullUpsertShared]].
     */
   private def insertOnlyShared(s: SparkSession, dir: String): Merge.Result = {
-    val m = Merge.insertOnly(existingInv(s, dir), incomingInv(s, dir),
-      InvoiceRecord.pk)
-    SessionViews(s, dir, "insert")(Seq(m.result.persist(), m.inserted.persist()))
-    m
+    val fs = SessionViews(s, dir, "insert") {
+      val m = Merge.insertOnly(existingInv(s, dir), incomingInv(s, dir),
+        InvoiceRecord.pk)
+      Seq(m.result.persist(), m.inserted.persist())
+    }
+    Merge.Result(fs(0), fs(1))
   }
 
-  /** The j3/j2/a3 family builds the IDENTICAL full-outer upsert plan;
-    * registering its result in the session cache (same CacheManager
-    * substitution as [[uniqShared]]) materializes the merge once for all
-    * three driver-invoked queries — the materialized-view idiom.
+  /** The j3/j2/a3 family shares ONE full-outer upsert: the merge is built
+    * and persisted once per session, and every later call returns the
+    * persisted frames — the materialized-view idiom, with no re-analysis
+    * of the merge plan per query.
     */
   private def fullUpsertShared(s: SparkSession, dir: String): Merge.Result = {
-    val m = Merge.fullUpsert(existingInv(s, dir), incomingUpsert(s, dir),
-      InvoiceRecord.pk,
-      Seq("carrier_name", "invoice_date", "net_amount", "tax_amount", "total_amount"))
-    SessionViews(s, dir, "upsert")(Seq(m.result.persist()))
-    m
+    val fs = SessionViews(s, dir, "upsert") {
+      val m = Merge.fullUpsert(existingInv(s, dir), incomingUpsert(s, dir),
+        InvoiceRecord.pk,
+        Seq("carrier_name", "invoice_date", "net_amount", "tax_amount", "total_amount"))
+      Seq(m.result.persist(), m.inserted)
+    }
+    Merge.Result(fs(0), fs(1))
   }
 
   private val existingSql = "existing AS (SELECT * FROM inv WHERE ok % 3 = 0)"
@@ -886,7 +873,7 @@ object CoreQueries {
   /** O1+O3 — deterministic sort + error-list truncation (first 20 errors). */
   val o3TopErrors = QueryDef("o3_top_errors",
     (s, dir) => {
-      val split = Validate.split(canonicalInvoices(s, dir))
+      val split = Validate.split(InvoiceView.sharedCanonical(s, dir))
       split.errors.select(col("row_index"), col("error"))
         .orderBy(col("row_index")).limit(20)
     },
@@ -2028,7 +2015,7 @@ object CoreQueries {
     */
   val o4ErrorHistogram = QueryDef("o4_error_histogram",
     (s, dir) => {
-      val split = Validate.split(canonicalInvoices(s, dir))
+      val split = Validate.split(InvoiceView.sharedCanonical(s, dir))
       split.errors
         .select(substring(col("error"), 1, 12).as("rule"))
         .groupBy(col("rule")).agg(count(lit(1)).as("n"))
@@ -2361,7 +2348,8 @@ object CoreQueries {
     */
   private def zorderStoreDir(s: SparkSession, dir: String): String =
     SessionViews(s, dir, "zstore") {
-      val path = TempStores.dir("graft-zstore") + "/store"
+      val root = TempStores.dir("graft-zstore")
+      val path = root + "/zstore.parquet"
       t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_quantity"))
@@ -2369,7 +2357,7 @@ object CoreQueries {
       graft.pipeline.StoreMaintenance.compactZOrdered(
         s, path, "l_partkey", "l_suppkey",
         bits = 6, targetBytes = 256 * 1024)
-      path
+      root
     }
 
   /** K6 — the z-ordered store READ path (the s6/s7 pattern applied to
@@ -2386,7 +2374,7 @@ object CoreQueries {
     */
   val k6ZorderStore = QueryDef("k6_zorder_store",
     (s, dir) => {
-      val st = s.read.parquet(zorderStoreDir(s, dir))
+      val st = t(s, zorderStoreDir(s, dir), "zstore")
       val b = st.agg(max(col("l_partkey")), max(col("l_suppkey"))).head()
       val (pm, sm) = (b.getLong(0), b.getLong(1))
       st.filter(col("l_partkey").between(pm / 4, pm / 2) &&
@@ -2533,8 +2521,7 @@ object CoreQueries {
   val j10CdcApply = QueryDef("j10_cdc_apply",
     (s, dir) => {
       val base = existingInv(s, dir)
-      val in = { InvoiceView.ensureShared(s, dir)
-        InvoiceView.clean(t(s, dir, "lineitem")) }.filter(col("ok") % 2 === 0)
+      val in = cleanInv(s, dir).filter(col("ok") % 2 === 0)
       val first = in
         .withColumn("op", when(col("ok") % 7 === 0, "D")
           .when((col("ok") % 7).isin(1, 2, 3), "U").otherwise("I"))
@@ -2708,12 +2695,12 @@ object CoreQueries {
 
   private def dayPartitionedEvents(s: SparkSession, dir: String): String =
     SessionViews(s, dir, "dstore") {
-      val path = TempStores.dir("graft-daystore") + "/events"
+      val root = TempStores.dir("graft-daystore")
       t(s, dir, "events")
         .withColumn("event_date",
           expr("to_date(timestamp_micros(ts div 1000))"))
-        .write.partitionBy("event_date").parquet(path)
-      path
+        .write.partitionBy("event_date").parquet(root + "/dstore.parquet")
+      root
     }
 
   /** E8 — date-partitioned event store read path (the k6/k7 stance on
@@ -2730,7 +2717,7 @@ object CoreQueries {
     */
   val e8DayStore = QueryDef("e8_day_partitioned_store",
     (s, dir) => {
-      val store = s.read.parquet(dayPartitionedEvents(s, dir))
+      val store = t(s, dayPartitionedEvents(s, dir), "dstore")
       store.filter(col("event_date")
           .between(lit("2024-01-02"), lit("2024-01-03")))
         .groupBy(col("event_type"))
@@ -2760,7 +2747,9 @@ object CoreQueries {
       val uw = t(s, dir, "events")
         .select(col("user_id"), expr("ts div 604800000000000L").as("w"))
         .distinct()
-        .localCheckpoint(eager = false) // cohort fit + activity share it
+        // cohort fit + activity share it; not lazy: under AQE the
+        // distinct's shuffle map stage runs here, at construction
+        .localCheckpoint(eager = false)
       val first = uw.groupBy(col("user_id")).agg(min(col("w")).as("w0"))
       uw.join(first, "user_id")
         .groupBy(col("w0"), (col("w") - col("w0")).as("week_offset"))

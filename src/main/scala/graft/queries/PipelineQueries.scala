@@ -1724,13 +1724,8 @@ object PipelineQueries {
       |  FROM m),
       |scored AS (
       |  SELECT q.media_id AS query_id, c.media_id AS neighbor_id,
-      |         CAST(list_dot_product(CAST(q.qv AS DOUBLE[]), CAST(c.qv AS DOUBLE[])) AS BIGINT) AS dot_q,
-      |         CASE WHEN CAST(list_dot_product(CAST(q.qv AS DOUBLE[]), CAST(q.qv AS DOUBLE[])) AS BIGINT) > 0
-      |               AND CAST(list_dot_product(CAST(c.qv AS DOUBLE[]), CAST(c.qv AS DOUBLE[])) AS BIGINT) > 0
-      |              THEN CAST(list_dot_product(CAST(q.qv AS DOUBLE[]), CAST(c.qv AS DOUBLE[])) AS DOUBLE) /
-      |                   sqrt(CAST(CAST(list_dot_product(CAST(q.qv AS DOUBLE[]), CAST(q.qv AS DOUBLE[])) AS BIGINT)
-      |                             * CAST(list_dot_product(CAST(c.qv AS DOUBLE[]), CAST(c.qv AS DOUBLE[])) AS BIGINT) AS DOUBLE))
-      |         END AS cosine
+      |         ${dotSql("q.qv", "c.qv")} AS dot_q,
+      |         ${cosineSql("q.qv", "c.qv")} AS cosine
       |  FROM fv q, fv c
       |  WHERE q.media_id % 25 = 0 AND q.media_id <> c.media_id),
       |${topKSql(3, "neighbor_id, dot_q, cosine")}
@@ -2277,12 +2272,12 @@ object PipelineQueries {
     */
   private def shardStoreDir(s: SparkSession, dir: String): String =
     SessionViews(s, dir, "shardStore") {
-      val path = TempStores.dir("graft-shardstore") + "/shards"
+      val root = TempStores.dir("graft-shardstore")
       graft.pipeline.ShardPacking.writeShards(
         t(s, dir, "documents"), "lang", "doc_id",
         TextAnalysis.tokenCount(col("text")).cast("long"), budget = 512L,
-        path = path, buckets = 8)
-      path
+        path = root + "/shardStore.parquet", buckets = 8)
+      root
     }
 
   /** T21 — the shard store READ path: the per-shard manifest recomputed
@@ -2295,7 +2290,7 @@ object PipelineQueries {
     */
   val t21ShardStore = QueryDef("t21_shard_store",
     (s, dir) => {
-      val st = s.read.parquet(shardStoreDir(s, dir))
+      val st = t(s, shardStoreDir(s, dir), "shardStore")
       st.groupBy(col("lang"), col("shard_id").cast("bigint").as("shard_id"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("tok")).as("tok_sum"),
@@ -4823,10 +4818,7 @@ object PipelineQueries {
       |         list_transform(CAST(embedding AS DOUBLE[]), x -> x * 0.5)
       |  FROM embeddings WHERE vec_id % 34 = 0),
       |qv AS (
-      |  SELECT vec_id,
-      |         list_transform(embedding,
-      |           x -> CAST(round(x * 1000) AS BIGINT)) AS qv
-      |  FROM aug),
+      |  ${quantizeSql("vec_id", "aug")}),
       |$annParamsSql,
       |${bandedBlockSql("qv")}
       |conf AS (

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.DecimalType
 
@@ -75,8 +76,23 @@ private[queries] object QueryTables {
 }
 
 object Tables {
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet"))
+
+  /** `sfDir/name.parquet` as a DataFrame. The relation (file listing plus
+    * parquet schema inference, which runs a Spark job) is resolved once
+    * per (session, sfDir, name) in [[SessionViews]]; every call returns a
+    * fresh instance of it — new attribute ids, so two loads of one table
+    * self-join cleanly — with the `ts` normalization on top. The files at
+    * the path must not change while the session reads them: the test
+    * tables are read-only, and each session-built store is written once,
+    * before its first load.
+    */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val rel = SessionViews(spark, sfDir, s"table.$name") {
+      spark.read.parquet(s"$sfDir/$name.parquet").queryExecution.analyzed
+        .asInstanceOf[MultiInstanceRelation]
+    }
+    normalizeTs(GraftSqlBridge.ofRows(spark, rel.newInstance()))
+  }
 
   /** The events table's `ts` has shipped in two generator encodings:
     * INT64 epoch NANOS (old pandas datetime64[ns], surfaced as LongType

@@ -30,11 +30,15 @@ object Similarity {
     * once per CANDIDATE PAIR instead of once per vector (measured 10×
     * on s3_ann_ivf at sf0.1: 2.3 s → 24 s without this barrier). One
     * pass computes and stores the longs; every pair-scoring dot then
-    * reads stored arrays. Lazy (`eager = false`): the build lands in
-    * the first action, so bench numbers stay honest. At cluster scale
-    * this is the index materialization a production ANN system persists
-    * anyway — O(corpus × dims) longs, far smaller than the pair space
-    * it prevents recomputing over.
+    * reads stored arrays. Not lazy, even with `eager = false`: that only
+    * skips the checkpoint's own counting job. Building the checkpointed
+    * RDD executes the adaptive plan, so under AQE every shuffle map stage
+    * below it runs when the index is built (a query builder on top pays
+    * those jobs at construction); the final stage and the block writes
+    * land in the first action. At cluster scale this is the index
+    * materialization a production ANN system persists anyway —
+    * O(corpus × dims) longs, far smaller than the pair space it prevents
+    * recomputing over.
     */
   private def index(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = false)

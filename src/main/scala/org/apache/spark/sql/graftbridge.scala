@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Minimal bridge into `private[sql]` surface: wrap a custom Catalyst
   * `Expression` as a user-facing `Column` (and back). Spark 4 moved the
@@ -32,6 +33,14 @@ object GraftSqlBridge {
     */
   def waitListenerBusEmpty(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** A DataFrame over an already-analyzed `plan` — `Dataset.ofRows` is
+    * `private[sql]`. Analysis of a resolved leaf is a no-op, so this is
+    * how a memoized relation becomes a new DataFrame without re-reading
+    * its source's metadata.
+    */
+  def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], plan)
 
   /** Register an expression builder so the function is usable from SQL. */
   def registerFunction(spark: SparkSession, name: String,

@@ -9,9 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps the session-state policies in one place each: the session key
   * is built only by the session-view registry, no query file grows its
   * own concurrent map (the immutable-path row-count cache aside), and
-  * only [[GraftSession]] builds a SparkSession. Workbook staging keeps one
-  * path: a local sheet (no numbering window, no RDD), with the format
-  * decision made only inside `graft.sources`. Oracle SQL is composed from
+  * only [[GraftSession]] builds a SparkSession. A query reads a parquet
+  * table only through `Tables.load`, which resolves each table once per
+  * session: a direct read would pay schema inference on every build.
+  * Workbook staging keeps one path: a local sheet (no numbering window,
+  * no RDD), with the format decision made only inside `graft.sources`. Oracle SQL is composed from
   * named building blocks, one home each beside its Spark twin: a block
   * pasted into a second oracle drifts from the Spark primitive it mirrors
   * as soon as one copy is edited, so a re-pasted run of SQL lines fails
@@ -42,6 +44,15 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(found.size == 1 && found.head._1 == "graft/queries/QueryDef.scala", found)
     val line = Files.readAllLines(root.resolve(found.head._1)).get(found.head._2 - 1)
     assert(line.contains("rowCounts"), line)
+  }
+
+  test("under graft/queries only Tables reads parquet") {
+    val file = "graft/queries/QueryDef.scala"
+    val tables = Files.readAllLines(root.resolve(file)).asScala
+      .indexWhere(_.startsWith("object Tables")) + 1
+    val found = hits(root.resolve("graft/queries"), "read.parquet(")
+    assert(found.nonEmpty && found.forall { case (f, line) =>
+      f == file && tables > 0 && line > tables }, found)
   }
 
   test("only GraftSession calls SparkSession.builder()") {

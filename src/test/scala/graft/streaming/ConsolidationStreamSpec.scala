@@ -67,6 +67,18 @@ class ConsolidationStreamSpec extends SparkSpec {
     assert(errs.head().getAs[String]("error").contains("invoice_number"))
   }
 
+  test("a header-only CSV pass writes nothing to the store or the error dir") {
+    val base = Files.createTempDirectory("graft-stream-empty")
+    val c = cfg(base)
+    writeStaged(c.landingDir, "empty.csv", Seq.empty)
+    // the file is consumed by one micro-batch whose observed row count
+    // is 0: no merge, no store append, no error write
+    assert(ConsolidationStream.runAvailableNow(spark, c) == 1L)
+    assert(!Files.exists(Paths.get(c.consolidatedPath)))
+    assert(!Files.exists(Paths.get(c.errorDir)))
+    assert(ConsolidationStream.runAvailableNow(spark, c) == 0L)
+  }
+
   test("SCD2 streaming host: changes version the store; restart is a no-op") {
     val base = Files.createTempDirectory("graft-scd2-stream")
     val c = cfg(base)
